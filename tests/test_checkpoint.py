@@ -5,7 +5,6 @@
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from whoosh_reloaded_spark.corpus import PAGES_SCHEMA, generate_rows
 from whoosh_reloaded_spark.index import build_index, load_index, save_index
@@ -75,25 +74,41 @@ def test_merge_equals_single(spark, corpus, single, tmp_path_factory):
     paths = build_partitioned(corpus, root, n_slices=3)
     merged = merge_segments(spark, paths, root + "/merged")
     assert _postings_set(merged) == _postings_set(single)
-    # block invariants hold post-merge (range-containment membership)
-    b = merged.blocks.select(
-        F.col("term").alias("b_term"),
-        F.col("min_docid").alias("b_lo"),
-        F.col("max_docid").alias("b_hi"),
-        F.col("max_weight").alias("bmax"),
-    )
-    p = merged.postings
-    bad = (
-        p.join(
-            b,
-            (p["term"] == b["b_term"])
-            & (p["docid"] >= b["b_lo"])
-            & (p["docid"] <= b["b_hi"]),
-        )
-        .where(F.col("weight") > F.col("bmax"))
-        .count()
-    )
-    assert bad == 0
+
+
+def test_old_block_layout_loads_and_merges(spark, corpus, single,
+                                           tmp_path_factory):
+    """An index saved with the retired WAND block layer (a block_no column
+    on the postings and a blocks/ table) still loads with the same top-10,
+    and merging it writes postings without block_no."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    q = Or((Term("render"), Term("yellow"), Term("alpha")))
+    want = Searcher(single).search_list(q, 10)
+
+    root = tmp_path_factory.mktemp("old_layout")
+    src, old = str(root / "src"), str(root / "old")
+    save_index(build_index(corpus), src)
+    shutil.copytree(src, old, ignore=shutil.ignore_patterns("postings"))
+    posting_rows = spark.read.parquet(f"{src}/postings")
+    posting_rows.withColumn(
+        "block_no", (F.col("docid") / 128).cast("int")
+    ).write.parquet(f"{old}/postings")
+    posting_rows.groupBy("field", "term").agg(
+        F.lit(0).alias("block_no"), F.count(F.lit(1)).alias("n_postings")
+    ).write.parquet(f"{old}/blocks")
+    assert "block_no" in spark.read.parquet(f"{old}/postings").columns
+
+    loaded = load_index(spark, old)
+    assert "block_no" not in loaded.postings.columns
+    assert Searcher(loaded).search_list(q, 10) == want
+
+    merged = merge_segments(spark, [old], str(root / "merged"))
+    written = spark.read.parquet(str(root / "merged" / "postings"))
+    assert "block_no" not in written.columns
+    assert _postings_set(merged) == _postings_set(single)
 
 
 def test_multisegment_search_matches(spark, corpus, single, tmp_path_factory):

@@ -75,6 +75,8 @@ PARSE_CASES = [
 
 @pytest.fixture(scope="module")
 def engines(spark, tmp_path_factory):
+    if not reference_importable():
+        pytest.skip("reference not importable")
     from whoosh import fields, index
 
     from whoosh_reloaded_spark.corpus import PAGES_SCHEMA, generate_rows
@@ -191,11 +193,10 @@ def test_range_merge_normalize_parity():
     assert q == Q.And((Q.Term("kilo"), Q.TermRange("alfa", "charlie")))
 
 
+@pytestmark_golden
 def test_range_merge_golden_vs_reference(engines):
     """Merged-range parse results match the reference end-to-end on its
     own parser + searcher (the fuzz-found shape, pinned)."""
-    if not reference_importable():
-        pytest.skip("reference not importable")
     from whoosh.qparser import QueryParser as WQP
     from whoosh.query import Or as WOr
 
@@ -378,3 +379,14 @@ def test_top_group_no_double_wrap_goldens():
     assert po.parse("bravo OR charlie") == Q.Or(
         (t("bravo"), t("charlie")), scale=0.9
     )
+
+
+def test_identity_plugin_keeps_boosts():
+    """An identity plugin must not change the parse: _map_tree hands back
+    the same nodes, so parse() still recognizes its top group and pushes
+    the group boosts down (bravo keeps ^3)."""
+    text = "bravo^3 ANDNOT 'alfa charlie'^2"
+    plain = QueryParser().parse(text)
+    with_plugin = QueryParser(plugins=[lambda q: q]).parse(text)
+    assert with_plugin == plain
+    assert with_plugin.children[0].a == Q.Term("bravo", boost=3.0)

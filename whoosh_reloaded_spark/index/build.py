@@ -1,4 +1,4 @@
-"""Index build: corpus DataFrame -> posting/docmeta/term_stats tables.
+"""Index build: corpus DataFrame -> postings/docmeta/term_stats tables.
 
 The reference's build path (writer.add_document -> PostingPool external sort
 -> W3FieldWriter posting blocks; src/whoosh/writing.py:748-822,
@@ -7,8 +7,8 @@ codec/whoosh3.py:301-373) is re-expressed as ONE declarative Spark pipeline:
     corpus --assign docids--> analyze+invert per doc (ONE pandas-UDF pass:
     tokenize, group, position-sort in Python — no engine-level groupBy
     shuffle) --explode--> posting rows --term-range shuffle--> written
-    postings; docmeta / term_stats / blocks / global stats derive from the
-    WRITTEN columnar postings (cheap re-reads).
+    postings; docmeta / term_stats / global stats derive from the WRITTEN
+    columnar postings (cheap re-reads).
 
 The single term-range shuffle replaces the reference's PostingPool external
 merge sort (externalsort.py:85-223); a Parquet/Iceberg snapshot commit
@@ -18,8 +18,9 @@ re-aggregation (see segments.py), mirroring writing.py:730-746 add_reader.
 
 Scale notes (100 TB design):
 - docid assignment is the only global ordering step; it is done with a
-  range-partitioned two-phase rank (per-partition counts -> offsets), NOT a
-  single-reducer Window.  See :func:`assign_docids`.
+  range-partitioned two-phase rank (per-partition counts -> offsets ->
+  offset + row index), with no Window and no join.  See
+  :func:`assign_docids`.
 - postings are written repartitionByRange(term) + sortWithinPartitions(term,
   docid): parquet min/max page stats then give term-dictionary pruning for
   query-time `term IN (...)` filters (the reference's ordered term hash file,
@@ -35,14 +36,12 @@ import os
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whoosh_reloaded_spark.analysis import StandardAnalyzer, make_tokenize_udf
-from whoosh_reloaded_spark.lengths import length_to_byte_expr
+from whoosh_reloaded_spark.analysis import StandardAnalyzer
 
 DEFAULT_FIELD = "text"
-BLOCK_SIZE = 128  # postings per block (ref: codec/whoosh3.py:85)
 
 
 @dataclass
@@ -56,7 +55,6 @@ class InvertedIndex:
     stats: Optional[Dict[str, float]]  # doc_count, field_length, avg_field_length
     uid_col: str = "url"
     fieldname: str = DEFAULT_FIELD
-    blocks: Optional[DataFrame] = None  # field, term, block_no, stats (WAND)
     docs_raw: Optional[DataFrame] = None  # docid, uid [, stored] — no UDF lineage
 
     # -- Index-object convenience surface (reference index.py Index class)
@@ -129,15 +127,20 @@ def assign_docids(df: DataFrame, uid_col: str, num_partitions: int = 0) -> DataF
     insertion-order docnums (documents added in uid order), so they must be
     stable across runs (FIXTURES.md §5 'build determinism').
 
-    Distributed two-phase rank (no single-reducer global Window):
+    Distributed two-phase rank (no Window, no join):
       1. range-partition by uid and sort within partitions,
       2. count rows per partition (small job) -> cumulative offsets,
-      3. docid = offset[partition] + local row_number.
+      3. docid = offset[partition] + row index within the partition.
 
     The partitioned frame is persisted so both phases observe identical range
-    boundaries (repartitionByRange samples its boundaries).  On a real
-    cluster/Iceberg deployment the sort order would be a table property and
-    boundaries computed once from a deterministic sample.
+    boundaries (repartitionByRange samples its boundaries).  Step 3 is a
+    projection over that cached scan: the offsets are one SQL array literal
+    indexed by partition id, and the row index is
+    ``monotonically_increasing_id()`` minus its partition bits (the id is
+    ``partition << 33 | row``), so the docid frame needs no exchange and
+    keeps the cached partitioning.  On a real cluster/Iceberg deployment
+    the sort order would be a table property and boundaries computed once
+    from a deterministic sample.
     """
     spark = df.sparkSession
     if num_partitions <= 0:
@@ -151,23 +154,26 @@ def assign_docids(df: DataFrame, uid_col: str, num_partitions: int = 0) -> DataF
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
-    counts = part.groupBy("_pid").count().orderBy("_pid").collect()
-    offsets, acc = {}, 0
-    for r in counts:
-        offsets[r["_pid"]] = acc
-        acc += r["count"]
-    offsets_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
-        )
-    )
-    w = Window.partitionBy("_pid").orderBy(uid_col)
-    out = (
-        part.join(offsets_df, "_pid")
-        .withColumn("docid", F.row_number().over(w) - 1 + F.col("_offset"))
-        .drop("_pid", "_offset")
-    )
-    return out
+    counts = {
+        int(r["_pid"]): int(r["count"])
+        for r in part.groupBy("_pid").count().collect()
+    }
+    # dense over every partition id up to the last non-empty one (empty
+    # partitions have no rows to look their offset up); one entry minimum
+    # so the literal is typed even for an empty input
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=0) + 1):
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    offsets_sql = "array(" + ", ".join(f"{o}L" for o in offsets) + ")"
+    return part.withColumn(
+        "docid",
+        F.expr(
+            f"element_at({offsets_sql}, _pid + 1)"
+            " + monotonically_increasing_id()"
+            " - shiftleft(CAST(_pid AS BIGINT), 33)"
+        ),
+    ).drop("_pid")
 
 
 def build_index(
@@ -253,10 +259,12 @@ def build_index(
     src = docs.select("docid", F.col(text_col).alias("text"))
     parallelism = corpus.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < parallelism:
-        # AQE coalesces the docid-assignment shuffle to very few partitions
-        # on small inputs, which would starve the (CPU-bound) analysis pass
-        # of cores; respread first.  At scale the input already has >=
-        # parallelism partitions, so this branch never fires there.
+        # a caller-supplied docid frame (with_docids) or a small
+        # num_partitions can leave fewer partitions than cores, which would
+        # starve the (CPU-bound) analysis pass; respread first.  The
+        # assign_docids frame is a projection over its cached
+        # 4 x parallelism range partitions, so this check runs no shuffle
+        # and the branch does not fire for it.
         src = src.repartition(parallelism)
     raw = src.mapInArrow(run, schema_str)
     postings = raw.select(
@@ -322,98 +330,7 @@ def build_index(
         stats=None,  # computed lazily (ensure_stats) — build stays one pass
         uid_col="uid",
         fieldname=fieldname,
-        blocks=compute_blocks(postings),
         docs_raw=docs_raw,
-    )
-
-
-def with_block_no(postings: DataFrame, salt_buckets: int = 64,
-                  max_docid: Optional[int] = None) -> DataFrame:
-    """Posting rows + their <=128-posting `block_no` per term — the unit of
-    block-max WAND skipping (ref: whoosh3.py:85 block size, :814-824 block
-    stats).  save_index persists this column so WAND's block filters are
-    plain (term, block_no) EQUI-joins (AQE-sized), never a broadcast of a
-    surviving-block range list.
-
-    SALTED per-term ranking: a naive Window.partitionBy(term) puts a Zipf
-    head term's entire posting list in ONE task.  Instead the per-term rank
-    is computed in two phases over (term, salt) where salt = a docid-range
-    bucket:
-      1. counts per (term, salt) -> per-term cumulative offsets (the tiny
-         frame is windowed, never the postings),
-      2. local rank within (term, salt) + broadcast offset = global rank.
-    The skew-sensitive shuffle key becomes (term, salt); a head term spreads
-    over `salt_buckets` tasks.  Docid order within a term is preserved
-    because salts are docid ranges.
-    """
-    if max_docid is not None:
-        # driver-known docid bound (save_index passes it from the cheap
-        # docs frame): salt width is a plain literal
-        width = max(1, (int(max_docid) + 1) // salt_buckets)
-        p = postings.withColumn(
-            "_salt", (F.col("docid") / F.lit(width)).cast("int")
-        )
-    else:
-        # LAZY width: a broadcast 1-row subframe instead of an eager
-        # collect.  The old `postings.agg(max(docid)).collect()` here made
-        # every build_index() call materialize the whole analyze+invert
-        # UDF pipeline once (mapInArrow is opaque to column pruning) just
-        # to size the salt — a full duplicate tokenization pass, ~30% of
-        # bench build time (round-6 measurement).
-        width_frame = postings.agg(
-            F.greatest(
-                F.floor((F.max("docid") + 1) / F.lit(salt_buckets)),
-                F.lit(1),
-            )
-            .cast("long")
-            .alias("_salt_width")
-        )
-        p = postings.crossJoin(F.broadcast(width_frame)).withColumn(
-            "_salt", (F.col("docid") / F.col("_salt_width")).cast("int")
-        ).drop("_salt_width")
-    counts = p.groupBy("term", "_salt").agg(F.count(F.lit(1)).alias("_c"))
-    w = (
-        Window.partitionBy("term")
-        .orderBy("_salt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "_off", F.coalesce(F.sum("_c").over(w), F.lit(0))
-    ).select("term", "_salt", "_off")
-
-    w_local = Window.partitionBy("term", "_salt").orderBy("docid")
-    return (
-        # no broadcast hint: the offsets frame is one row per (term, salt)
-        # pair — small for test vocabularies but O(|postings|/128) worst
-        # case at web scale; AQE picks broadcast vs shuffle join by size
-        p.join(offsets, ["term", "_salt"])
-        .withColumn(
-            "block_no",
-            (
-                (F.row_number().over(w_local) - 1 + F.col("_off")) / BLOCK_SIZE
-            ).cast("int"),
-        )
-        .drop("_salt", "_off")
-    )
-
-
-def compute_blocks(postings: DataFrame, salt_buckets: int = 64,
-                   max_docid: Optional[int] = None) -> DataFrame:
-    """Per-(term, block) quality stats for WAND.  If the posting rows
-    already carry `block_no` (written by save_index) this is one cheap
-    map-side-combinable aggregation; otherwise the salted rank assigns
-    block numbers first."""
-    withno = (
-        postings
-        if "block_no" in postings.columns
-        else with_block_no(postings, salt_buckets, max_docid=max_docid)
-    )
-    return withno.groupBy("field", "term", "block_no").agg(
-        F.count(F.lit(1)).cast("int").alias("n_postings"),
-        F.min("docid").alias("min_docid"),
-        F.max("docid").alias("max_docid"),
-        F.max("weight").alias("max_weight"),
-        F.min("len_byte").alias("min_len_byte"),
     )
 
 
@@ -423,11 +340,13 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
     """Write the index as term-sorted parquet (segment commit ≙ TOC write).
 
     ONE heavy pipeline: the analyze+invert UDF pass streams straight into the
-    term-range-partitioned postings write (a single shuffle).  Every other
-    table — docmeta, term_stats, blocks, global stats — derives from the
-    WRITTEN columnar postings (cheap re-reads), so tokenization runs exactly
-    once per save.  Postings sorted by (term, docid): parquet min/max stats
-    give term-dictionary data skipping at query time.
+    term-range-partitioned postings write (a single shuffle), as the
+    reference's PostingPool sort feeds its field writer in one pass
+    (writing.py:748-822).  Every other table — docmeta, term_stats, global
+    stats — derives from the WRITTEN columnar postings (cheap re-reads), so
+    tokenization runs exactly once per save.  Postings sorted by (term,
+    docid): parquet min/max stats give term-dictionary data skipping at
+    query time.
     """
     import time as _time
 
@@ -480,100 +399,24 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
             # UDF pass and the shuffle/write show as separate phases
             to_write.count()
             _mark("UDF pass (cache materialization)")
-        # assign block_no BEFORE the final write so the stored postings
-        # carry their WAND block id — query-time block filters become
-        # (term, block_no) equi-joins instead of broadcast range joins.
-        #
-        # Round 6: block_no is derived FROM the term-range sort the write
-        # needs anyway, instead of a separate salted Window shuffle
-        # (guide §2.4 — two operations keyed the same way share one
-        # exchange).  After repartitionByRange(term, docid) +
-        # sortWithinPartitions(term, docid), a term's postings are in
-        # global docid order across ascending partition ids, so the
-        # per-term rank is  (mid - first_mid_of(pid, term))  +  the count
-        # of the term's rows in earlier partitions.  Both correction
-        # terms come from ONE tiny per-(partition, term) aggregate
-        # (~|vocab| + #partitions rows, because range partitioning keeps
-        # a term's rows contiguous), which AQE broadcasts; the old plan
-        # hash-shuffled and sorted the ENTIRE posting set a second time
-        # for Window.partitionBy(term, salt).  Plan: 2 full shuffles -> 1.
-        rp = (
+        # term first: saved-index layouts keep the historical column order
+        out_cols = ["term"] + [c for c in to_write.columns if c != "term"]
+        (
             to_write.repartitionByRange(term_partitions, "term", "docid")
             .sortWithinPartitions("term", "docid")
-            .withColumn("_pid", F.spark_partition_id())
-            .withColumn("_mid", F.monotonically_increasing_id())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        g = rp.groupBy("_pid", "term").agg(
-            F.min("_mid").alias("_m0"),
-            F.count(F.lit(1)).alias("_c"),
-        )
-        w_off = (
-            Window.partitionBy("term")
-            .orderBy("_pid")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = g.withColumn(
-            "_off", F.coalesce(F.sum("_c").over(w_off), F.lit(0))
-        ).select("_pid", "term", "_m0", "_off")
-        # keep the historical written column order (term first, block_no
-        # last) so saved-index layouts stay byte-compatible across rounds;
-        # merged segments arrive WITH a block_no column (withColumn below
-        # replaces it), so it must not be listed twice
-        out_cols = ["term"] + [
-            c
-            for c in rp.columns
-            if c not in ("term", "_pid", "_mid", "block_no")
-        ] + ["block_no"]
-        # explicit broadcast: plan-time estimates otherwise pick a
-        # sort-merge join whose exchange re-shuffles rp and destroys the
-        # (term, docid) file order (verified round 6).  offsets is
-        # ~|vocabulary| + #partitions tiny rows (Heaps'-law bounded even
-        # at web scale); an index whose vocab outgrows the 8 GB broadcast
-        # cap should build per-segment via checkpoint.build_partitioned.
-        (
-            rp.join(F.broadcast(offsets), ["_pid", "term"])
-            .withColumn(
-                "block_no",
-                (
-                    (F.col("_mid") - F.col("_m0") + F.col("_off"))
-                    / BLOCK_SIZE
-                ).cast("int"),
-            )
             .select(*out_cols)
             .write.mode("overwrite")
             .parquet(f"{path}/postings")
         )
-        rp.unpersist()
-        _mark("postings write (UDF pass + block_no + range sort)")
+        _mark("postings write (range sort)")
         wp = spark.read.parquet(f"{path}/postings")
 
-        # ONE scan of the written postings feeds BOTH blocks and
-        # term_stats: the per-(term, block) aggregation also carries the
-        # per-block weight sum, and term_stats is its rollup (exact: df
-        # and the weight sums are sums of disjoint block partials).
-        blocks_full = wp.groupBy("field", "term", "block_no").agg(
-            F.count(F.lit(1)).cast("int").alias("n_postings"),
-            F.min("docid").alias("min_docid"),
-            F.max("docid").alias("max_docid"),
-            F.max("weight").alias("max_weight"),
-            F.min("len_byte").alias("min_len_byte"),
-            F.sum("weight").alias("_w_sum"),
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-
-        def _write_blocks_then_term_stats():
-            (
-                blocks_full.drop("_w_sum")
-                .repartitionByRange(max(1, term_partitions // 4), "term")
-                .sortWithinPartitions("term", "block_no")
-                .write.mode("overwrite")
-                .parquet(f"{path}/blocks")
-            )
-            term_stats = blocks_full.groupBy("field", "term").agg(
-                F.sum("n_postings").cast("long").alias("df"),
-                F.sum("_w_sum").alias("total_weight"),
-                F.max("max_weight").alias("max_weight"),
-                F.min("min_len_byte").alias("min_len_byte"),
+        def _write_term_stats():
+            term_stats = wp.groupBy("field", "term").agg(
+                F.count(F.lit(1)).alias("df"),
+                F.sum("weight").alias("total_weight"),
+                F.max("weight").alias("max_weight"),
+                F.min("len_byte").alias("min_len_byte"),
             )
             (
                 term_stats.repartitionByRange(
@@ -583,7 +426,6 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
                 .write.mode("overwrite")
                 .parquet(f"{path}/term_stats")
             )
-            blocks_full.unpersist()
 
         def _write_docmeta():
             from pyspark.sql import Observation
@@ -628,16 +470,15 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         # the derived tables are independent jobs over the written
         # postings — run them from a 2-thread pool so the second job's
         # tasks back-fill executors the first job's tail leaves idle
-        # (guide §2.6 overlap-independent-jobs); job order inside each
-        # thread keeps the blocks -> term_stats rollup dependency.
+        # (guide §2.6 overlap-independent-jobs)
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_bt = pool.submit(_write_blocks_then_term_stats)
+            fut_ts = pool.submit(_write_term_stats)
             fut_dm = pool.submit(_write_docmeta)
-            fut_bt.result()
+            fut_ts.result()
             obs_stats = fut_dm.result()
-        _mark("derived writes (blocks + term_stats + docmeta, overlapped)")
+        _mark("derived writes (term_stats + docmeta, overlapped)")
     finally:
         to_write.unpersist()
     doc_count = int(obs_stats["doc_count"])
@@ -725,10 +566,11 @@ def _sized_read(spark: SparkSession, path: str) -> DataFrame:
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:
     with open(os.path.join(path, "stats.json")) as f:
         meta = json.load(f)
-    blocks = None
-    if os.path.isdir(os.path.join(path, "blocks")):
-        blocks = _sized_read(spark, f"{path}/blocks")
     postings = _sized_read(spark, f"{path}/postings")
+    if "block_no" in postings.columns:
+        # indexes saved with the retired block-max WAND layer carry a
+        # per-posting block number (and a blocks/ table, never read)
+        postings = postings.drop("block_no")
     # decode stored positions lazily via the recorded codec — column
     # pruning means non-positional queries never pay for this.  Pre-codec
     # indexes: infer 'varint' from a binary column, else 'raw'.
@@ -753,5 +595,4 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
         stats=meta["stats"],
         uid_col=meta["uid_col"],
         fieldname=meta["fieldname"],
-        blocks=blocks,
     )

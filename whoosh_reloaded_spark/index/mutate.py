@@ -127,7 +127,6 @@ def with_deleted(ix: InvertedIndex, deleted: Optional[DataFrame]) -> InvertedInd
         stats=None,  # recomputed lazily over live docs
         uid_col=ix.uid_col,
         fieldname=ix.fieldname,
-        blocks=ix.blocks,  # bounds stay valid (a superset) for WAND
         docs_raw=ix.docs_raw,
     )
 

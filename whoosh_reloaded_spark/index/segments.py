@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from whoosh_reloaded_spark.index.build import (
-    BLOCK_SIZE,
     InvertedIndex,
     load_index,
     save_index,
@@ -96,20 +95,6 @@ def load_multi(spark: SparkSession, seg_paths: List[str],
             "field_length": field_length,
             "avg_field_length": field_length / doc_count if doc_count else 0.0,
         }
-    # NOTE: per-segment blocks keep their own numbering; a merged view
-    # re-blocks lazily on merge (WAND over multi-segment uses per-segment
-    # blocks exactly like the reference searches per-segment).  The stored
-    # per-posting block_no also restarts at 0 per segment, so WAND's
-    # (term, block_no) equi-join over a multi-segment union matches a
-    # SUPERSET of the intended blocks — still correct (a doc is pruned only
-    # if every same-numbered block failed the UB test, including its own;
-    # candidates are rescored exactly), just weaker pruning until the next
-    # merge_segments rewrite renumbers globally.
-    blocks = None
-    if all(p.blocks is not None for p in parts):
-        blocks = parts[0].blocks
-        for p in parts[1:]:
-            blocks = blocks.unionByName(p.blocks)
     return InvertedIndex(
         docmeta=docmeta,
         postings=postings,
@@ -117,16 +102,13 @@ def load_multi(spark: SparkSession, seg_paths: List[str],
         stats=stats,
         uid_col=parts[0].uid_col,
         fieldname=parts[0].fieldname,
-        blocks=blocks,
     )
 
 
 def merge_segments(spark: SparkSession, seg_paths: List[str], out_path: str,
                    term_partitions: int = 0) -> InvertedIndex:
-    """Compact segments into one (OPTIMIZE): union -> re-block -> rewrite.
-
-    Blocks are rebuilt over the merged doc order so WAND bounds stay tight.
-    """
+    """Compact segments into one (OPTIMIZE): union -> rewrite, with the
+    postings re-sorted by (term, docid) over the merged doc order."""
     merged = load_multi(spark, seg_paths)
     out = InvertedIndex(
         docmeta=merged.docmeta,
@@ -135,9 +117,6 @@ def merge_segments(spark: SparkSession, seg_paths: List[str], out_path: str,
         stats=merged.stats,
         uid_col=merged.uid_col,
         fieldname=merged.fieldname,
-        # save_index recomputes blocks from the re-written postings, so the
-        # merged index gets tight bounds over the merged doc order for free
-        blocks=None,
         docs_raw=merged.docmeta.drop("length", "len_byte"),
     )
     save_index(out, out_path, term_partitions)

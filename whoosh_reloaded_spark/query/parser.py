@@ -185,17 +185,26 @@ def _mark_group(q: Q.Query, kind: str) -> Q.Query:
 
 
 def _map_tree(q: Q.Query, fn) -> Q.Query:
-    """Apply fn bottom-up over a Query tree (children first, then node)."""
+    """Apply fn bottom-up over a Query tree (children first, then node).
+
+    A node whose children all come back unchanged is passed to fn as is,
+    not rebuilt, so an identity plugin returns the very same tree: parse()
+    recognizes its top group by identity, and a rebuilt copy would lose
+    the group's boost push-down."""
     from dataclasses import replace
 
     if isinstance(q, Q._Compound):
-        q = replace(q, children=tuple(_map_tree(c, fn) for c in q.children))
+        children = tuple(_map_tree(c, fn) for c in q.children)
+        if any(n is not o for n, o in zip(children, q.children)):
+            q = replace(q, children=children)
     else:
         kw = {}
         for attr in ("a", "b", "child"):
             c = getattr(q, attr, None)
             if isinstance(c, Q.Query):
-                kw[attr] = _map_tree(c, fn)
+                m = _map_tree(c, fn)
+                if m is not c:
+                    kw[attr] = m
         if kw:
             q = replace(q, **kw)
     return fn(q)
