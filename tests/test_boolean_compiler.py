@@ -1,0 +1,157 @@
+"""The one-scan boolean compiler (Searcher._eval_term_tree).
+
+* Differential property test: random trees of And / Or (plain and
+  scaled) / DisjunctionMax / AndNot / Require / AndMaybe / Not over plain
+  Terms must give the same doc set and scores (rel 1e-9) as the general
+  per-operator union/join path on the same tree.  The general path is
+  reached by wrapping every leaf in ``WeightingQuery(t, None)``: _eval
+  unwraps it to the same Term, but the compiler accepts only bare Terms.
+* Plan shape: on a saved index, shapes that used to take two postings
+  scans and a join or union now plan as exactly one postings scan and
+  no join.
+"""
+
+import random
+
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from tests.test_parser_fuzz import DOCS, OOV, VOCAB
+from whoosh_reloaded_spark.query import ast as Q
+from whoosh_reloaded_spark.query.parser import QueryParser
+
+
+def _corpus():
+    """40 docs of 2-9 words with uneven word frequencies, so terms
+    co-occur in every combination (unlike DOCS, whose docs each draw
+    from one residue class of the vocabulary)."""
+    rng = random.Random(11)
+    weights = [12 - i for i in range(len(VOCAB))]
+    return [
+        " ".join(rng.choices(VOCAB, weights, k=rng.randint(2, 9)))
+        for _ in range(40)
+    ]
+
+
+@pytest.fixture(scope="module")
+def searcher(spark):
+    from whoosh_reloaded_spark.index import build_index
+    from whoosh_reloaded_spark.query import Searcher
+
+    df = spark.createDataFrame(
+        [(f"d{i:02d}", t) for i, t in enumerate(_corpus())],
+        "url string, text string",
+    )
+    return Searcher(build_index(df).persist())
+
+
+boost = st.sampled_from([1.0, 2.0, 3.0])
+# a few words drawn often, so trees repeat terms across and within nodes
+term = st.builds(
+    Q.Term,
+    st.sampled_from(VOCAB[:4] * 3 + VOCAB[4:] + OOV),
+    boost=boost,
+)
+
+
+def _compound(inner):
+    kids = st.lists(inner, min_size=2, max_size=4).map(tuple)
+    # an And holds at least one positive child; Not children ride along
+    and_kids = st.tuples(
+        inner, st.lists(st.one_of(inner, inner.map(Q.Not)), max_size=3)
+    ).map(lambda t: (t[0],) + tuple(t[1]))
+    return st.one_of(
+        st.builds(Q.Or, kids, boost=boost,
+                  scale=st.sampled_from([0.0, 0.9, 2.0])),
+        st.builds(Q.And, and_kids, boost=boost),
+        st.builds(Q.DisjunctionMax, kids, boost=boost),
+        st.builds(Q.AndNot, inner, inner, boost=boost),
+        st.builds(Q.Require, inner, inner, boost=boost),
+        st.builds(Q.AndMaybe, inner, inner, boost=boost),
+    )
+
+
+trees = st.recursive(term, _compound, max_leaves=7).filter(
+    lambda q: not isinstance(q, Q.Term)
+)
+
+
+def _general(q):
+    """The same tree with every leaf wrapped so the compiler declines it."""
+    if isinstance(q, Q.Term):
+        return Q.WeightingQuery(q, None)
+    return q.apply(_general)
+
+
+def _scores(frame):
+    return {r["docid"]: r["score"] for r in frame.collect()}
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[
+        HealthCheck.too_slow, HealthCheck.function_scoped_fixture
+    ],
+)
+@given(q=trees)
+def test_compiled_equals_general_path(searcher, q):
+    general = _general(q)
+    assert searcher._eval_term_tree(q) is not None, q
+    assert searcher._eval_term_tree(general) is None, q
+    got = _scores(searcher._eval(q))
+    want = _scores(searcher._eval(general))
+    assert set(got) == set(want), q
+    for docid, score in want.items():
+        assert got[docid] == pytest.approx(score, rel=1e-9, abs=1e-12), (
+            q, docid,
+        )
+
+
+a, b, c, d = (Q.Term(w) for w in ("alfa", "delta", "golf", "bravo"))
+
+ONE_SCAN_SHAPES = {
+    "alfa NOT bravo": QueryParser().parse("alfa NOT bravo"),
+    "Or(And(alfa,delta), AndNot(golf,bravo))": Q.Or(
+        (Q.And((a, b)), Q.AndNot(c, d))
+    ),
+    "three levels": Q.And(
+        (Q.Or((a, Q.AndMaybe(b, Q.DisjunctionMax((c, d))))), Q.Not(d))
+    ),
+    "DisMax(alfa, alfa^2)": Q.DisjunctionMax((a, Q.Term("alfa", boost=2.0))),
+    "alfa AND delta": Q.And((a, b)),
+    "alfa OR bravo": Q.Or((a, d)),
+    "(alfa OR bravo) AND golf": Q.And((Q.Or((a, d)), c)),
+    "Or(alfa, delta, bravo, scale=0.9)": Q.Or((a, b, d), scale=0.9),
+}
+
+
+@pytest.fixture(scope="module")
+def saved(spark, tmp_path_factory):
+    from whoosh_reloaded_spark.index import build_index, load_index, save_index
+    from whoosh_reloaded_spark.query import Searcher
+
+    df = spark.createDataFrame(
+        [(f"d{i:02d}", t) for i, t in enumerate(DOCS)],
+        "url string, text string",
+    )
+    path = str(tmp_path_factory.mktemp("bool_ix") / "ix")
+    save_index(build_index(df), path)
+    return Searcher(load_index(spark, path))
+
+
+@pytest.mark.parametrize("name", list(ONE_SCAN_SHAPES))
+def test_one_postings_scan_no_join(saved, name):
+    out = saved.search(ONE_SCAN_SHAPES[name], limit=10, with_uid=False)
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    scans = [
+        ln for ln in plan.splitlines()
+        if "FileScan parquet" in ln and "/postings" in ln
+    ]
+    assert len(scans) == 1, plan
+    assert "Join" not in plan and "Union" not in plan, plan

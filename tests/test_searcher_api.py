@@ -139,3 +139,34 @@ def test_index_object_surface(spark, tmp_path, s):
     assert {h["uid"] for h in s2.search_results(Term("alfa"), limit=5)} == {
         "u0", "u1", "u3",
     }
+
+
+def _expand_jobs(spark, searcher, q, group):
+    """Spark jobs that searcher.expand_terms(q) launches."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "expand_terms")
+    try:
+        searcher.expand_terms(q)
+    finally:
+        sc.setJobGroup(None, None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_expand_cache_is_a_bounded_lru(spark, s, monkeypatch):
+    """Multiterm expansions are memoized in an LRU of EXPAND_CACHE_SIZE
+    entries: the memo never outgrows it, and a repeated expansion runs
+    no lookup job."""
+    from whoosh_reloaded_spark.query import planner
+
+    monkeypatch.setattr(planner, "EXPAND_CACHE_SIZE", 3)
+    fresh = Searcher(s.ix)
+    for p in "abcde":
+        fresh.expand_terms(Prefix(p))
+        assert len(fresh._expand_cache) <= 3
+    assert list(fresh._expand_cache) == [repr(Prefix(p)) for p in "cde"]
+    assert fresh.expand_terms(Prefix("e")) == ["echo"]
+    assert _expand_jobs(spark, fresh, Prefix("c"), "wrs-expand-hit") == []
+    # a cold expansion does run its lookup (the job count is live)
+    assert _expand_jobs(spark, fresh, Prefix("f"), "wrs-expand-cold")
+    # "e" and "c" were hits, so "d" was the least recently used
+    assert list(fresh._expand_cache) == [repr(Prefix(p)) for p in "ecf"]

@@ -144,11 +144,6 @@ def make_tokenize_udf(analyzer: Optional[StandardAnalyzer] = None):
     return tokenize
 
 
-INVERT_SCHEMA = (
-    "struct<length:int,"
-    "postings:array<struct<term:string,tf:int,positions:array<int>>>>"
-)
-
 INVERT_ROWS_SCHEMA = (
     "docid long, term string, tf int, positions array<int>, "
     "length int, len_byte int, wsum double"
@@ -473,58 +468,6 @@ def _make_invert_rows_generic_payload(tokenize_fn):
             )
 
     return run
-
-
-def make_invert_udf(analyzer: Optional[StandardAnalyzer] = None):
-    """Analyze AND invert per document in one Arrow batch:
-    text -> (field_length, [(term, tf, sorted positions), ...]).
-
-    Doing the per-doc inversion inside the UDF removes the engine-level
-    groupBy(docid, term) shuffle entirely — positions are grouped and
-    ordered during analysis (they arrive in ascending order), so the
-    posting rows explode out ready-made.  This is the reference's
-    Format.word_values step (formats.py:190-236) fused with tokenization.
-    """
-    ana = analyzer or _DEFAULT
-    pattern_str = ana.pattern.pattern
-    stoplist = ana.stoplist
-    minsize = ana.minsize
-    maxsize = ana.maxsize
-
-    @pandas_udf(INVERT_SCHEMA)
-    def invert(texts: pd.Series) -> pd.DataFrame:
-        import re as _re
-
-        pat = _re.compile(pattern_str, _re.UNICODE)
-
-        lengths = []
-        postings = []
-        for v in texts:
-            if not isinstance(v, str):
-                lengths.append(0)
-                postings.append([])
-                continue
-            n = 0
-            d: dict = {}
-            renumbered = None
-            for pos, m in enumerate(pat.finditer(v)):
-                t = m.group(0).lower()
-                ln = len(t)
-                if ln < minsize or (maxsize is not None and ln > maxsize):
-                    continue
-                if stoplist is not None and t in stoplist:
-                    continue
-                if renumbered is None:
-                    renumbered = pos
-                else:
-                    renumbered += 1
-                n += 1
-                d.setdefault(t, []).append(renumbered)
-            lengths.append(n)
-            postings.append([(t, len(ps), ps) for t, ps in d.items()])
-        return pd.DataFrame({"length": lengths, "postings": postings})
-
-    return invert
 
 
 def make_query_terms(analyzer: Optional[StandardAnalyzer] = None):

@@ -2,7 +2,11 @@
 
 The reference executes queries with a single-threaded pull-based Matcher tree
 (src/whoosh/matching/*.py); here each AST node evaluates to a docid-unique
-DataFrame of ``(docid, score)`` and the combinators become relational ops:
+DataFrame of ``(docid, score)``.  A boolean tree whose leaves are all
+plain terms compiles to ONE pushed postings scan and ONE groupBy(docid),
+its operators becoming column expressions over per-term aggregates
+(Searcher._eval_term_tree).  Any other tree maps each combinator to a
+relational op:
 
     And       -> union + groupBy(docid) having count == n, score = sum
                  (IntersectionMatcher sums scores, matching/binary.py:95-96)
@@ -26,8 +30,13 @@ whole-stage codegen; Python appears only in driver-side planning.
 
 from __future__ import annotations
 
+import operator
 import re
-from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from collections import OrderedDict
+from functools import reduce
+from typing import (
+    Dict, FrozenSet, Iterator, List, NamedTuple, Optional, Sequence, Tuple,
+)
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -43,6 +52,7 @@ from whoosh_reloaded_spark.scoring import (
 
 TOO_MANY_CLAUSES = 1024  # compound.py:282 heuristic bound for expansions
 FUZZY_DRIVER_LIMIT = 20_000  # fuzzy slices below this run the DP driver-side
+EXPAND_CACHE_SIZE = 256  # multiterm expansions memoized per Searcher (LRU)
 PHRASE_BROADCAST_DF = 2_000_000  # rare-word docid frames below this df are
 # broadcast for the phrase pre-prune semi-join (~16 MB of longs)
 
@@ -166,6 +176,219 @@ def glob_literal_prefix(pat: str) -> str:
     return pat
 
 
+def _per_term(values: Dict[str, float]) -> "F.Column":
+    """A per-row value keyed by the row's term: one literal when every
+    term shares it, else a literal term -> value map lookup."""
+    vals = set(values.values())
+    if len(vals) == 1:
+        return F.lit(next(iter(vals)))
+    pairs = []
+    for t, v in values.items():
+        pairs += [F.lit(t), F.lit(v)]
+    return F.element_at(F.create_map(*pairs), F.col("term"))
+
+
+def _union(frames: List[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, frames)
+
+
+def _boosted(col: "F.Column", boost: float) -> "F.Column":
+    return col if boost == 1.0 else col * F.lit(boost)
+
+
+def _set_sum(cols: List["F.Column"], zero) -> "F.Column":
+    """Sum of the columns, a NULL one counting as `zero`."""
+    if len(cols) == 1:
+        return cols[0]
+    return reduce(operator.add, [F.coalesce(c, F.lit(zero)) for c in cols])
+
+
+def _all_sum(cols: List[Optional["F.Column"]]) -> Optional["F.Column"]:
+    """Sum that is NULL when any column is; None when any is None."""
+    if any(c is None for c in cols):
+        return None
+    return reduce(operator.add, cols)
+
+
+# the operators Searcher._eval_term_tree compiles (plus Not under an And)
+_TREE_NODES = (Q.And, Q.Or, Q.DisjunctionMax, Q.AndNot, Q.Require, Q.AndMaybe)
+
+
+def _is_term_tree(q: Q.Query, fieldname: str, under_and: bool = False) -> bool:
+    """True for a _TREE_NODES tree whose leaves are plain Terms on
+    `fieldname`, where a Not is only the child of an And that also has a
+    positive child — so every doc the tree matches holds one of its
+    terms."""
+    if isinstance(q, Q.Term):
+        return q.fieldname == fieldname
+    if isinstance(q, Q.Not):
+        return under_and and _is_term_tree(q.child, fieldname)
+    if isinstance(q, (Q.AndNot, Q.Require, Q.AndMaybe)):
+        return _is_term_tree(q.a, fieldname) and _is_term_tree(q.b, fieldname)
+    if not isinstance(q, _TREE_NODES) or not q.children:
+        return False
+    is_and = isinstance(q, Q.And)
+    if is_and and all(isinstance(c, Q.Not) for c in q.children):
+        return False
+    return all(_is_term_tree(c, fieldname, is_and) for c in q.children)
+
+
+class _Compiled(NamedTuple):
+    score: "F.Column"  # NULL exactly where the node does not match
+    tm: Optional["F.Column"]  # live term matchers at the doc (see _TermTree)
+    # terms whose every doc the node matches; the node is set at every
+    # doc of the aggregate when this covers all of the tree's terms
+    cover: FrozenSet[str] = frozenset()
+
+
+class _TermTree:
+    """Column expressions for one term tree over the per-docid aggregate
+    that Searcher._eval_term_tree builds.
+
+    A node's `score` is NULL exactly at the docs it does not match, so
+    the operators need no flag columns: And is plain `+` (NULL when any
+    child is), Or sums the children that are set, DisjunctionMax is
+    `greatest` (which skips NULLs), AndNot and Require gate `a` on `b`
+    being NULL or set.  `tm` mirrors Searcher._tm_frame for the scaled-Or
+    matching count: the node's live term matchers active at the doc,
+    NULL where its frame has no row, or None where _tm_frame has no
+    frame and the count falls back to _matching_term_count.  Catalyst
+    prunes the aggregates nothing reads, so unused counts cost nothing."""
+
+    def __init__(self, searcher: "Searcher", terms: List[str]):
+        self.s = searcher
+        self.terms = terms
+        self.aggs: List["F.Column"] = []
+        self._leaf_cols: Dict[str, "F.Column"] = {}
+
+    def _agg(self, terms, value: "F.Column") -> "F.Column":
+        """sum(value) over the doc's rows of `terms`; NULL where it has none."""
+        if len(terms) < len(self.terms):
+            value = F.when(F.col("term").isin(list(terms)), value)
+        name = f"_a{len(self.aggs)}"
+        self.aggs.append(F.sum(value).alias(name))
+        return F.col(name)
+
+    def total(self, cover: FrozenSet[str]) -> bool:
+        """Whether a node with this cover is set at every aggregated doc."""
+        return len(cover) == len(self.terms)
+
+    def _live(self, term: str) -> bool:
+        return self.s._df_cache[term] > 0
+
+    def compile(self, q: Q.Query) -> _Compiled:
+        if isinstance(q, Q.Term):
+            # one column per distinct term, shared by repeated leaves;
+            # postings are unique per (term, docid), so it is the score
+            if q.text not in self._leaf_cols:
+                self._leaf_cols[q.text] = self._agg([q.text], F.col("score"))
+            col = self._leaf_cols[q.text]
+            tm = F.when(col.isNotNull(), F.lit(1)) if self._live(q.text) else None
+            return _Compiled(_boosted(col, q.boost), tm, frozenset([q.text]))
+        if isinstance(q, Q.Not):
+            # scored at the InverseMatcher's default 1.0, never Not.boost
+            # (see the Not branch of Searcher._eval)
+            child = self.compile(q.child)
+            return _Compiled(F.when(child.score.isNull(), F.lit(1.0)), F.lit(0))
+        if isinstance(q, Q.Or):
+            return self._or(q)
+        if isinstance(q, Q.And):
+            kids = [self.compile(c) for c in q.children]
+            score = reduce(operator.add, [k.score for k in kids])
+            return _Compiled(
+                _boosted(score, q.boost), _all_sum([k.tm for k in kids]),
+                frozenset.intersection(*[k.cover for k in kids]),
+            )
+        if isinstance(q, Q.DisjunctionMax):
+            # a pure max: the reference stores `tiebreak` but never scores
+            # with it (matching/binary.py:367-374)
+            kids = [self.compile(c) for c in q.children]
+            scores = [k.score for k in kids]
+            score = F.greatest(*scores) if len(scores) > 1 else scores[0]
+            return _Compiled(
+                _boosted(score, q.boost), None,
+                frozenset().union(*[k.cover for k in kids]),
+            )
+        # binary nodes score by `a` (AndMaybe adds `b` where it matches);
+        # a node boost scales the result (see the AndNot/Require/AndMaybe
+        # docstrings in query/ast.py)
+        a, b = self.compile(q.a), self.compile(q.b)
+        if isinstance(q, Q.AndNot):
+            score = F.when(b.score.isNull(), a.score)
+            return _Compiled(_boosted(score, q.boost), a.tm)
+        if isinstance(q, Q.Require):
+            score = F.when(b.score.isNotNull(), a.score)
+            return _Compiled(
+                _boosted(score, q.boost), _all_sum([a.tm, b.tm]),
+                a.cover & b.cover,
+            )
+        score = a.score + F.coalesce(b.score, F.lit(0.0))
+        tm = None if b.tm is None else _all_sum([a.tm, F.coalesce(b.tm, F.lit(0))])
+        return _Compiled(_boosted(score, q.boost), tm, a.cover)
+
+    def _or(self, q: Q.Or) -> _Compiled:
+        terms = [c for c in q.children if isinstance(c, Q.Term)]
+        others = [c for c in q.children if not isinstance(c, Q.Term)]
+        kids = [self.compile(c) for c in others]
+        # what each child adds to the SQR matching count where it matches
+        counts = [
+            F.when(
+                k.score.isNotNull(),
+                k.tm if k.tm is not None
+                else F.lit(self.s._matching_term_count(c)),
+            )
+            for c, k in zip(others, kids)
+        ]
+        if terms:
+            # the Term children aggregate as ONE boosted score sum (a
+            # repeated term sums its boosts) and one matcher count in
+            # which a repeated term counts its multiplicity — Or([alfa,
+            # alfa^2]) builds two term matchers (round-5 or-mode fuzz,
+            # "'alfa alfa'^2"); an OOV term has no rows, so it counts 0
+            boost: Dict[str, float] = {}
+            mult: Dict[str, int] = {}
+            for t in terms:
+                boost[t.text] = boost.get(t.text, 0.0) + t.boost
+                mult[t.text] = mult.get(t.text, 0) + 1
+            value = F.col("score")
+            if set(boost.values()) != {1.0}:
+                value = value * _per_term(boost)
+            score = self._agg(boost, value)
+            m = self._agg(mult, _per_term(mult))
+            live = all(self._live(t) for t in boost)
+            kids.append(_Compiled(score, m if live else None, frozenset(boost)))
+            counts.append(m)
+        scores = [k.score for k in kids]
+        tms = [k.tm for k in kids]
+        tm = None
+        if all(t is not None for t in tms):
+            tm = F.when(F.coalesce(*tms).isNotNull(), _set_sum(tms, 0))
+        s = _set_sum(scores, 0.0)
+        tc = sum(self.s._n_term_matchers(c) for c in q.children) if q.scale else 0
+        if not tc:
+            # no coordination, or no LIVE term matcher at all: the
+            # reference then skips CoordMatcher (compound.py:377 `if
+            # self.scale and any(m.term_matchers())`) and scores plainly
+            score = _boosted(s, q.boost)
+        elif tc == q.scale:
+            # degenerate SQR denominator: CoordMatcher still yields the
+            # matching docs, with score 0.0 (wrappers.py:560+)
+            score = F.lit(0.0)
+        else:
+            # the SQR coordination bonus (CoordMatcher, wrappers.py:532-583):
+            # (score + (matching-1)/(termcount-scale)^2) * (tc-1)/tc, where
+            # termcount counts LIVE term matchers (_n_term_matchers).  The
+            # Or's boost applies INSIDE it: the reference wraps
+            # WrappingMatcher(m, boost) first and CoordMatcher outside, so
+            # the bonus is not boosted (round-6 fuzz, "('alfa alfa'^2)^2")
+            bonus = (_set_sum(counts, 0) - 1) / F.lit(float((tc - q.scale) ** 2))
+            score = (s * F.lit(q.boost) + bonus) * F.lit((tc - 1) / tc)
+        cover = frozenset().union(*[k.cover for k in kids])
+        if not self.total(cover):
+            score = F.when(F.coalesce(*scores).isNotNull(), score)
+        return _Compiled(score, tm, cover)
+
+
 class Searcher:
     """Plans and executes queries against an :class:`InvertedIndex`."""
 
@@ -179,13 +402,12 @@ class Searcher:
         self._idf_cache: Dict[str, float] = {}
         self._df_cache: Dict[str, int] = {}
         self._cf_cache: Dict[str, float] = {}
-        # multiterm expansion memo, keyed by the node's repr: the index is
-        # an immutable snapshot (like the stats caches above), so the same
-        # Prefix/Wildcard/Fuzzy/Range node always expands identically —
-        # re-searching must not re-pay the lexicon collect round-trips
-        # (round 6: 3 of the 5 per-repetition Spark jobs of every
-        # multiterm bench query were repeated expansion lookups)
-        self._expand_cache: Dict[str, Optional[List[str]]] = {}
+        # multiterm expansion memo (see expand_terms), keyed by the node's
+        # repr: round 6 found 3 of the 5 per-repetition Spark jobs of every
+        # multiterm bench query were repeated expansion lookups
+        self._expand_cache: "OrderedDict[str, Optional[List[str]]]" = (
+            OrderedDict()
+        )
 
     # -- statistics ----------------------------------------------------------
 
@@ -216,13 +438,7 @@ class Searcher:
         uniq = list(dict.fromkeys(terms))
 
         def _stat_col(cache: Dict[str, float]) -> "F.Column":
-            vals = {cache[t] for t in uniq}
-            if len(vals) == 1:
-                return F.lit(next(iter(vals)))
-            pairs = []
-            for t in uniq:
-                pairs += [F.lit(t), F.lit(cache[t])]
-            return F.element_at(F.create_map(*pairs), F.col("term"))
+            return _per_term({t: cache[t] for t in uniq})
 
         return ScoreContext(
             weight=weight if weight is not None else F.col("weight"),
@@ -257,8 +473,7 @@ class Searcher:
     # -- leaf evaluation -----------------------------------------------------
 
     def _scored_postings(
-        self, terms: Sequence[str], boosts: Optional[Dict[str, float]] = None,
-        with_positions: bool = False, raw_weight: bool = False,
+        self, terms: Sequence[str], with_positions: bool = False
     ) -> DataFrame:
         """Postings restricted to `terms` with a vectorized score column.
 
@@ -268,30 +483,18 @@ class Searcher:
         """
         terms = [t for t in dict.fromkeys(terms)]
         p = self.ix.postings.where(F.col("term").isin(list(terms)))
-        if raw_weight:
-            # constant-score context (weighting=None -> WeightScorer,
-            # scoring.py:134-158): score = stored weight
-            score = F.col("weight")
-        else:
-            # idf/cf via a tiny driver lookup cached per searcher (the
-            # reference caches idf the same way, searching.py:334-351).
-            # A broadcast-join alternative was measured SLOWER per query
-            # (broadcast materialization is its own job + join overhead).
-            pos_col = (
-                F.col("positions")
-                if getattr(self.weighting, "needs_positions", False)
-                else None
-            )
-            score = self.weighting.score_col(
-                self.score_context(terms, positions=pos_col)
-            )
-        if boosts and any(float(b) != 1.0 for b in boosts.values()):
-            # all-1.0 boosts (the common unboosted query) skip both the
-            # map construction and the per-row lookup entirely
-            bpairs = []
-            for t in terms:
-                bpairs += [F.lit(t), F.lit(float(boosts.get(t, 1.0)))]
-            score = score * F.element_at(F.create_map(*bpairs), F.col("term"))
+        # idf/cf via a tiny driver lookup cached per searcher (the
+        # reference caches idf the same way, searching.py:334-351).
+        # A broadcast-join alternative was measured SLOWER per query
+        # (broadcast materialization is its own job + join overhead).
+        pos_col = (
+            F.col("positions")
+            if getattr(self.weighting, "needs_positions", False)
+            else None
+        )
+        score = self.weighting.score_col(
+            self.score_context(terms, positions=pos_col)
+        )
         cols = ["term", "docid", score.alias("score")]
         if with_positions:
             if "positions" not in p.columns:
@@ -389,12 +592,23 @@ class Searcher:
         expands FULLY with zero driver round-trip.  The reference expands
         fully too (terms.py:293-307); its TOO_MANY_CLAUSES is an Or
         *strategy* threshold (compound.py:282), not a result cap — so no
-        path here truncates results."""
+        path here truncates results.
+
+        Expansions are memoized per searcher in an LRU of
+        EXPAND_CACHE_SIZE entries: the index is an immutable snapshot
+        (like the stats caches), so a repeated node expands identically
+        and runs no lookup job.  Repeated searches — bench reps and the
+        benchmark's memo-hit repeats among them — therefore report the
+        memoized steady state, not the cost of a cold expansion."""
         key = repr(q)
-        if key in self._expand_cache:
-            return self._expand_cache[key]
+        cache = self._expand_cache
+        if key in cache:
+            cache.move_to_end(key)
+            return cache[key]
         out = self._expand_terms_uncached(q)
-        self._expand_cache[key] = out
+        cache[key] = out
+        if len(cache) > EXPAND_CACHE_SIZE:
+            cache.popitem(last=False)
         return out
 
     def _expand_terms_uncached(self, q: Q.Query) -> Optional[List[str]]:
@@ -515,6 +729,9 @@ class Searcher:
         needs the constant fallback.  Intersection children count their
         terms only on docs they match (inner join), matching the
         reference's skip_to-driven cursor placement."""
+        if isinstance(q, Q.WeightingQuery):
+            # a re-weighted subtree builds the same term matchers
+            return self._tm_frame(q.child)
         if isinstance(q, Q.Term):
             self._lookup_stats([q.text])
             if self._df_cache[q.text] == 0:
@@ -543,10 +760,7 @@ class Searcher:
             frames = [self._tm_frame(cc) for cc in q.children]
             if any(f is None for f in frames):
                 return None
-            u = frames[0]
-            for f2 in frames[1:]:
-                u = u.unionByName(f2)
-            return u.groupBy("docid").agg(F.sum("_tm").alias("_tm"))
+            return _union(frames).groupBy("docid").agg(F.sum("_tm").alias("_tm"))
         if isinstance(q, Q.And):
             out = None
             for cc in q.children:
@@ -707,118 +921,14 @@ class Searcher:
         if isinstance(q, Q.Term):
             df = self._scored_postings([q.text])
             return df.select("docid", (F.col("score") * F.lit(q.boost)).alias("score"))
-        if isinstance(q, Q.Or) and all(
-            isinstance(c, Q.Term) and c.fieldname == self.ix.fieldname
-            for c in q.children
-        ):
-            # fused fast path: one scan, no per-child union.  Duplicate
-            # term children SUM their boosts (round-5 fuzz fix: the
-            # reference's Or sums each duplicate matcher's score, and
-            # BM25 is linear in boost — a dict keyed by term was silently
-            # keeping only the last boost)
-            boosts: Dict[str, float] = {}
-            for c in q.children:
-                boosts[c.text] = boosts.get(c.text, 0.0) + c.boost
-            df = self._scored_postings(list(boosts), boosts=boosts)
-            tc = 0
-            if q.scale:
-                # coordination bonus: the SQR function (CoordMatcher,
-                # matching/wrappers.py — from the published V-Twin paper):
-                # (score + (matching-1)/(termcount-scale)^2)*((tc-1)/tc)
-                # termcount counts LIVE matchers only: OOV terms become
-                # NullMatchers the reference's tree drops (see
-                # _n_term_matchers); with ZERO live term matchers the
-                # reference skips CoordMatcher entirely (compound.py:377
-                # `if self.scale and any(m.term_matchers())`) and the Or
-                # scores plainly
-                # termcount counts matcher INSTANCES: Or([alfa, alfa^2])
-                # builds TWO term matchers for the same text (normalize
-                # keeps both — different boosts), so a duplicated child
-                # contributes its multiplicity to tc AND to the per-doc
-                # matching count (round-5 or-mode fuzz, "'alfa alfa'^2")
-                from collections import Counter
-
-                self._lookup_stats(list(boosts))
-                counts = Counter(
-                    c.text for c in q.children
-                    if self._df_cache[c.text] > 0
-                )
-                tc = sum(counts.values())
-            if q.scale and tc:
-                if tc == q.scale:
-                    # degenerate SQR denominator: the reference's
-                    # CoordMatcher still YIELDS the matching docs (score
-                    # contribution 0) — union of children at score 0.0
-                    return df.select("docid").distinct().select(
-                        "docid", F.lit(0.0).alias("score")
-                    )
-                # postings are unique per (term, docid), so a plain row
-                # count equals the distinct-term count; a duplicated
-                # child weights its term by its multiplicity
-                if all(v == 1 for v in counts.values()):
-                    m_col = F.count(F.lit(1))
-                else:
-                    mult_map = F.create_map(
-                        *[
-                            F.lit(x)
-                            for t, n_ in counts.items()
-                            for x in (t, float(n_))
-                        ]
-                    )
-                    m_col = F.sum(
-                        F.coalesce(
-                            F.element_at(mult_map, F.col("term")),
-                            F.lit(1.0),
-                        )
-                    )
-                agg = df.groupBy("docid").agg(
-                    F.sum("score").alias("_s"),
-                    m_col.alias("_m"),
-                )
-                # the Or's boost applies INSIDE the SQR: the reference
-                # wraps WrappingMatcher(m, boost) first and CoordMatcher
-                # outside it (compound.py _tree_matcher then
-                # DefaultOr._matcher), so the bonus term is NOT scaled by
-                # the node boost (round-6 fuzz fix, "('alfa alfa'^2)^2")
-                sqr = (
-                    F.col("_s") * F.lit(q.boost)
-                    + (F.col("_m") - 1) / F.lit(float((tc - q.scale) ** 2))
-                ) * F.lit((tc - 1) / tc)
-                return agg.select("docid", sqr.alias("score"))
-            out = df.groupBy("docid").agg(F.sum("score").alias("score"))
-            return out.select(
-                "docid", (F.col("score") * F.lit(q.boost)).alias("score")
-            )
-        if isinstance(q, Q.And) and all(
-            isinstance(c, Q.Term) and c.fieldname == self.ix.fieldname
-            for c in q.children
-        ):
-            # fused: one scan + single aggregation with match-count filter.
-            # Duplicate term children sum their boosts (see the Or path)
-            boosts = {}
-            for c in q.children:
-                boosts[c.text] = boosts.get(c.text, 0.0) + c.boost
-            n = len(boosts)
-            df = self._scored_postings(list(boosts), boosts=boosts)
-            # postings are unique per (term, docid): row count == distinct
-            # terms matched, so the coverage check needs no count_distinct
-            # (which would plan an extra (docid, term) exchange — measured
-            # ~20% of and2 latency at 1M docs)
-            out = (
-                df.groupBy("docid")
-                .agg(
-                    F.sum("score").alias("score"),
-                    F.count(F.lit(1)).alias("_n"),
-                )
-                .where(F.col("_n") == n)
-                .drop("_n")
-            )
-            return out.select(
-                "docid", (F.col("score") * F.lit(q.boost)).alias("score")
-            )
+        if isinstance(q, _TREE_NODES):
+            out = self._eval_term_tree(q)
+            if out is not None:
+                return out
         if isinstance(q, Q.Or):
             # Not children evaluate to their complement frame (score = boost,
             # like the reference's InverseMatcher, matching/wrappers.py:424-428)
+            tc = 0
             if q.scale:
                 # SQR coordination bonus (CoordMatcher, wrappers.py:532-583).
                 # The reference's termcount is the number of LEAF TERM
@@ -830,55 +940,33 @@ class Searcher:
                 # And; Not contributes 0).  Pre-warm the df cache in ONE
                 # lexicon lookup so the per-child live-matcher counts
                 # don't each pay a driver round-trip.
-                texts: List[str] = []
-                for c in q.children:
-                    for leaf in c.leaves():
-                        if isinstance(leaf, Q.Term):
-                            texts.append(leaf.text)
-                        elif isinstance(leaf, (Q.Phrase, Q.Ordered)):
-                            texts.extend(leaf.words)
-                self._lookup_stats(texts)
+                self._lookup_stats([t for _, t in q.iter_all_terms()])
                 tc = sum(self._n_term_matchers(c) for c in q.children)
-            else:
-                tc = 0
             if q.scale and tc:
                 if tc == q.scale:
                     # degenerate SQR denominator — still yield matching docs
                     # at score 0 like CoordMatcher._sqr (wrappers.py:560+)
-                    u0 = self._eval(q.children[0]).select("docid")
-                    for c in q.children[1:]:
-                        u0 = u0.unionByName(self._eval(c).select("docid"))
+                    u0 = _union(
+                        [self._eval(c).select("docid") for c in q.children]
+                    )
                     return u0.distinct().select(
                         "docid", F.lit(0.0).alias("score")
                     )
-                frames = [self._eval_with_tm(c) for c in q.children]
-                u = frames[0]
-                for f2 in frames[1:]:
-                    u = u.unionByName(f2)
+                u = _union([self._eval_with_tm(c) for c in q.children])
                 agg = u.groupBy("docid").agg(
                     F.sum("score").alias("_s"),
                     F.sum("_tm").alias("_m"),
                 )
-                # node boost inside the SQR, like the fused path above
+                # node boost inside the SQR, as in _TermTree._or
                 sqr = (
                     F.col("_s") * F.lit(q.boost)
                     + (F.col("_m") - 1) / F.lit(float((tc - q.scale) ** 2))
                 ) * F.lit((tc - 1) / tc)
                 return agg.select("docid", sqr.alias("score"))
-            frames = [self._eval(c) for c in q.children]
-            u = frames[0]
-            for f2 in frames[1:]:
-                u = u.unionByName(f2)
+            u = _union([self._eval(c) for c in q.children])
             out = u.groupBy("docid").agg(F.sum("score").alias("score"))
-            if q.boost != 1.0:
-                out = out.select(
-                    "docid", (F.col("score") * F.lit(q.boost)).alias("score")
-                )
-            return out
+            return self._boosted_frame(out, q.boost)
         if isinstance(q, Q.And):
-            fused = self._try_fused_and(q)
-            if fused is not None:
-                return fused
             pos = [c for c in q.children if not isinstance(c, Q.Not)]
             neg = [c for c in q.children if isinstance(c, Q.Not)]
             n = len(pos)
@@ -888,13 +976,7 @@ class Searcher:
                 # matching the bare-Not complement semantics
                 out = self._all_docs(0.0)
             else:
-                frames = [
-                    self._eval(c).withColumn("_cid", F.lit(i))
-                    for i, c in enumerate(pos)
-                ]
-                u = frames[0]
-                for f2 in frames[1:]:
-                    u = u.unionByName(f2)
+                u = _union([self._eval(c) for c in pos])
                 # every _eval child frame is docid-unique (see _eval
                 # docstring), so each child contributes at most one row
                 # per docid and the row count equals the distinct-child
@@ -921,39 +1003,16 @@ class Searcher:
                 out = out.select(
                     "docid", (F.col("score") + F.lit(neg_bonus)).alias("score")
                 )
-            if q.boost != 1.0:
-                out = out.select(
-                    "docid", (F.col("score") * F.lit(q.boost)).alias("score")
-                )
-            return out
+            return self._boosted_frame(out, q.boost)
         if isinstance(q, Q.DisjunctionMax):
             # NOTE: the reference's DisjunctionMaxMatcher.score() is a pure
             # max — its `tiebreak` argument is stored but never used in
             # scoring (matching/binary.py:367-374).  We mirror that exactly.
-            sets = self._term_sets(q.children, single_terms_only=True)
-            if sets is not None:
-                # fused: one scan; children are single terms so the max over
-                # term scores IS the max over child scores
-                boosts = {t: b for ct in sets for t, b in ct}
-                df = self._scored_postings(
-                    [t for ct in sets for t, _ in ct], boosts=boosts
-                )
-                agg = df.groupBy("docid").agg(F.max("score").alias("_mx"))
-                return agg.select(
-                    "docid", (F.col("_mx") * F.lit(q.boost)).alias("score")
-                )
-            frames = [self._eval(c) for c in q.children]
-            u = frames[0]
-            for f2 in frames[1:]:
-                u = u.unionByName(f2)
+            u = _union([self._eval(c) for c in q.children])
             agg = u.groupBy("docid").agg(F.max("score").alias("_mx"))
             return agg.select(
                 "docid", (F.col("_mx") * F.lit(q.boost)).alias("score")
             )
-        if isinstance(q, (Q.AndNot, Q.Require, Q.AndMaybe)):
-            fused = self._try_fused_binary(q)
-            if fused is not None:
-                return fused
         if isinstance(q, Q.AndNot):
             return self._boosted_frame(
                 self._eval(q.a).join(self._eval(q.b), "docid", "left_anti"),
@@ -1055,104 +1114,34 @@ class Searcher:
             )
         raise TypeError(f"unsupported query node: {q!r}")
 
-    def _term_sets(
-        self, children, single_terms_only: bool = True
-    ) -> Optional[List[List[Tuple[str, float]]]]:
-        """Per-child (term, effective boost) lists when every child is a
-        plain Term (or, with single_terms_only=False, an unscaled Or of
-        plain Terms) on this index's field and no term repeats across
-        children; None otherwise."""
-        out: List[List[Tuple[str, float]]] = []
-        for c in children:
-            if isinstance(c, Q.Term) and c.fieldname == self.ix.fieldname:
-                out.append([(c.text, c.boost)])
-            elif (
-                not single_terms_only
-                and isinstance(c, Q.Or)
-                and not c.scale
-                and c.children
-                and all(
-                    isinstance(g, Q.Term) and g.fieldname == self.ix.fieldname
-                    for g in c.children
-                )
-            ):
-                out.append([(g.text, g.boost * c.boost) for g in c.children])
-            else:
-                return None
-        all_terms = [t for ct in out for t, _ in ct]
-        if len(set(all_terms)) != len(all_terms):
-            return None
-        return out
+    def _eval_term_tree(self, q: Q.Query) -> Optional[DataFrame]:
+        """One scan and one aggregation for a boolean tree of plain Terms
+        (_is_term_tree): any nesting of And / Or (plain or scaled) /
+        DisjunctionMax / AndNot / Require / AndMaybe, with Not children
+        under an And.  None for any other tree, which the union/join path
+        of _eval then plans operator by operator.
 
-    def _try_fused_binary(self, q) -> Optional[DataFrame]:
-        """Single-scan plans for AndNot / Require / AndMaybe whose sides are
-        each a Term or an unscaled Or of Terms: one pushed term-IN scan +
-        one aggregation with side-membership flags, replacing two scans and
-        a join.  Side-a score = sum of a-side matched terms (the reference
-        scores these ops by `a` only — AndMaybe additionally adds b)."""
-        sets = self._term_sets([q.a, q.b], single_terms_only=False)
-        if sets is None:
+        The leaves' distinct terms are scanned once (the pushed `term IN`
+        filter) and grouped by docid once: the Term children of an Or
+        aggregate as one boosted score sum, and every other leaf reads a
+        per-term column.  The tree then evaluates bottom-up as column
+        expressions over those aggregates (_TermTree) — the vectorized
+        boolean evaluation of "Columnar Formatted Inverted Index for
+        Highly-Paralleled, Vectorized Query Processing" (PAPERS.md), not
+        one join per operator.  Every matched doc holds one of the
+        tree's terms, so the aggregate's docids cover all hits."""
+        if not _is_term_tree(q, self.ix.fieldname):
             return None
-        (a_set, b_set) = sets
-        a_terms = [t for t, _ in a_set]
-        b_terms = [t for t, _ in b_set]
-        boosts = {t: b for ct in sets for t, b in ct}
-        df = self._scored_postings(a_terms + b_terms, boosts=boosts)
-        in_a = F.col("term").isin(a_terms)
-        in_b = F.col("term").isin(b_terms)
-        agg = df.groupBy("docid").agg(
-            F.coalesce(F.sum(F.when(in_a, F.col("score"))), F.lit(0.0)).alias("_sa"),
-            F.coalesce(F.sum(F.when(in_b, F.col("score"))), F.lit(0.0)).alias("_sb"),
-            F.max(F.when(in_a, 1).otherwise(0)).alias("_ma"),
-            F.max(F.when(in_b, 1).otherwise(0)).alias("_mb"),
+        terms = list(dict.fromkeys(leaf.text for leaf in q.leaves()))
+        postings = self._scored_postings(terms)
+        tree = _TermTree(self, terms)
+        root = tree.compile(q)
+        out = postings.groupBy("docid").agg(*tree.aggs).select(
+            "docid", root.score.alias("score")
         )
-        if isinstance(q, Q.AndNot):
-            out = agg.where((F.col("_ma") == 1) & (F.col("_mb") == 0))
-            score = F.col("_sa")
-        elif isinstance(q, Q.Require):
-            out = agg.where((F.col("_ma") == 1) & (F.col("_mb") == 1))
-            score = F.col("_sa")
-        else:  # AndMaybe
-            out = agg.where(F.col("_ma") == 1)
-            score = F.col("_sa") + F.col("_sb")
-        if q.boost != 1.0:
-            # with_boost pushes into the scored side(s)
-            # (compound.py:527-528,555-556,610-611) == scaling the result
-            score = score * F.lit(q.boost)
-        return out.select("docid", score.alias("score"))
-
-    def _try_fused_and(self, q: Q.And) -> Optional[DataFrame]:
-        """Single-scan plan for And whose children are each a plain Term or
-        an unscaled Or of plain Terms (the 'nested boolean' hot shape,
-        e.g. And([Or([a, b]), c])): ONE pushed `term IN (...)` scan + ONE
-        aggregation computing a matched flag per child — replaces one scan
-        per child plus an N-way join.  Bails (returns None) when children
-        overlap on a term (boost attribution would be ambiguous) or any
-        child needs its own machinery (scale, boosts on the Or node with
-        nested structure are folded; Not/Phrase/ranges fall through)."""
-        child_terms = self._term_sets(q.children, single_terms_only=False)
-        if child_terms is None or len(child_terms) < 2:
-            return None
-        all_terms = [t for ct in child_terms for t, _ in ct]
-        boosts = {t: b for ct in child_terms for t, b in ct}
-        df = self._scored_postings(all_terms, boosts=boosts)
-        aggs = [F.sum("score").alias("score")]
-        for i, ct in enumerate(child_terms):
-            terms_i = [t for t, _ in ct]
-            aggs.append(
-                F.max(
-                    F.when(F.col("term").isin(terms_i), 1).otherwise(0)
-                ).alias(f"_m{i}")
-            )
-        out = df.groupBy("docid").agg(*aggs)
-        for i in range(len(child_terms)):
-            out = out.where(F.col(f"_m{i}") == 1)
-        out = out.drop(*[f"_m{i}" for i in range(len(child_terms))])
-        if q.boost != 1.0:
-            out = out.select(
-                "docid", (F.col("score") * F.lit(q.boost)).alias("score")
-            )
-        return out
+        if tree.total(root.cover):
+            return out
+        return out.where(F.col("score").isNotNull())
 
     def _eval_phrase(self, q: Q.Phrase) -> DataFrame:
         """Positional adjacency via higher-order functions (JVM-side).
