@@ -81,18 +81,26 @@ def test_custom_analyzer_options():
 
 
 def test_tokenize_udf_matches_python(spark):
-    from pyspark.sql import functions as F
-
-    from whoosh_reloaded_spark.analysis import make_tokenize_udf
+    """The build's inverter (the Spark-side tokenizer) yields exactly the
+    standard_tokens stream: every (term, pos) and the doc length."""
+    from whoosh_reloaded_spark.index import build_index
 
     texts = [t for t in EDGE_TEXTS if t] + [r[3] for r in generate_rows(50)]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    tok = make_tokenize_udf()
-    rows = df.select("text", tok(F.col("text")).alias("toks")).collect()
-    for r in rows:
-        expect = standard_tokens(r["text"])
-        got = [(t["term"], t["pos"]) for t in r["toks"]]
-        assert got == expect, r["text"]
+    df = spark.createDataFrame(
+        [(i, str(i), t) for i, t in enumerate(texts)],
+        "docid long, url string, text string",
+    )
+    ix = build_index(df, with_docids=True)
+    got, lengths = {}, {}
+    for r in ix.postings.select("docid", "term", "positions", "length").collect():
+        got.setdefault(r["docid"], []).extend(
+            (r["term"], p) for p in r["positions"]
+        )
+        lengths[r["docid"]] = r["length"]
+    for i, text in enumerate(texts):
+        expect = standard_tokens(text)
+        assert sorted(got.get(i, []), key=lambda tp: tp[1]) == expect, text
+        assert lengths.get(i, 0) == len(expect), text
 
 
 def test_tokenizer_unicode_fuzz():

@@ -4,10 +4,12 @@ A from-scratch rebuild of the *capabilities* of Sygil-Dev/whoosh-reloaded
 (reference at /root/reference, v3.0.0) on top of the Spark DataFrame engine:
 
 - tokenization: Whoosh StandardAnalyzer semantics (RegexTokenizer |
-  LowercaseFilter | StopFilter) as Arrow-vectorized pandas UDFs
+  LowercaseFilter | StopFilter) as one self-contained Python loop
   (ref: src/whoosh/analysis/{tokenizers,filters,analyzers}.py)
-- index build: one DataFrame job — tokenize → explode → groupBy(docid, term)
-  → posting/docmeta/term_stats tables written as term-sorted Parquet
+- index build: one DataFrame job — an Arrow-batched ``mapInArrow`` pass
+  tokenizes and inverts each doc into flat posting rows → term-range
+  shuffle → posting/docmeta/term_stats tables written as term-sorted
+  Parquet
   (ref build path: src/whoosh/writing.py:748-822, codec/whoosh3.py)
 - query: boolean combinators as joins/aggregations on docid, BM25F scoring as
   a single vectorized column expression, top-k via

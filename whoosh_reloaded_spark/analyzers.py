@@ -22,7 +22,11 @@ from __future__ import annotations
 
 from typing import Callable, List, Optional, Tuple
 
-from whoosh_reloaded_spark.analysis import DEFAULT_PATTERN
+from whoosh_reloaded_spark.analysis import (
+    DEFAULT_PATTERN,
+    STOP_WORDS,
+    stop_filter_tokens,
+)
 
 TokenList = List[Tuple[str, int]]
 
@@ -219,12 +223,10 @@ class StemmingAnalyzer(BaseAnalyzer):
     """RegexTokenizer | Lowercase | StopFilter | StemFilter(porter) — the
     reference's StemmingAnalyzer (analysis/analyzers.py, morph.py:34-149).
     Stemming runs after stop removal on renumbered positions, with a
-    per-task stem cache like the reference's CacheFilter."""
+    per-document stem cache like the reference's CacheFilter."""
 
     def __init__(self, expression: str = None, stoplist=None,
                  minsize: int = 2, maxsize=None):
-        from whoosh_reloaded_spark.analysis import DEFAULT_PATTERN, STOP_WORDS
-
         self.expression = expression or DEFAULT_PATTERN
         self.stoplist = frozenset(STOP_WORDS if stoplist is None else stoplist)
         self.minsize = minsize
@@ -235,31 +237,10 @@ class StemmingAnalyzer(BaseAnalyzer):
         # package via spark-submit --py-files for cluster runs
         from whoosh_reloaded_spark.porter import stem
 
-        expr, stops = self.expression, self.stoplist
-        minsize, maxsize = self.minsize, self.maxsize
-
-        def fn(text):
-            import re as _re
-
-            pat = _re.compile(expr, _re.UNICODE)
-            out = []
-            cache = {}
-            renumbered = None
-            for pos, m in enumerate(pat.finditer(text)):
-                t = m.group(0).lower()
-                n = len(t)
-                if n < minsize or (maxsize is not None and n > maxsize):
-                    continue
-                if t in stops:
-                    continue
-                renumbered = pos if renumbered is None else renumbered + 1
-                st = cache.get(t)
-                if st is None:
-                    st = cache[t] = stem(t)
-                out.append((st, renumbered))
-            return out
-
-        return fn
+        return stop_filter_tokens(
+            self.expression, self.stoplist, self.minsize, self.maxsize,
+            stem=stem,
+        )
 
 
 _PYSTEMMER_LANGS = {
@@ -280,8 +261,6 @@ class PyStemmerAnalyzer(BaseAnalyzer):
     def __init__(self, lang: str = "english", ignore=None,
                  expression: str = None, stoplist=None, minsize: int = 2,
                  maxsize=None):
-        from whoosh_reloaded_spark.analysis import DEFAULT_PATTERN, STOP_WORDS
-
         if lang not in _PYSTEMMER_LANGS:
             raise ValueError(
                 f"no stemming algorithm named {lang!r}; "
@@ -305,35 +284,16 @@ class PyStemmerAnalyzer(BaseAnalyzer):
         # caveat as StemmingAnalyzer)
         from whoosh_reloaded_spark.snowball import stemmer_for
 
-        stem = stemmer_for(_PYSTEMMER_LANGS[self.lang])
-        expr, stops, ignore = self.expression, self.stoplist, self.ignore
-        minsize, maxsize = self.minsize, self.maxsize
+        algorithm = stemmer_for(_PYSTEMMER_LANGS[self.lang])
+        ignore = self.ignore
 
-        def fn(text):
-            import re as _re
+        def stem(t):
+            return t if t in ignore else algorithm(t)
 
-            pat = _re.compile(expr, _re.UNICODE)
-            out = []
-            cache = {}
-            renumbered = None
-            for pos, m in enumerate(pat.finditer(text)):
-                t = m.group(0).lower()
-                n = len(t)
-                if n < minsize or (maxsize is not None and n > maxsize):
-                    continue
-                if t in stops:
-                    continue
-                renumbered = pos if renumbered is None else renumbered + 1
-                if t in ignore:
-                    st = t
-                else:
-                    st = cache.get(t)
-                    if st is None:
-                        st = cache[t] = stem(t)
-                out.append((st, renumbered))
-            return out
-
-        return fn
+        return stop_filter_tokens(
+            self.expression, self.stoplist, self.minsize, self.maxsize,
+            stem=stem,
+        )
 
 
 class DoubleMetaphoneAnalyzer(BaseAnalyzer):
@@ -433,8 +393,6 @@ class NgramWordAnalyzer(BaseAnalyzer):
 
     def __init__(self, minsize: int, maxsize: int = None, at: str = None,
                  expression: str = None):
-        from whoosh_reloaded_spark.analysis import DEFAULT_PATTERN
-
         self.minsize = minsize
         self.maxsize = maxsize or minsize
         assert at in (None, "start", "end")
@@ -502,7 +460,6 @@ class LanguageAnalyzer(BaseAnalyzer):
 
     def __init__(self, lang: str, expression: str = None,
                  minsize: int = 2, maxsize=None):
-        from whoosh_reloaded_spark.analysis import DEFAULT_PATTERN, STOP_WORDS
         from whoosh_reloaded_spark.lang_stopwords_data import STOPLISTS
 
         self.lang = lang
@@ -518,35 +475,10 @@ class LanguageAnalyzer(BaseAnalyzer):
     def plain_fn(self):
         from whoosh_reloaded_spark.snowball import stemmer_for
 
-        stem = stemmer_for(self.lang)
-        expr, stops = self.expression, self.stoplist
-        minsize, maxsize = self.minsize, self.maxsize
-
-        def fn(text):
-            import re as _re
-
-            pat = _re.compile(expr, _re.UNICODE)
-            out = []
-            cache = {}
-            renumbered = None
-            for pos, m in enumerate(pat.finditer(text)):
-                t = m.group(0).lower()
-                n = len(t)
-                if n < minsize or (maxsize is not None and n > maxsize):
-                    continue
-                if t in stops:
-                    continue
-                renumbered = pos if renumbered is None else renumbered + 1
-                if stem is not None:
-                    st = cache.get(t)
-                    if st is None:
-                        st = cache[t] = stem(t)
-                else:
-                    st = t
-                out.append((st, renumbered))
-            return out
-
-        return fn
+        return stop_filter_tokens(
+            self.expression, self.stoplist, self.minsize, self.maxsize,
+            stem=stemmer_for(self.lang),
+        )
 
 
 class AccentFoldingAnalyzer(BaseAnalyzer):

@@ -20,25 +20,15 @@ tokenizer match (tokenizers.py:144-155).
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import DataFrame
-
-CHAR_SPANS_SCHEMA = (
-    "docid long, term string, pos int, startchar int, endchar int"
-)
 
 
 def char_spans(text: str, analyzer=None) -> List[Tuple[str, int, int, int]]:
     """[(term, pos, startchar, endchar)] with full analyzer semantics
     (lowercase, stop removal, renumbering) — StandardAnalyzer by default."""
-    import re as _re
-
-    from whoosh_reloaded_spark.analysis import (
-        DEFAULT_PATTERN,
-        STOP_WORDS,
-        StandardAnalyzer,
-    )
+    from whoosh_reloaded_spark.analysis import StandardAnalyzer
 
     ana = analyzer or StandardAnalyzer()
     if not isinstance(ana, StandardAnalyzer):
@@ -46,69 +36,28 @@ def char_spans(text: str, analyzer=None) -> List[Tuple[str, int, int, int]]:
             "char_spans needs tokenizer match offsets; supported for "
             "StandardAnalyzer-family analyzers"
         )
-    pat = ana.pattern
-    stoplist = ana.stoplist
-    minsize, maxsize = ana.minsize, ana.maxsize
-    out = []
-    renumbered = None
-    for pos, m in enumerate(pat.finditer(text)):
-        t = m.group(0).lower()
-        n = len(t)
-        if n < minsize or (maxsize is not None and n > maxsize):
-            continue
-        if stoplist is not None and t in stoplist:
-            continue
-        renumbered = pos if renumbered is None else renumbered + 1
-        out.append((t, renumbered, m.start(), m.end()))
-    return out
+    toks = ana.plain_fn(with_offsets=True)(text)
+    return [(t, p, sc, ec) for t, p, _, sc, ec in toks]
 
 
 def char_spans_df(docs: DataFrame, id_col: str = "docid",
                   text_col: str = "text", analyzer=None) -> DataFrame:
     """Distributed char-span extraction: (docid, term, pos, startchar,
-    endchar) rows via mapInPandas (Arrow-batched, self-contained closure)."""
-    from whoosh_reloaded_spark.analysis import StandardAnalyzer
-
-    ana = analyzer or StandardAnalyzer()
-    pattern_str = ana.pattern.pattern
-    stoplist = ana.stoplist
-    minsize, maxsize = ana.minsize, ana.maxsize
+    endchar) rows — the build's inverter with character payloads, one row
+    per occurrence."""
+    from whoosh_reloaded_spark.analysis import (
+        invert_rows_schema,
+        make_invert_rows,
+    )
 
     src = docs.selectExpr(f"{id_col} as docid", f"{text_col} as text")
-
-    def run(batches):
-        import re as _re
-
-        import pandas as _pd
-
-        pat = _re.compile(pattern_str, _re.UNICODE)
-        for pdf in batches:
-            ids, terms, poss, scs, ecs = [], [], [], [], []
-            for docid, v in zip(pdf["docid"], pdf["text"]):
-                if not isinstance(v, str):
-                    continue
-                renumbered = None
-                for pos, m in enumerate(pat.finditer(v)):
-                    t = m.group(0).lower()
-                    n = len(t)
-                    if n < minsize or (maxsize is not None and n > maxsize):
-                        continue
-                    if stoplist is not None and t in stoplist:
-                        continue
-                    renumbered = pos if renumbered is None else renumbered + 1
-                    ids.append(docid)
-                    terms.append(t)
-                    poss.append(renumbered)
-                    scs.append(m.start())
-                    ecs.append(m.end())
-            yield _pd.DataFrame(
-                {
-                    "docid": ids,
-                    "term": terms,
-                    "pos": poss,
-                    "startchar": scs,
-                    "endchar": ecs,
-                }
-            )
-
-    return src.mapInPandas(run, CHAR_SPANS_SCHEMA)
+    rows = src.mapInArrow(
+        make_invert_rows(analyzer, with_chars=True),
+        invert_rows_schema(with_chars=True),
+    )
+    return rows.selectExpr(
+        "docid",
+        "term",
+        "inline(arrays_zip(positions, startchars, endchars))"
+        " AS (pos, startchar, endchar)",
+    )

@@ -4,9 +4,9 @@ The reference's build path (writer.add_document -> PostingPool external sort
 -> W3FieldWriter posting blocks; src/whoosh/writing.py:748-822,
 codec/whoosh3.py:301-373) is re-expressed as ONE declarative Spark pipeline:
 
-    corpus --assign docids--> analyze+invert per doc (ONE pandas-UDF pass:
+    corpus --assign docids--> analyze+invert per doc (ONE mapInArrow pass:
     tokenize, group, position-sort in Python — no engine-level groupBy
-    shuffle) --explode--> posting rows --term-range shuffle--> written
+    shuffle) --> flat posting rows --term-range shuffle--> written
     postings; docmeta / term_stats / global stats derive from the WRITTEN
     columnar postings (cheap re-reads).
 
@@ -212,38 +212,25 @@ def build_index(
     - "character_boosts" (formats.py:411-470): both of the above.
 
     ``boost_delim`` is the DelimitedAttributeFilter equivalent for the
-    StandardAnalyzer fast path ('render^2' → boost 2.0, endchar trimmed);
-    pair it with a pattern that keeps the delimiter in the token.
+    StandardAnalyzer ('render^2' → token 'render' at boost 2.0, endchar
+    trimmed) under every format; pair it with a pattern that keeps the
+    delimiter in the token.  Other analyzers raise ``TypeError`` (wrap
+    them in DelimitedBoostAnalyzer instead).
     """
     from whoosh_reloaded_spark.analysis import (
-        INVERT_ROWS_SCHEMA,
+        invert_rows_schema,
         make_invert_rows,
-        make_invert_rows_payload,
     )
 
-    payload_flags = {
-        "position_boosts": (False, True),
-        "characters": (True, False),
-        "character_boosts": (True, True),
-    }.get(format)
-    extra_cols: List[str] = []
-    if payload_flags:
-        with_chars, with_boosts = payload_flags
-        run = make_invert_rows_payload(
-            analyzer, with_chars=with_chars, with_boosts=with_boosts,
-            boost_delim=boost_delim,
-        )
-        if with_boosts:
-            extra_cols.append("pos_boosts")
-        if with_chars:
-            extra_cols.extend(["startchars", "endchars"])
-        schema_str = INVERT_ROWS_SCHEMA + ", " + ", ".join(
-            f"{c} array<double>" if c == "pos_boosts" else f"{c} array<int>"
-            for c in extra_cols
-        )
-    else:
-        run = make_invert_rows(analyzer)
-        schema_str = INVERT_ROWS_SCHEMA
+    if format not in ("positions", "frequency", "existence",
+                      "position_boosts", "characters", "character_boosts"):
+        raise ValueError(f"unknown posting format: {format!r}")
+    with_boosts = format in ("position_boosts", "character_boosts")
+    with_chars = format in ("characters", "character_boosts")
+    run = make_invert_rows(analyzer, with_boosts, with_chars, boost_delim)
+    extra_cols = ["pos_boosts"] if with_boosts else []
+    if with_chars:
+        extra_cols += ["startchars", "endchars"]
     # dedup so text_col may ALSO be a stored col (TEXT(stored=True) in the
     # reference, fields.py — lets Hit.highlights read the source text from
     # docmeta instead of requiring an explicit text argument)
@@ -266,7 +253,7 @@ def build_index(
         # 4 x parallelism range partitions, so this check runs no shuffle
         # and the branch does not fire for it.
         src = src.repartition(parallelism)
-    raw = src.mapInArrow(run, schema_str)
+    raw = src.mapInArrow(run, invert_rows_schema(with_boosts, with_chars))
     postings = raw.select(
         F.lit(fieldname).alias("field"),
         "term",
@@ -286,8 +273,6 @@ def build_index(
         postings = postings.drop("positions").withColumn(
             "weight", F.lit(float(field_boost))
         ).withColumn("tf", F.lit(1))
-    elif format != "positions" and not payload_flags:
-        raise ValueError(f"unknown posting format: {format!r}")
     meta_cols = [
         c for c in keep_cols
         if c != uid_col and (c != text_col or c in (stored_cols or []))
