@@ -66,6 +66,9 @@ def test_manifest_metrics(spark, corpus, tmp_path_factory):
     for r in m.values():
         assert r["n_docs"] > 0 and r["n_postings"] > 0 and r["wall_sec"] > 0
         assert r["docid_hi"] > r["docid_lo"]
+        # observed on the postings write: exactly the rows written
+        written = spark.read.parquet(r["segment_path"] + "/postings").count()
+        assert r["n_postings"] == written
     assert sum(r["n_docs"] for r in m.values()) == N
 
 

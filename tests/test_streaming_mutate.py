@@ -56,8 +56,25 @@ def test_append_batch_monotonic_docids(spark, tmp_path):
     r2 = append_batch(spark.createDataFrame(rows[50:], PAGES_SCHEMA), out)
     assert r1["docid_lo"] == 0 and r1["docid_hi"] == 50
     assert r2["docid_lo"] == 50 and r2["docid_hi"] == 100
+    for r in (r1, r2):
+        # observed on the postings write: exactly the rows written
+        written = spark.read.parquet(r["segment_path"] + "/postings").count()
+        assert r["n_postings"] == written > 0
     ix = open_partitioned(spark, out)
     assert ix.docmeta.select(F.count_distinct("docid")).collect()[0][0] == 100
+
+
+def test_append_empty_batch_writes_nothing(spark, tmp_path):
+    out = str(tmp_path / "empty")
+    assert append_batch(spark.createDataFrame([], PAGES_SCHEMA), out) is None
+    assert read_manifest(out) == {}
+    assert not os.path.exists(out) or not any(
+        name.startswith("segment_") for name in os.listdir(out)
+    )
+    # a batch after it still starts at slice 0, docid 0
+    rows = list(generate_rows(5))
+    r = append_batch(spark.createDataFrame(rows, PAGES_SCHEMA), out)
+    assert (r["slice_id"], r["docid_lo"], r["docid_hi"]) == (0, 0, 5)
 
 
 def test_delete_and_update(spark, tmp_path):

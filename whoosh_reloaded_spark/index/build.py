@@ -17,10 +17,16 @@ of term-range sorted parquet; merging segments is a `unionByName` +
 re-aggregation (see segments.py), mirroring writing.py:730-746 add_reader.
 
 Scale notes (100 TB design):
-- docid assignment is the only global ordering step; it is done with a
-  range-partitioned two-phase rank (per-partition counts -> offsets ->
+- every build is sized by its row count: the input is persisted and
+  counted once, and the docid ranking, the analysis pass and the postings
+  write all run in ``k = min(parallelism, ceil(rows / ROWS_PER_TASK))``
+  partitions (see :data:`ROWS_PER_TASK`), so a small commit pays for one
+  Python task, not one per core.
+- docid assignment is the only global ordering step.  With one partition
+  the docid is the row index of the uid-sorted partition; with more it is
+  a range-partitioned two-phase rank (per-partition counts -> offsets ->
   offset + row index), with no Window and no join.  See
-  :func:`assign_docids`.
+  :func:`rank_docids`.
 - postings are written repartitionByRange(term) + sortWithinPartitions(term,
   docid): parquet min/max page stats then give term-dictionary pruning for
   query-time `term IN (...)` filters (the reference's ordered term hash file,
@@ -34,8 +40,9 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional
+from typing import Dict, List, NamedTuple, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,6 +63,12 @@ class InvertedIndex:
     uid_col: str = "url"
     fieldname: str = DEFAULT_FIELD
     docs_raw: Optional[DataFrame] = None  # docid, uid [, stored] — no UDF lineage
+    # set by build_index for save_index: the partition count the build was
+    # sized to (0: not sized) and the frames it persisted, which save_index
+    # releases
+    _partitions: int = field(default=0, repr=False, compare=False)
+    _cached: List[DataFrame] = field(default_factory=list, repr=False,
+                                     compare=False)
 
     # -- Index-object convenience surface (reference index.py Index class)
 
@@ -120,60 +133,154 @@ class InvertedIndex:
         return self
 
 
-def assign_docids(df: DataFrame, uid_col: str, num_partitions: int = 0) -> DataFrame:
+#: rows per partition of a build.  Every Python task of the analysis pass
+#: pays a fixed crossing cost (worker hand-off, Arrow batch set-up,
+#: scheduling) whatever its size.  Measured on a 4-core host (local[4],
+#: cached input, no-op sink, median of 4): over 200 docs an identity
+#: ``mapInArrow`` took 1,241 / 357 / 329 ms in 16 / 4 / 1 partitions and
+#: the inverter 1,451 / 393 / 368 ms — about 300 ms of core time per extra
+#: task; over 4,000 docs the inverter took 1,594 / 523 / 945 ms.  At 1,000
+#: rows a task, a 200-600 doc commit runs as one task and a 4,000-doc build
+#: on 4 cores keeps 4 tasks and 4 postings files (fewer files would halve
+#: the file-level min/max pruning that term lookups get).
+ROWS_PER_TASK = 1000
+
+
+def partitions_for(spark: SparkSession, rows: int) -> int:
+    """The one sizing rule: ``min(parallelism, ceil(rows / ROWS_PER_TASK))``,
+    at least 1."""
+    want = -(-rows // ROWS_PER_TASK)
+    return max(1, min(spark.sparkContext.defaultParallelism, want))
+
+
+def _is_cached(df: DataFrame) -> bool:
+    held = df.storageLevel
+    return held.useMemory or held.useDisk
+
+
+def _persist(df: DataFrame, cached: List[DataFrame]) -> DataFrame:
+    """Persist `df` (spill-safe) unless its plan is already cached, and
+    record it in `cached` only when this call cached it — a caller's cache
+    is never released by :func:`release`."""
+    if not _is_cached(df):
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        cached.append(df)
+    return df
+
+
+def release(cached: List[DataFrame]) -> None:
+    """Unpersist the frames a build persisted (see :func:`_persist`)."""
+    while cached:
+        cached.pop().unpersist()
+
+
+class RankedDocs(NamedTuple):
+    docs: DataFrame            # the input plus a bigint ``docid`` column
+    n: int                     # input rows
+    k: int                     # partitions of ``docs``
+    cached: List[DataFrame]    # frames persisted here; see release()
+
+
+def rank_docids(df: DataFrame, uid_col: str,
+                num_partitions: int = 0) -> RankedDocs:
     """Deterministic dense docid = global rank of `uid_col` (0-based).
 
     Docids define BM25 tie-break order and must match the reference's
     insertion-order docnums (documents added in uid order), so they must be
     stable across runs (FIXTURES.md §5 'build determinism').
 
-    Distributed two-phase rank (no Window, no join):
-      1. range-partition by uid and sort within partitions,
-      2. count rows per partition (small job) -> cumulative offsets,
-      3. docid = offset[partition] + row index within the partition.
+    The input is persisted and counted once; that count sizes the ranking
+    to ``k = num_partitions`` or, by default, :func:`partitions_for`.
 
-    The partitioned frame is persisted so both phases observe identical range
-    boundaries (repartitionByRange samples its boundaries).  Step 3 is a
-    projection over that cached scan: the offsets are one SQL array literal
-    indexed by partition id, and the row index is
-    ``monotonically_increasing_id()`` minus its partition bits (the id is
-    ``partition << 33 | row``), so the docid frame needs no exchange and
-    keeps the cached partitioning.  On a real cluster/Iceberg deployment
-    the sort order would be a table property and boundaries computed once
-    from a deterministic sample.
+    - ``k == 1``: the input is coalesced to one partition and sorted by
+      uid, and the docid is the row index (``monotonically_increasing_id``
+      of partition 0) — no exchange, no boundary sampling, no second count.
+    - ``k > 1``: a two-phase rank with no Window and no join: range-partition
+      by uid and sort within partitions, count rows per partition (a small
+      job) -> cumulative offsets, docid = offset[partition] + row index.
+      The range-sorted frame is persisted so both phases observe identical
+      range boundaries (repartitionByRange samples its boundaries); once it
+      is counted the input's cache is released.  The docid is a projection
+      over that cached scan: the offsets are one SQL array literal indexed
+      by partition id, and the row index is ``monotonically_increasing_id()``
+      minus its partition bits (the id is ``partition << 33 | row``), so
+      the docid frame needs no exchange and keeps the cached partitioning.
+      A row past its partition's count raises: the frame was recomputed
+      after its cache went, with other boundaries, and the offsets no
+      longer hold.
+
+    On a real cluster/Iceberg deployment the sort order would be a table
+    property and boundaries computed once from a deterministic sample.
     """
     spark = df.sparkSession
-    if num_partitions <= 0:
-        # oversubscribe: range-boundary sampling is approximate, so ask for
-        # several partitions per core — otherwise skewed boundaries leave
-        # cores idle through the downstream analysis pass
-        num_partitions = spark.sparkContext.defaultParallelism * 4
-    part = (
-        df.repartitionByRange(num_partitions, F.col(uid_col))
+    cached: List[DataFrame] = []
+    src = _persist(df, cached)
+    own_input = bool(cached)
+    n = src.count()
+    k = num_partitions if num_partitions > 0 else partitions_for(spark, n)
+    if k == 1:
+        docs = (
+            src.coalesce(1)
+            .sortWithinPartitions(uid_col)
+            .withColumn("docid", F.monotonically_increasing_id())
+        )
+        return RankedDocs(docs, n, 1, cached)
+    part = _persist(
+        src.repartitionByRange(k, F.col(uid_col))
         .sortWithinPartitions(uid_col)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+        .withColumn("_pid", F.spark_partition_id()),
+        cached,
     )
     counts = {
         int(r["_pid"]): int(r["count"])
         for r in part.groupBy("_pid").count().collect()
     }
+    if own_input:
+        # `part` is materialized; the input is not read again
+        cached.pop(0).unpersist()
     # dense over every partition id up to the last non-empty one (empty
     # partitions have no rows to look their offset up); one entry minimum
     # so the literal is typed even for an empty input
-    offsets, acc = [], 0
+    offsets, sizes, acc = [], [], 0
     for pid in range(max(counts, default=0) + 1):
         offsets.append(acc)
-        acc += counts.get(pid, 0)
+        sizes.append(counts.get(pid, 0))
+        acc += sizes[-1]
     offsets_sql = "array(" + ", ".join(f"{o}L" for o in offsets) + ")"
-    return part.withColumn(
-        "docid",
-        F.expr(
-            f"element_at({offsets_sql}, _pid + 1)"
-            " + monotonically_increasing_id()"
-            " - shiftleft(CAST(_pid AS BIGINT), 33)"
-        ),
-    ).drop("_pid")
+    sizes_sql = "array(" + ", ".join(f"{c}L" for c in sizes) + ")"
+
+    # the offsets hold only for the cached boundaries: if `part` is ever
+    # recomputed (its cache released, a block lost) the boundaries are
+    # sampled again, and some partition then holds more rows than it was
+    # counted with — fail there instead of handing out duplicate docids
+    docs = (
+        part.withColumn(
+            "_row",
+            F.expr(
+                "monotonically_increasing_id()"
+                " - shiftleft(CAST(_pid AS BIGINT), 33)"
+            ),
+        )
+        .withColumn(
+            "docid",
+            F.expr(
+                f"if(_row < element_at({sizes_sql}, _pid + 1),"
+                f" element_at({offsets_sql}, _pid + 1) + _row,"
+                " raise_error('docid ranking recomputed with other range"
+                " boundaries; rank the documents again'))"
+            ),
+        )
+        .drop("_pid", "_row")
+    )
+    return RankedDocs(docs, n, k, cached)
+
+
+def assign_docids(df: DataFrame, uid_col: str, num_partitions: int = 0) -> DataFrame:
+    """The docid frame of :func:`rank_docids`: `df` plus a dense ``docid``
+    in uid order, in ``num_partitions`` partitions or, by default, as many
+    as :func:`partitions_for` gives its row count.  The frames it reads
+    from stay persisted; :func:`rank_docids` returns them for release."""
+    return rank_docids(df, uid_col, num_partitions).docs
 
 
 def build_index(
@@ -216,6 +323,14 @@ def build_index(
     trimmed) under every format; pair it with a pattern that keeps the
     delimiter in the token.  Other analyzers raise ``TypeError`` (wrap
     them in DelimitedBoostAnalyzer instead).
+
+    ``num_partitions`` is the partition count ``k`` of the docid ranking,
+    the analysis pass and, through :func:`save_index`, the postings files;
+    0 sizes it from the input's row count (:func:`partitions_for`), which
+    is counted once.  A ``with_docids`` frame keeps its docids; with
+    ``num_partitions`` set it is taken as already sized, otherwise it is
+    respread when it has fewer than ``k`` partitions, or more than one
+    when ``k`` is 1.
     """
     from whoosh_reloaded_spark.analysis import (
         invert_rows_schema,
@@ -235,24 +350,30 @@ def build_index(
     # reference, fields.py — lets Hit.highlights read the source text from
     # docmeta instead of requiring an explicit text argument)
     keep_cols = list(dict.fromkeys([uid_col, text_col] + list(stored_cols or [])))
+    spark = corpus.sparkSession
     if with_docids:
         docs = corpus.select("docid", *keep_cols)
+        cached: List[DataFrame] = []
+        k = num_partitions
     else:
-        docs = assign_docids(corpus.select(*keep_cols), uid_col, num_partitions)
+        docs, _, k, cached = rank_docids(
+            corpus.select(*keep_cols), uid_col, num_partitions
+        )
 
     # analyze + invert per doc in ONE mapInArrow pass emitting FLAT posting
     # rows — no engine-level groupBy shuffle, no nested Arrow structs;
     # positions are grouped and ordered during analysis
     src = docs.select("docid", F.col(text_col).alias("text"))
-    parallelism = corpus.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < parallelism:
-        # a caller-supplied docid frame (with_docids) or a small
-        # num_partitions can leave fewer partitions than cores, which would
-        # starve the (CPU-bound) analysis pass; respread first.  The
-        # assign_docids frame is a projection over its cached
-        # 4 x parallelism range partitions, so this check runs no shuffle
-        # and the branch does not fire for it.
-        src = src.repartition(parallelism)
+    if k <= 0:
+        # an unsized caller frame: the same rule as rank_docids, so a small
+        # input runs in one task and a large one in no fewer than k.  The
+        # partition count is read from the persisted plan, with no job.
+        k = partitions_for(spark, _persist(docs, cached).count())
+        have = src.rdd.getNumPartitions()
+        if k == 1 and have > 1:
+            src = src.coalesce(1)
+        elif have < k:
+            src = src.repartition(k)
     raw = src.mapInArrow(run, invert_rows_schema(with_boosts, with_chars))
     postings = raw.select(
         F.lit(fieldname).alias("field"),
@@ -316,12 +437,14 @@ def build_index(
         uid_col="uid",
         fieldname=fieldname,
         docs_raw=docs_raw,
+        _partitions=k,
+        _cached=cached,
     )
 
 
 def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
                compress_positions: bool = False,
-               codec: str = None) -> None:
+               codec: str = None) -> int:
     """Write the index as term-sorted parquet (segment commit ≙ TOC write).
 
     ONE heavy pipeline: the analyze+invert UDF pass streams straight into the
@@ -332,6 +455,15 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
     tokenization runs exactly once per save.  Postings sorted by (term,
     docid): parquet min/max stats give term-dictionary data skipping at
     query time.
+
+    ``term_partitions`` (postings files) defaults to the partition count
+    :func:`build_index` sized the index to, else the default parallelism.
+    One file is written from one sorted partition that the analysis pass
+    streams into, in one task; more files go through a persisted,
+    range-partitioned write.
+    Every frame the build persisted is released when the save ends, also
+    when it fails.  Returns the number of postings rows written, observed
+    on the write itself.
     """
     import time as _time
 
@@ -347,49 +479,63 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
             print(f"[build-timing] {label}: {now - _t0:.3f}s", file=_sys.stderr)
             _t0 = now
 
-    from pyspark import StorageLevel
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Observation
+    from pyspark.util import inheritable_thread_target
 
     spark = ix.postings.sparkSession
     if term_partitions <= 0:
-        term_partitions = spark.sparkContext.defaultParallelism
-    # two-step write: (1) the analyze+invert UDF pass materializes ONCE into
-    # a spill-safe cache — repartitionByRange would otherwise execute the
-    # whole UDF pipeline TWICE (range-boundary sampling + the real pass).
-    # Round 6 replaced the previous scratch-parquet round trip with
-    # persist(MEMORY_AND_DISK): same single-tokenization guarantee, minus a
-    # full parquet encode+commit+decode of the postings (guide §5 persist
-    # vs recompute; at segment scale the cache spills to local disk, which
-    # is what the scratch table was).  (2) the cheap cache re-read pays for
-    # the sampling, the term-range shuffle and the (term, docid) sort.
-    to_write = ix.postings
-    # position codec selection (codecs.py): `codec` names a registered
-    # codec; compress_positions=True is the back-compat alias for 'varint'
-    # (the reference's delta+varint payload encoding, whoosh3.py:844-850 —
-    # smallest at rest but its chained Python stage costs build throughput
-    # at high core counts: 1M docs 14.4k -> 7.9k docs/s at 32 cores).
-    # 'jvmdelta' delta-encodes JVM-side at ~no build cost.
-    if codec is None:
-        codec = "varint" if compress_positions else "raw"
-    if codec != "raw" and "positions" in to_write.columns:
-        from whoosh_reloaded_spark.index.codecs import get_codec
-
-        encode, _ = get_codec(codec)
-        to_write = to_write.withColumn(
-            "positions", encode(F.col("positions"))
-        )
-    to_write = to_write.persist(StorageLevel.MEMORY_AND_DISK)
+        term_partitions = ix._partitions or spark.sparkContext.defaultParallelism
+    cached = ix._cached
     try:
-        if _timing:
+        to_write = ix.postings
+        # position codec selection (codecs.py): `codec` names a registered
+        # codec; compress_positions=True is the back-compat alias for
+        # 'varint' (the reference's delta+varint payload encoding,
+        # whoosh3.py:844-850 — smallest at rest but its chained Python
+        # stage costs build throughput at high core counts: 1M docs 14.4k
+        # -> 7.9k docs/s at 32 cores).  'jvmdelta' delta-encodes JVM-side
+        # at ~no build cost.
+        if codec is None:
+            codec = "varint" if compress_positions else "raw"
+        if codec != "raw" and "positions" in to_write.columns:
+            from whoosh_reloaded_spark.index.codecs import get_codec
+
+            encode, _ = get_codec(codec)
+            to_write = to_write.withColumn(
+                "positions", encode(F.col("positions"))
+            )
+        if term_partitions == 1:
+            # one sorted partition: nothing samples range boundaries, so
+            # the analyze+invert pass streams straight into the write
+            ranged = to_write.coalesce(1)
+        else:
+            # two-step write: (1) the analyze+invert UDF pass materializes
+            # ONCE into a spill-safe cache — repartitionByRange would
+            # otherwise execute the whole UDF pipeline TWICE (range-boundary
+            # sampling + the real pass); at segment scale the cache spills
+            # to local disk (guide §5 persist vs recompute).  (2) the cheap
+            # cache re-read pays for the sampling, the term-range shuffle
+            # and the (term, docid) sort.
+            to_write = _persist(to_write, cached)
+            ranged = to_write.repartitionByRange(
+                term_partitions, "term", "docid"
+            )
+        if _timing and _is_cached(to_write):
             # timing-only split point: materialize the cache now so the
             # UDF pass and the shuffle/write show as separate phases
             to_write.count()
             _mark("UDF pass (cache materialization)")
         # term first: saved-index layouts keep the historical column order
         out_cols = ["term"] + [c for c in to_write.columns if c != "term"]
+        # observed above the range exchange, like the docmeta stats below,
+        # so the boundary-sampling pass cannot count rows twice
+        obs_postings = Observation("wrs_postings_rows")
         (
-            to_write.repartitionByRange(term_partitions, "term", "docid")
-            .sortWithinPartitions("term", "docid")
+            ranged.sortWithinPartitions("term", "docid")
             .select(*out_cols)
+            .observe(obs_postings, F.count(F.lit(1)).alias("rows"))
             .write.mode("overwrite")
             .parquet(f"{path}/postings")
         )
@@ -413,8 +559,6 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
             )
 
         def _write_docmeta():
-            from pyspark.sql import Observation
-
             if ix.docs_raw is not None:
                 # docmeta without re-running the UDF: uid/stored from the
                 # raw doc frame, lengths from the written postings (0 for
@@ -455,17 +599,18 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         # the derived tables are independent jobs over the written
         # postings — run them from a 2-thread pool so the second job's
         # tasks back-fill executors the first job's tail leaves idle
-        # (guide §2.6 overlap-independent-jobs)
-        from concurrent.futures import ThreadPoolExecutor
-
+        # (guide §2.6 overlap-independent-jobs).  The wrapped targets
+        # inherit the caller's local properties and tags, so their jobs
+        # stay in the caller's job group.
+        inherit = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_ts = pool.submit(_write_term_stats)
-            fut_dm = pool.submit(_write_docmeta)
+            fut_ts = pool.submit(inherit(_write_term_stats))
+            fut_dm = pool.submit(inherit(_write_docmeta))
             fut_ts.result()
             obs_stats = fut_dm.result()
         _mark("derived writes (term_stats + docmeta, overlapped)")
     finally:
-        to_write.unpersist()
+        release(cached)
     doc_count = int(obs_stats["doc_count"])
     field_length = int(obs_stats["field_length"])
     stats = {
@@ -483,6 +628,7 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
              "fieldname": ix.fieldname, "codec": codec,
              "format_version": FORMAT_VERSION}, f
         )
+    return int(obs_postings.get["rows"])
 
 
 #: on-disk layout version recorded in stats.json (index.version_in

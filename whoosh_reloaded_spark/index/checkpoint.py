@@ -33,8 +33,10 @@ from pyspark.sql import functions as F
 from whoosh_reloaded_spark.analysis import StandardAnalyzer
 from whoosh_reloaded_spark.index.build import (
     InvertedIndex,
-    assign_docids,
     build_index,
+    partitions_for,
+    rank_docids,
+    release,
     save_index,
 )
 from whoosh_reloaded_spark.index.segments import load_multi
@@ -82,58 +84,63 @@ def build_partitioned(
     simulate a killed build).
     """
     spark = corpus.sparkSession
-    docs = assign_docids(corpus, uid_col).persist()
-    n_docs_total = docs.count()
+    ranked = rank_docids(corpus, uid_col)
+    docs, n_docs_total = ranked.docs, ranked.n
     slice_size = (n_docs_total + n_slices - 1) // n_slices
 
     manifest = read_manifest(out_root) if resume else {}
     done_paths: List[str] = []
     built = 0
-    for s in range(n_slices):
-        lo, hi = s * slice_size, min((s + 1) * slice_size, n_docs_total)
-        seg_path = os.path.join(out_root, f"segment_{s:05d}")
-        row = manifest.get(s)
-        if (
-            resume
-            and row
-            and row.get("status") == "complete"
-            and os.path.isdir(seg_path)
-        ):
+    try:
+        for s in range(n_slices):
+            lo, hi = s * slice_size, min((s + 1) * slice_size, n_docs_total)
+            seg_path = os.path.join(out_root, f"segment_{s:05d}")
+            row = manifest.get(s)
+            if (
+                resume
+                and row
+                and row.get("status") == "complete"
+                and os.path.isdir(seg_path)
+            ):
+                done_paths.append(seg_path)
+                continue
+            if max_slices is not None and built >= max_slices:
+                break
+            t0 = time.perf_counter()
+            part = docs.where((F.col("docid") >= lo) & (F.col("docid") < hi))
+            # a slice is sized by its own row count; its docid range covers
+            # only a few of the ranked frame's uid-range partitions, so it
+            # is respread over its k
+            k = partitions_for(spark, hi - lo)
+            part = part.coalesce(1) if k == 1 else part.repartition(k)
+            ix = build_index(
+                part,
+                uid_col=uid_col,
+                text_col=text_col,
+                analyzer=analyzer,
+                with_docids=True,
+                num_partitions=k,
+            )
+            n_postings = save_index(ix, seg_path)
+            wall = time.perf_counter() - t0
+            mrow = {
+                "slice_id": s,
+                "docid_lo": lo,
+                "docid_hi": hi,
+                "n_docs": int(ix.stats["doc_count"]),
+                "n_postings": n_postings,
+                "segment_path": seg_path,
+                "wall_sec": round(wall, 3),
+                "status": "complete",
+                "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            }
+            _append_manifest(out_root, mrow)
+            if on_slice_done:
+                on_slice_done(mrow)
             done_paths.append(seg_path)
-            continue
-        if max_slices is not None and built >= max_slices:
-            break
-        t0 = time.perf_counter()
-        part = docs.where((F.col("docid") >= lo) & (F.col("docid") < hi))
-        ix = build_index(
-            part,
-            uid_col=uid_col,
-            text_col=text_col,
-            analyzer=analyzer,
-            with_docids=True,
-        )
-        save_index(ix, seg_path)
-        # count the written parquet (row-group metadata), not ix.postings —
-        # the logical frame would re-run the whole tokenize+invert pipeline
-        n_postings = spark.read.parquet(os.path.join(seg_path, "postings")).count()
-        wall = time.perf_counter() - t0
-        mrow = {
-            "slice_id": s,
-            "docid_lo": lo,
-            "docid_hi": hi,
-            "n_docs": int(ix.stats["doc_count"]),
-            "n_postings": int(n_postings),
-            "segment_path": seg_path,
-            "wall_sec": round(wall, 3),
-            "status": "complete",
-            "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        _append_manifest(out_root, mrow)
-        if on_slice_done:
-            on_slice_done(mrow)
-        done_paths.append(seg_path)
-        built += 1
-    docs.unpersist()
+            built += 1
+    finally:
+        release(ranked.cached)
     return done_paths
 
 

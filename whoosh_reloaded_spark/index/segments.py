@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from whoosh_reloaded_spark.index.build import (
     InvertedIndex,
     load_index,
+    partitions_for,
     save_index,
 )
 
@@ -108,7 +109,9 @@ def load_multi(spark: SparkSession, seg_paths: List[str],
 def merge_segments(spark: SparkSession, seg_paths: List[str], out_path: str,
                    term_partitions: int = 0) -> InvertedIndex:
     """Compact segments into one (OPTIMIZE): union -> rewrite, with the
-    postings re-sorted by (term, docid) over the merged doc order."""
+    postings re-sorted by (term, docid) over the merged doc order, in as
+    many postings files as a build of the merged doc count
+    (:func:`partitions_for`)."""
     merged = load_multi(spark, seg_paths)
     out = InvertedIndex(
         docmeta=merged.docmeta,
@@ -119,6 +122,8 @@ def merge_segments(spark: SparkSession, seg_paths: List[str], out_path: str,
         fieldname=merged.fieldname,
         docs_raw=merged.docmeta.drop("length", "len_byte"),
     )
+    if term_partitions <= 0:
+        term_partitions = partitions_for(spark, merged.doc_count())
     save_index(out, out_path, term_partitions)
     return load_index(spark, out_path)
 

@@ -4,7 +4,7 @@ The reference's Schema maps many fields to one segment's postings keyed by
 (fieldname, term); BM25F scores each field with its own statistics
 (df per (field, term), per-field average length) and per-field B overrides
 (scoring.py:274-329).  Here each field is its own index over SHARED docids
-(one assign_docids pass), and MultiFieldSearcher routes fielded leaf queries
+(one rank_docids pass), and MultiFieldSearcher routes fielded leaf queries
 to the right per-field Searcher — compound operators combine the resulting
 (docid, score) frames exactly as in the single-field planner.
 
@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from whoosh_reloaded_spark.index.build import (
     InvertedIndex,
-    assign_docids,
     build_index,
+    rank_docids,
 )
 from whoosh_reloaded_spark.query import ast as Q
 from whoosh_reloaded_spark.query.planner import Searcher
@@ -49,21 +49,22 @@ def build_multi_index(
     num_partitions: int = 0,
 ) -> Dict[str, InvertedIndex]:
     """Build one index per field over a single shared docid assignment."""
-    docs = assign_docids(
+    ranked = rank_docids(
         corpus.select(uid_col, *[fs.text_col for fs in fields.values()]),
         uid_col,
         num_partitions,
-    ).persist()
+    )
     out = {}
     for name, fs in fields.items():
         out[name] = build_index(
-            docs,
+            ranked.docs,
             uid_col=uid_col,
             text_col=fs.text_col,
             fieldname=name,
             analyzer=fs.analyzer,
             field_boost=fs.boost,
             with_docids=True,
+            num_partitions=ranked.k,
             format=fs.format,
             store_vector=fs.store_vector,
         )

@@ -29,7 +29,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whoosh_reloaded_spark.analysis import StandardAnalyzer
-from whoosh_reloaded_spark.index.build import assign_docids, build_index, save_index
+from whoosh_reloaded_spark.index.build import (
+    build_index,
+    rank_docids,
+    release,
+    save_index,
+)
 from whoosh_reloaded_spark.index.checkpoint import _append_manifest, read_manifest
 
 
@@ -56,8 +61,6 @@ def append_batch(batch_df: DataFrame, out_root: str,
     complete manifest row carrying the same batch_id short-circuits the
     re-delivery instead of appending duplicate documents as a new segment.
     """
-    if batch_df.isEmpty():
-        return None
     if batch_id is not None:
         for row in read_manifest(out_root).values():
             if (
@@ -66,28 +69,31 @@ def append_batch(batch_df: DataFrame, out_root: str,
                 and os.path.isdir(row.get("segment_path", ""))
             ):
                 return row  # already appended; skip re-delivery
-    slice_id, docid_base = _next_ids(out_root)
     t0 = time.perf_counter()
-    docs = assign_docids(batch_df, uid_col).withColumn(
-        "docid", F.col("docid") + F.lit(docid_base)
-    )
-    ix = build_index(
-        docs, uid_col=uid_col, text_col=text_col, analyzer=analyzer,
-        with_docids=True,
-    )
-    seg_path = os.path.join(out_root, f"segment_{slice_id:05d}")
-    save_index(ix, seg_path)
+    # one count sizes the whole commit (and finds an empty batch)
+    ranked = rank_docids(batch_df, uid_col)
+    try:
+        if ranked.n == 0:
+            return None
+        slice_id, docid_base = _next_ids(out_root)
+        docs = ranked.docs.withColumn(
+            "docid", F.col("docid") + F.lit(docid_base)
+        )
+        ix = build_index(
+            docs, uid_col=uid_col, text_col=text_col, analyzer=analyzer,
+            with_docids=True, num_partitions=ranked.k,
+        )
+        seg_path = os.path.join(out_root, f"segment_{slice_id:05d}")
+        n_postings = save_index(ix, seg_path)
+    finally:
+        release(ranked.cached)
     n_docs = int(ix.stats["doc_count"])
-    # count the WRITTEN parquet (row-group metadata read), not ix.postings —
-    # counting the logical frame would re-run the tokenize+invert pipeline
-    spark = batch_df.sparkSession
-    n_postings = spark.read.parquet(os.path.join(seg_path, "postings")).count()
     row = {
         "slice_id": slice_id,
         "docid_lo": docid_base,
         "docid_hi": docid_base + n_docs,
         "n_docs": n_docs,
-        "n_postings": int(n_postings),
+        "n_postings": n_postings,
         "segment_path": seg_path,
         "wall_sec": round(time.perf_counter() - t0, 3),
         "status": "complete",
