@@ -1,11 +1,12 @@
-"""The one-scan boolean compiler (Searcher._eval_term_tree).
+"""The one-scan compiler (Searcher._eval_term_tree).
 
 * Differential property test: random trees of And / Or (plain and
-  scaled) / DisjunctionMax / AndNot / Require / AndMaybe / Not over plain
-  Terms must give the same doc set and scores (rel 1e-9) as the general
-  per-operator union/join path on the same tree.  The general path is
-  reached by wrapping every leaf in ``WeightingQuery(t, None)``: _eval
-  unwraps it to the same Term, but the compiler accepts only bare Terms.
+  scaled) / DisjunctionMax / AndNot / Require / AndMaybe / Not over
+  Terms, Phrases, Ordereds and Prefix / FuzzyTerm leaves must give the
+  same doc set and scores (rel 1e-9) as the general per-operator
+  union/join path on the same tree.  The general path is reached by
+  wrapping every leaf in ``WeightingQuery(leaf, None)``: _eval unwraps it
+  to the same leaf, but the compiler accepts only bare leaves.
 * Plan shape: on a saved index, shapes that used to take two postings
   scans and a join or union now plan as exactly one postings scan and
   no join.
@@ -22,14 +23,19 @@ from whoosh_reloaded_spark.query import ast as Q
 from whoosh_reloaded_spark.query.parser import QueryParser
 
 
+# VOCAB's words share no prefix; these make Prefix and FuzzyTerm leaves
+# expand to two terms
+WORDS = VOCAB + ["alfas", "deltas", "golfer"]
+
+
 def _corpus():
     """40 docs of 2-9 words with uneven word frequencies, so terms
-    co-occur in every combination (unlike DOCS, whose docs each draw
-    from one residue class of the vocabulary)."""
+    co-occur in every combination and adjacent pairs recur (unlike DOCS,
+    whose docs each draw from one residue class of the vocabulary)."""
     rng = random.Random(11)
-    weights = [12 - i for i in range(len(VOCAB))]
+    weights = [len(WORDS) - i for i in range(len(WORDS))]
     return [
-        " ".join(rng.choices(VOCAB, weights, k=rng.randint(2, 9)))
+        " ".join(rng.choices(WORDS, weights, k=rng.randint(2, 9)))
         for _ in range(40)
     ]
 
@@ -53,6 +59,24 @@ term = st.builds(
     st.sampled_from(VOCAB[:4] * 3 + VOCAB[4:] + OOV),
     boost=boost,
 )
+words = st.lists(st.sampled_from(VOCAB[:4] * 2 + ["alfas", "zebra"]),
+                 min_size=2, max_size=3)
+# two-term, one-term ("char") and empty ("zz") expansions
+prefix = st.builds(
+    Q.Prefix, st.sampled_from(["alf", "delt", "golf", "char", "zz"]),
+    boost=boost,
+)
+fuzzy = st.builds(
+    Q.FuzzyTerm, st.sampled_from(["alfa", "delta", "golfe", "hotel", "zebra"]),
+    boost=boost,
+)
+leaf = st.one_of(
+    term,
+    st.builds(Q.Phrase, words, slop=st.sampled_from([1, 2]), boost=boost),
+    st.builds(Q.Ordered, words, boost=boost),
+    prefix,
+    fuzzy,
+)
 
 
 def _compound(inner):
@@ -72,14 +96,14 @@ def _compound(inner):
     )
 
 
-trees = st.recursive(term, _compound, max_leaves=7).filter(
+trees = st.recursive(leaf, _compound, max_leaves=7).filter(
     lambda q: not isinstance(q, Q.Term)
 )
 
 
 def _general(q):
     """The same tree with every leaf wrapped so the compiler declines it."""
-    if isinstance(q, Q.Term):
+    if q.is_leaf():
         return Q.WeightingQuery(q, None)
     return q.apply(_general)
 
@@ -125,6 +149,16 @@ ONE_SCAN_SHAPES = {
     "alfa OR bravo": Q.Or((a, d)),
     "(alfa OR bravo) AND golf": Q.And((Q.Or((a, d)), c)),
     "Or(alfa, delta, bravo, scale=0.9)": Q.Or((a, b, d), scale=0.9),
+    # positional and multiterm leaves (DOCS steps VOCAB by 3: alfa delta
+    # golf juliet ...)
+    '"alfa delta"': Q.Phrase(("alfa", "delta")),
+    "Ordered(alfa, golf)": Q.Ordered(("alfa", "golf")),
+    '"alfa delta" AND golf': Q.And((Q.Phrase(("alfa", "delta")), c)),
+    'al* OR "delta golf"': Q.Or((Q.Prefix("al"), Q.Phrase(("delta", "golf")))),
+    "alfa~ AND delta": Q.And((Q.FuzzyTerm("alfa"), b)),
+    'Or(alfa, "delta golf", scale=0.9)': Q.Or(
+        (a, Q.Phrase(("delta", "golf"))), scale=0.9
+    ),
 }
 
 
@@ -155,3 +189,19 @@ def test_one_postings_scan_no_join(saved, name):
     ]
     assert len(scans) == 1, plan
     assert "Join" not in plan and "Union" not in plan, plan
+
+
+def test_phrase_in_tree_needs_positions(spark):
+    """A positional leaf inside a compiled tree on a position-less index
+    raises the positions error instead of returning no hits."""
+    from whoosh_reloaded_spark.index import build_index
+    from whoosh_reloaded_spark.query import Searcher
+
+    df = spark.createDataFrame(
+        [(f"d{i:02d}", t) for i, t in enumerate(DOCS)],
+        "url string, text string",
+    )
+    s = Searcher(build_index(df, format="frequency"))
+    q = Q.And((Q.Phrase(("alfa", "delta")), Q.Term("golf")))
+    with pytest.raises(ValueError, match="without positions"):
+        s.search(q, 10).collect()

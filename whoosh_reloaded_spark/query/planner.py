@@ -2,11 +2,20 @@
 
 The reference executes queries with a single-threaded pull-based Matcher tree
 (src/whoosh/matching/*.py); here each AST node evaluates to a docid-unique
-DataFrame of ``(docid, score)``.  A boolean tree whose leaves are all
-plain terms compiles to ONE pushed postings scan and ONE groupBy(docid),
-its operators becoming column expressions over per-term aggregates
-(Searcher._eval_term_tree).  Any other tree maps each combinator to a
-relational op:
+DataFrame of ``(docid, score)``.  A boolean tree whose leaves are terms,
+phrases, Ordereds and small multiterm expansions — or one such leaf alone —
+compiles to ONE pushed postings scan and ONE groupBy(docid), its operators
+becoming column expressions over per-word score and positions aggregates
+(Searcher._eval_term_tree):
+
+    Phrase    -> per-word first(positions) columns + a higher-order-function
+                 adjacency chain over them (spans.py:653-699 semantics)
+    Ordered   -> the same columns, each word after some earlier match
+    Prefix/Wildcard/Fuzzy/... -> an Or of the expansion's terms
+
+Any other tree (spans, Every, ranges, overflowing expansions, leaves on
+another field, the WeightingQuery-wrapped differential) maps each
+combinator to a relational op:
 
     And       -> union + groupBy(docid) having count == n, score = sum
                  (IntersectionMatcher sums scores, matching/binary.py:95-96)
@@ -16,8 +25,6 @@ relational op:
     Require   -> left-semi join          (wrappers.py:431-494)
     AndMaybe  -> left-outer join         (binary.py:677-793)
     Not       -> anti join vs docmeta    (matching/wrappers.py:335-430)
-    Phrase    -> join position arrays on docid + higher-order-function
-                 adjacency intersection  (spans.py:653-699 semantics)
     top-k     -> orderBy(desc(score), asc(docid)).limit(k)
                  == TakeOrderedAndProject, ties broken by LOWER docid first
                  exactly like the reference heap (collectors.py:466-483)
@@ -53,8 +60,6 @@ from whoosh_reloaded_spark.scoring import (
 TOO_MANY_CLAUSES = 1024  # compound.py:282 heuristic bound for expansions
 FUZZY_DRIVER_LIMIT = 20_000  # fuzzy slices below this run the DP driver-side
 EXPAND_CACHE_SIZE = 256  # multiterm expansions memoized per Searcher (LRU)
-PHRASE_BROADCAST_DF = 2_000_000  # rare-word docid frames below this df are
-# broadcast for the phrase pre-prune semi-join (~16 MB of longs)
 
 
 def levenshtein_distance(a: str, b: str, limit: Optional[int] = None) -> int:
@@ -85,37 +90,6 @@ def levenshtein_distance(a: str, b: str, limit: Optional[int] = None) -> int:
     return prev[lb]
 
 
-def osa_distance(a: str, b: str, limit: Optional[int] = None) -> int:
-    """Restricted Damerau-Levenshtein (optimal string alignment) distance —
-    the classic public DP algorithm, equivalent to the reference's shipped
-    support/levenshtein.damerau_levenshtein.  NOT used on the fuzzy/spelling
-    paths (see :func:`levenshtein_distance` for why); kept for users who
-    want the transposition-aware metric explicitly."""
-    la, lb = len(a), len(b)
-    if limit is not None and abs(la - lb) > limit:
-        return limit + 1
-    prev2: Optional[List[int]] = None
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        cur = [i] + [0] * lb
-        for j in range(1, lb + 1):
-            cost = 0 if a[i - 1] == b[j - 1] else 1
-            v = min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + cost)
-            if (
-                i > 1
-                and j > 1
-                and a[i - 1] == b[j - 2]
-                and a[i - 2] == b[j - 1]
-                and a[i - 1] != b[j - 1]
-            ):
-                v = min(v, prev2[j - 2] + 1)
-            cur[j] = v
-        prev2, prev = prev, cur
-        if limit is not None and min(prev) > limit:
-            return limit + 1
-    return prev[lb]
-
-
 def _make_lev_match_udf(qtext: str, maxdist: int):
     """Arrow-batched predicate: levenshtein_distance(qtext, term) <= maxdist.
     Runs the DP on executors so fuzzy expansion never collects the
@@ -129,10 +103,6 @@ def _make_lev_match_udf(qtext: str, maxdist: int):
         )
 
     return within
-
-
-# backwards-compat alias for external callers of the pre-round-4 name
-_make_osa_match_udf = _make_lev_match_udf
 
 
 def range_condition(q) -> "F.Column":
@@ -212,25 +182,35 @@ def _all_sum(cols: List[Optional["F.Column"]]) -> Optional["F.Column"]:
 
 # the operators Searcher._eval_term_tree compiles (plus Not under an And)
 _TREE_NODES = (Q.And, Q.Or, Q.DisjunctionMax, Q.AndNot, Q.Require, Q.AndMaybe)
+# ... and its leaves; a _MultiTerm only when its expansion is small
+_LEAVES = (Q.Term, Q.Phrase, Q.Ordered, Q._MultiTerm)
 
 
-def _is_term_tree(q: Q.Query, fieldname: str, under_and: bool = False) -> bool:
-    """True for a _TREE_NODES tree whose leaves are plain Terms on
-    `fieldname`, where a Not is only the child of an And that also has a
-    positive child — so every doc the tree matches holds one of its
-    terms."""
-    if isinstance(q, Q.Term):
-        return q.fieldname == fieldname
+def _is_term_tree(
+    q: Q.Query, fieldname: str, expand, under_and: bool = False
+) -> bool:
+    """True for a _TREE_NODES tree (or a bare leaf) whose leaves are
+    Terms, Phrases, Ordereds or multiterm leaves whose `expand` (the
+    searcher's expand_terms) is not None, all on `fieldname`, where a Not
+    is only the child of an And that also has a positive child — so
+    every doc the tree matches holds one of its terms."""
+    if isinstance(q, _LEAVES):
+        if q.fieldname != fieldname:
+            return False
+        return not isinstance(q, Q._MultiTerm) or expand(q) is not None
     if isinstance(q, Q.Not):
-        return under_and and _is_term_tree(q.child, fieldname)
+        return under_and and _is_term_tree(q.child, fieldname, expand)
     if isinstance(q, (Q.AndNot, Q.Require, Q.AndMaybe)):
-        return _is_term_tree(q.a, fieldname) and _is_term_tree(q.b, fieldname)
+        return (
+            _is_term_tree(q.a, fieldname, expand)
+            and _is_term_tree(q.b, fieldname, expand)
+        )
     if not isinstance(q, _TREE_NODES) or not q.children:
         return False
     is_and = isinstance(q, Q.And)
     if is_and and all(isinstance(c, Q.Not) for c in q.children):
         return False
-    return all(_is_term_tree(c, fieldname, is_and) for c in q.children)
+    return all(_is_term_tree(c, fieldname, expand, is_and) for c in q.children)
 
 
 class _Compiled(NamedTuple):
@@ -243,23 +223,37 @@ class _Compiled(NamedTuple):
 
 class _TermTree:
     """Column expressions for one term tree over the per-docid aggregate
-    that Searcher._eval_term_tree builds.
+    of its one postings scan (`frame`).
 
     A node's `score` is NULL exactly at the docs it does not match, so
     the operators need no flag columns: And is plain `+` (NULL when any
     child is), Or sums the children that are set, DisjunctionMax is
     `greatest` (which skips NULLs), AndNot and Require gate `a` on `b`
-    being NULL or set.  `tm` mirrors Searcher._tm_frame for the scaled-Or
-    matching count: the node's live term matchers active at the doc,
-    NULL where its frame has no row, or None where _tm_frame has no
-    frame and the count falls back to _matching_term_count.  Catalyst
-    prunes the aggregates nothing reads, so unused counts cost nothing."""
+    being NULL or set.  A word has one score column (`word`), shared by
+    its Term leaves and the phrases that hold it, and one positions
+    column (`positions`) when a positional leaf reads it.  `tm` mirrors
+    Searcher._tm_frame for the scaled-Or matching count: the node's live
+    term matchers active at the doc, NULL where its frame has no row, or
+    None where _tm_frame has no frame and the count falls back to
+    _matching_term_count.  Catalyst prunes the aggregates nothing reads,
+    so unused counts cost nothing."""
 
     def __init__(self, searcher: "Searcher", terms: List[str]):
         self.s = searcher
         self.terms = terms
         self.aggs: List["F.Column"] = []
-        self._leaf_cols: Dict[str, "F.Column"] = {}
+        self._words: Dict[str, "F.Column"] = {}
+        self._positions: Dict[str, str] = {}
+        # one stats lookup for every scanned term, before any leaf asks
+        searcher._lookup_stats(terms)
+
+    def frame(self) -> DataFrame:
+        """The one pushed `term IN` scan, grouped by docid into `aggs`;
+        positions are read only when a positional leaf asked for them."""
+        postings = self.s._scored_postings(
+            self.terms, with_positions=bool(self._positions)
+        )
+        return postings.groupBy("docid").agg(*self.aggs)
 
     def _agg(self, terms, value: "F.Column") -> "F.Column":
         """sum(value) over the doc's rows of `terms`; NULL where it has none."""
@@ -268,6 +262,27 @@ class _TermTree:
         name = f"_a{len(self.aggs)}"
         self.aggs.append(F.sum(value).alias(name))
         return F.col(name)
+
+    def word(self, w: str) -> "F.Column":
+        """The score of word `w` at the doc; postings are unique per
+        (term, docid), so the sum is its one row's score."""
+        if w not in self._words:
+            self._words[w] = self._agg([w], F.col("score"))
+        return self._words[w]
+
+    def positions(self, w: str) -> str:
+        """The name of the column holding word `w`'s positions at the doc,
+        NULL where it has none.  A conditional first(), as parsed SQL:
+        building it with F.first(F.when(...)) costs ~10 ms of py4j per
+        column at plan time."""
+        if w not in self._positions:
+            name = f"_p{len(self.aggs)}"
+            self.aggs.append(F.expr(
+                f"first(CASE WHEN term = {_sql_str(w)} THEN positions END,"
+                f" true) AS {name}"
+            ))
+            self._positions[w] = name
+        return self._positions[w]
 
     def total(self, cover: FrozenSet[str]) -> bool:
         """Whether a node with this cover is set at every aggregated doc."""
@@ -278,13 +293,13 @@ class _TermTree:
 
     def compile(self, q: Q.Query) -> _Compiled:
         if isinstance(q, Q.Term):
-            # one column per distinct term, shared by repeated leaves;
-            # postings are unique per (term, docid), so it is the score
-            if q.text not in self._leaf_cols:
-                self._leaf_cols[q.text] = self._agg([q.text], F.col("score"))
-            col = self._leaf_cols[q.text]
+            col = self.word(q.text)
             tm = F.when(col.isNotNull(), F.lit(1)) if self._live(q.text) else None
             return _Compiled(_boosted(col, q.boost), tm, frozenset([q.text]))
+        if isinstance(q, (Q.Phrase, Q.Ordered)):
+            return self._positional(q)
+        if isinstance(q, Q._MultiTerm):
+            return self._multiterm(q)
         if isinstance(q, Q.Not):
             # scored at the InverseMatcher's default 1.0, never Not.boost
             # (see the Not branch of Searcher._eval)
@@ -325,6 +340,50 @@ class _TermTree:
         score = a.score + F.coalesce(b.score, F.lit(0.0))
         tm = None if b.tm is None else _all_sum([a.tm, F.coalesce(b.tm, F.lit(0))])
         return _Compiled(_boosted(score, q.boost), tm, a.cover)
+
+    def _positional(self, q) -> _Compiled:
+        """Phrase / Ordered over the per-word positions columns.
+
+        The matched-position chain is m_1 = pos(w1), m_i = {p in pos(wi) |
+        some x in m_(i-1) is near p}, and the doc matches iff m_k is
+        nonempty: near is 0 < p - x <= slop for a Phrase (the reference's
+        sorted-span intersection, spans.py:653-699) and x < p for an
+        Ordered.  A missing word's column is NULL, so is the chain.  The
+        score sums the words' scores, as the span matcher scores through
+        IntersectionMatcher (binary.py:95-96).  The chain is one parsed
+        SQL expression: each Python-lambda higher-order function costs a
+        ~10-25 ms py4j round trip at plan time."""
+        words = list(q.words)
+        if isinstance(q, Q.Phrase):
+            near = f"p - x > 0 AND p - x <= {int(q.slop)}"
+        else:
+            near = "x < p"
+        m = self.positions(words[0])
+        for w in words[1:]:
+            m = f"filter({self.positions(w)}, p -> exists({m}, x -> {near}))"
+        score = reduce(operator.add, [self.word(w) for w in words])
+        score = F.when(F.expr(f"size({m}) > 0"), _boosted(score, q.boost))
+        # a match activates every word's matcher; a phrase with an OOV
+        # word has none (see _n_term_matchers) and never matches
+        n = self.s._n_term_matchers(q)
+        return _Compiled(score, F.when(score.isNotNull(), F.lit(n)) if n else None)
+
+    def _multiterm(self, q: Q.Query) -> _Compiled:
+        """An Or of the leaf's expansion terms, whose `tm` counts the
+        expansion terms at the doc (as _tm_frame does).  Reference quirk
+        (round-5 parser fuzz, "(alfa~)^2"): a single-term expansion is
+        the bare, boost-less Term matcher (terms.py:221,227-228), so the
+        leaf's boost applies only to a multi-term expansion, through
+        Or(qs, boost) (compound.py:232-233); pinned by
+        test_multiterm_singleton_boost_drop_golden.  An empty expansion
+        never matches."""
+        texts = self.s.expand_terms(q)
+        if not texts:
+            return _Compiled(F.lit(None).cast("double"), F.lit(None).cast("int"))
+        score = self._agg(texts, F.col("score"))
+        boost = q.boost if len(texts) > 1 else 1.0
+        tm = self._agg(texts, F.lit(1))
+        return _Compiled(_boosted(score, boost), tm, frozenset(texts))
 
     def _or(self, q: Q.Or) -> _Compiled:
         terms = [c for c in q.children if isinstance(c, Q.Term)]
@@ -527,7 +586,7 @@ class Searcher:
         """Pushdown predicate builder for a multiterm query: a function
         mapping a term Column to a boolean Column.  EXACT for Prefix/
         Wildcard/Regex/TermRange/Variations; a SUPERSET (prefix slice +
-        length window) for FuzzyTerm, whose exact filter is the OSA DP.
+        length window) for FuzzyTerm, whose exact filter is the Levenshtein DP.
         Applicable to term_stats AND postings — both carry `term`, so the
         same predicate reaches both parquet scans as a pushed filter."""
         if isinstance(q, Q.Prefix):
@@ -921,10 +980,9 @@ class Searcher:
         if isinstance(q, Q.Term):
             df = self._scored_postings([q.text])
             return df.select("docid", (F.col("score") * F.lit(q.boost)).alias("score"))
-        if isinstance(q, _TREE_NODES):
-            out = self._eval_term_tree(q)
-            if out is not None:
-                return out
+        out = self._eval_term_tree(q)
+        if out is not None:
+            return out
         if isinstance(q, Q.Or):
             # Not children evaluate to their complement frame (score = boost,
             # like the reference's InverseMatcher, matching/wrappers.py:424-428)
@@ -1062,10 +1120,6 @@ class Searcher:
             return self._boosted_frame(
                 a if a.limit(1).count() > 0 else self._eval(q.b), q.boost
             )
-        if isinstance(q, Q.Phrase):
-            return self._eval_phrase(q)
-        if isinstance(q, Q.Ordered):
-            return self._eval_ordered(q)
         if isinstance(q, (Q.NumericRange, Q.DateRange)):
             df = self.ix.docmeta.where(range_condition(q))
             return df.select("docid", F.lit(float(q.boost)).alias("score"))
@@ -1086,179 +1140,60 @@ class Searcher:
             pq = Q.Require(q.q, q.parents)
             return self._boosted_frame(nested_children(self, pq), q.boost)
         if isinstance(q, Q._MultiTerm):
-            terms = self.expand_terms(q)
-            if terms is None:
-                # expansion > TOO_MANY_CLAUSES: relational full-expansion
-                # plan — postings join lexicon frame, no truncation
-                df = self._scored_postings_rel(q)
-            elif not terms:
-                return spark.createDataFrame([], "docid long, score double")
-            else:
-                # NOTE: the reference's MultiTerm.matcher sets weighting=None
-                # for constantscore fuzzy queries, but its Or-matcher falls
-                # back to the searcher's weighting anyway — observed behavior
-                # is plain BM25-scored Or over the expanded terms, mirrored.
-                df = self._scored_postings(terms)
-            out = df.groupBy("docid").agg(F.sum("score").alias("score"))
-            # Reference quirk (round-5 parser fuzz, "(alfa~)^2"): a
-            # single-term expansion returns the bare Term matcher —
-            # MultiTerm.matcher builds boost-LESS Terms and uses qs[0]
-            # directly (terms.py:221,227-228) — so the MultiTerm's own
-            # boost is silently dropped; only multi-term expansions go
-            # through Or(qs, boost), whose _tree_matcher applies it
-            # (compound.py:232-233).  Mirrored, pinned by
-            # test_multiterm_singleton_boost_drop_golden.
-            boost = q.boost if terms is None or len(terms) > 1 else 1.0
-            return out.select(
-                "docid", (F.col("score") * F.lit(boost)).alias("score")
+            # expansion > TOO_MANY_CLAUSES (a smaller one compiles above):
+            # relational full-expansion plan — postings join lexicon
+            # frame, no truncation.  NOTE: the reference's MultiTerm.matcher
+            # sets weighting=None for constantscore fuzzy queries, but its
+            # Or-matcher falls back to the searcher's weighting anyway —
+            # observed behavior is plain BM25-scored Or over the expanded
+            # terms, mirrored.
+            out = self._scored_postings_rel(q).groupBy("docid").agg(
+                F.sum("score").alias("score")
             )
+            return self._boosted_frame(out, q.boost)
         raise TypeError(f"unsupported query node: {q!r}")
 
     def _eval_term_tree(self, q: Q.Query) -> Optional[DataFrame]:
-        """One scan and one aggregation for a boolean tree of plain Terms
-        (_is_term_tree): any nesting of And / Or (plain or scaled) /
-        DisjunctionMax / AndNot / Require / AndMaybe, with Not children
-        under an And.  None for any other tree, which the union/join path
-        of _eval then plans operator by operator.
+        """One scan and one aggregation for a boolean tree of postings
+        leaves (_is_term_tree): any nesting of And / Or (plain or scaled)
+        / DisjunctionMax / AndNot / Require / AndMaybe, with Not children
+        under an And, over Terms, Phrases, Ordereds and multiterm leaves
+        whose expansion is small.  A bare Phrase, Ordered or multiterm
+        leaf compiles as a one-leaf tree whatever its fieldname, as the
+        Term branch of _eval plans a bare Term.  None for any other tree,
+        which the union/join path of _eval then plans operator by
+        operator.
 
-        The leaves' distinct terms are scanned once (the pushed `term IN`
-        filter) and grouped by docid once: the Term children of an Or
-        aggregate as one boosted score sum, and every other leaf reads a
-        per-term column.  The tree then evaluates bottom-up as column
-        expressions over those aggregates (_TermTree) — the vectorized
-        boolean evaluation of "Columnar Formatted Inverted Index for
+        The leaves' distinct terms (phrase words and expansions included)
+        are scanned once (the pushed `term IN` filter) and grouped by
+        docid once: the Term children of an Or aggregate as one boosted
+        score sum, every other leaf reads per-word score and positions
+        columns.  The tree then evaluates bottom-up as column expressions
+        over those aggregates (_TermTree) — the vectorized boolean and
+        positional evaluation of "Columnar Formatted Inverted Index for
         Highly-Paralleled, Vectorized Query Processing" (PAPERS.md), not
         one join per operator.  Every matched doc holds one of the
         tree's terms, so the aggregate's docids cover all hits."""
-        if not _is_term_tree(q, self.ix.fieldname):
+        field = q.fieldname if isinstance(q, _LEAVES) else self.ix.fieldname
+        if not _is_term_tree(q, field, self.expand_terms):
             return None
-        terms = list(dict.fromkeys(leaf.text for leaf in q.leaves()))
-        postings = self._scored_postings(terms)
-        tree = _TermTree(self, terms)
+        terms: List[str] = []
+        for leaf in q.leaves():
+            if isinstance(leaf, Q.Term):
+                terms.append(leaf.text)
+            elif isinstance(leaf, Q._MultiTerm):
+                terms += self.expand_terms(leaf)
+            else:
+                terms += leaf.words
+        if not terms:  # only empty expansions: nothing can match
+            spark = self.ix.postings.sparkSession
+            return spark.createDataFrame([], "docid long, score double")
+        tree = _TermTree(self, list(dict.fromkeys(terms)))
         root = tree.compile(q)
-        out = postings.groupBy("docid").agg(*tree.aggs).select(
-            "docid", root.score.alias("score")
-        )
+        out = tree.frame().select("docid", root.score.alias("score"))
         if tree.total(root.cover):
             return out
         return out.where(F.col("score").isNotNull())
-
-    def _eval_phrase(self, q: Q.Phrase) -> DataFrame:
-        """Positional adjacency via higher-order functions (JVM-side).
-
-        Matched-position chain: m_1 = pos(w1); m_i = {p in pos(wi) | ∃ x in
-        m_{i-1}: 0 < p - x <= slop}; doc matches iff m_k nonempty.  Equivalent
-        to the reference's sorted-span intersection (spans.py:653-699) for
-        ordered adjacency.  Score = sum of the words' BM25 scores, like the
-        span matcher scoring through IntersectionMatcher (binary.py:95-96).
-        """
-        words = list(q.words)
-        slop = int(q.slop)
-        j = self._word_maps(words)
-
-        # the matched-position chain as ONE parsed SQL expression: each
-        # Python-lambda HOF costs a ~10-25 ms py4j conversion round-trip
-        # at plan-build time (round-6 measurement) vs ~1 ms to parse the
-        # identical SQL text JVM-side
-        m = f"element_at(_pm, {_sql_str(words[0])})"
-        for w in words[1:]:
-            m = (
-                f"filter(element_at(_pm, {_sql_str(w)}), "
-                f"p -> exists({m}, x -> p - x > 0 AND p - x <= {slop}))"
-            )
-        score = sum(
-            [F.element_at(F.col("_sm"), w) for w in words], F.lit(0.0)
-        )
-        return (
-            j.where(F.expr(f"size({m}) > 0"))
-            .select("docid", (score * F.lit(q.boost)).alias("score"))
-        )
-
-    def _word_maps(self, words: List[str]) -> DataFrame:
-        """ONE pushed scan + ONE aggregation for positional word queries:
-        per-doc maps term -> positions / term -> score, restricted to docs
-        containing every distinct word.  Replaces the per-word scan +
-        N-way docid join plan (N scans, N-1 joins -> 1 scan, 0 joins).
-
-        Candidate pre-prune (the relational leapfrog): only docs containing
-        the RAREST word can match, so when the df spread is meaningful the
-        other words' postings are semi-joined against the rare word's docids
-        BEFORE the map-building aggregation — the head word's full posting
-        list never flows through collect_list.  df comes from the per-search
-        stats lookup already cached for scoring (zero extra jobs); the
-        candidate frame is broadcast when the rare df is driver-known small."""
-        df = self._scored_postings(words, with_positions=True)
-        n = len(set(words))
-        if n > 1:
-            self._lookup_stats(words)
-            dfs = {w: self._df_cache[w] for w in set(words)}
-            rare = min(dfs, key=lambda w: (dfs[w], w))
-            # prune only when it pays: the aggregation input shrinks by the
-            # non-rare words' extra postings, which costs one more (pushed,
-            # single-term) scan + a semi-join
-            if 0 < dfs[rare] * 4 <= max(dfs.values()):
-                cand = (
-                    self.ix.postings.where(F.col("term") == rare)
-                    .select("docid")
-                )
-                if dfs[rare] <= PHRASE_BROADCAST_DF:
-                    cand = F.broadcast(cand)
-                df = df.join(cand, "docid", "left_semi")
-        # conditional-first aggregation, NOT map_from_entries(collect_list):
-        # per-word columns aggregate >2x faster at 1M docs (measured p50
-        # 1.75s -> 0.79s for a 2-word head phrase) because no per-row struct
-        # materialization or list buffering; the _pm/_sm maps are assembled
-        # AFTER the having-all-words filter, over result docs only
-        uniq = sorted(set(words))
-        aggs = []
-        for i, w in enumerate(uniq):
-            # parsed SQL (not F.first(F.when(...))): ~10 ms of py4j per
-            # aggregate column at plan-build time, identical expression
-            wl = _sql_str(w)
-            aggs.append(
-                F.expr(
-                    f"first(CASE WHEN term = {wl} THEN positions END, true)"
-                ).alias(f"_p{i}")
-            )
-            aggs.append(
-                F.expr(
-                    f"first(CASE WHEN term = {wl} THEN score END, true)"
-                ).alias(f"_s{i}")
-            )
-        g = df.groupBy("docid").agg(*aggs)
-        for i in range(n):
-            g = g.where(F.col(f"_p{i}").isNotNull())
-        keys = F.array(*[F.lit(w) for w in uniq])
-        return g.select(
-            "docid",
-            F.map_from_arrays(
-                keys, F.array(*[F.col(f"_p{i}") for i in range(n)])
-            ).alias("_pm"),
-            F.map_from_arrays(
-                keys, F.array(*[F.col(f"_s{i}") for i in range(n)])
-            ).alias("_sm"),
-        )
-
-    def _eval_ordered(self, q: Q.Ordered) -> DataFrame:
-        """Terms in increasing position order, any gap: m_i = positions of
-        word i having SOME earlier match before them; doc matches iff the
-        last word has a qualifying position.  Score = sum of term scores."""
-        words = list(q.words)
-        j = self._word_maps(words)
-
-        # single parsed SQL chain, like _eval_phrase (py4j lambda cost)
-        m = f"element_at(_pm, {_sql_str(words[0])})"
-        for w in words[1:]:
-            m = (
-                f"filter(element_at(_pm, {_sql_str(w)}), "
-                f"p -> exists({m}, x -> x < p))"
-            )
-        score = sum(
-            [F.element_at(F.col("_sm"), w) for w in words], F.lit(0.0)
-        )
-        return j.where(F.expr(f"size({m}) > 0")).select(
-            "docid", (score * F.lit(q.boost)).alias("score")
-        )
 
     def matched_terms(self, q: Q.Query) -> DataFrame:
         """TermsCollector analogue (collectors.py:1113+): which query terms

@@ -3,8 +3,10 @@
 The reference (query/spans.py:309-930) computes spans with per-doc Python
 matcher trees; here every span node evaluates to a DataFrame
 ``(docid, score, spans array<struct<s:int, e:int>>)`` and the combinators
-are array higher-order functions inside whole-stage codegen — the
-generalization of the planner's ``_eval_phrase`` machinery.
+are array higher-order functions inside whole-stage codegen.  A SpanNear2
+of plain Terms reads the planner's one-scan aggregate (the per-word score
+and positions columns of ``planner._TermTree``, which also evaluates
+Phrase and Ordered); every other node joins its children's frames.
 
 Semantics mirrored per node (reference file:line):
 - span leaf Term     -> one Span(p, p) per position (mcore.py:266-282)
@@ -261,27 +263,26 @@ class SpanEvaluator:
         if isinstance(q, SpanNear2) and all(
             isinstance(sq, Q.Term) for sq in q.qs
         ):
-            # fused all-Terms path: ONE pushed scan + ONE aggregation of
-            # per-doc term->positions/score maps (Searcher._word_maps),
-            # then the same near-window fold over the map entries
+            # all-Terms path: the planner's one scan and one aggregate of
+            # per-word score and positions columns (_TermTree), then the
+            # near-window fold over those columns
+            from whoosh_reloaded_spark.query.planner import _TermTree
+
             words = [sq.text for sq in q.qs]
-            j = self.s._word_maps(words)
-            spans = _pos_to_spans(F.element_at(F.col("_pm"), words[0]))
+            tree = _TermTree(self.s, list(dict.fromkeys(words)))
+            spans = _pos_to_spans(F.col(tree.positions(words[0])))
             for w in words[1:]:
                 spans = _near_combine(
-                    spans,
-                    _pos_to_spans(F.element_at(F.col("_pm"), w)),
+                    spans, _pos_to_spans(F.col(tree.positions(w))),
                     q.slop, q.ordered, q.mindist,
                 )
             score = sum(
-                [
-                    F.element_at(F.col("_sm"), sq.text) * F.lit(sq.boost)
-                    for sq in q.qs
-                ],
+                [tree.word(sq.text) * F.lit(sq.boost) for sq in q.qs],
                 F.lit(0.0),
             )
             return (
-                j.select("docid", score.alias("score"), spans.alias("spans"))
+                tree.frame()
+                .select("docid", score.alias("score"), spans.alias("spans"))
                 .where(F.size("spans") > 0)
             )
         if isinstance(q, SpanNear2):
