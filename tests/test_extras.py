@@ -129,7 +129,6 @@ def test_spelling_suggest_distributed_path(whoosh_ix, our_ix, monkeypatch):
     reference — no unbounded lexicon collect on either path."""
     import whoosh_reloaded_spark.spelling as sp
 
-    monkeypatch.setattr(sp, "FUZZY_DRIVER_LIMIT", 2)
     s = Searcher(our_ix)
     with whoosh_ix.searcher() as ws_:
         corrector = ws_.corrector("text")

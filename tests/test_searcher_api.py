@@ -8,7 +8,9 @@ ResultsPage.scored_length."""
 import pytest
 
 from whoosh_reloaded_spark.index import build_index
-from whoosh_reloaded_spark.query import Or, Prefix, Searcher, Term
+from whoosh_reloaded_spark.query import (
+    FuzzyTerm, Or, Prefix, Searcher, Term, TermRange, Variations,
+)
 
 DOCS = [
     ("u0", "alfa bravo charlie"),
@@ -170,3 +172,114 @@ def test_expand_cache_is_a_bounded_lru(spark, s, monkeypatch):
     assert _expand_jobs(spark, fresh, Prefix("f"), "wrs-expand-cold")
     # "e" and "c" were hits, so "d" was the least recently used
     assert list(fresh._expand_cache) == [repr(Prefix(p)) for p in "ecf"]
+
+
+@pytest.fixture(scope="module")
+def saved(spark, s, tmp_path_factory):
+    """The module's index saved and reopened: term_stats is then a plain
+    parquet scan, as every loaded index reads it."""
+    from whoosh_reloaded_spark.index import load_index, save_index
+
+    d = str(tmp_path_factory.mktemp("lexicon") / "ix")
+    save_index(s.ix, d)
+    return load_index(spark, d)
+
+
+@pytest.mark.parametrize("q", [
+    Prefix("del"),
+    FuzzyTerm("alfo", maxdist=1, prefixlength=0),
+    TermRange("bravo", "delta"),
+    Variations("delta"),
+], ids=repr)
+def test_fresh_multiterm_search_runs_one_lookup_job(spark, saved, q):
+    """An expansion's scan brings its terms' df and total_weight, so
+    planning a fresh multiterm search runs one lookup job, not an
+    expansion job plus a stats job."""
+    fresh = Searcher(saved)
+    sc = spark.sparkContext
+    group = f"wrs-plan-{type(q).__name__}"
+    sc.setJobGroup(group, "search() before execution")
+    try:
+        df = fresh.search(q, limit=10)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert df.collect()
+
+
+def _collected_plans(monkeypatch, ix):
+    """Record the executed plan of every DataFrame collected from now on."""
+    DataFrame = type(ix.postings)  # the session's concrete DataFrame class
+    plans = []
+    collect = DataFrame.collect
+
+    def recording(self):
+        rows = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return rows
+
+    monkeypatch.setattr(DataFrame, "collect", recording)
+    return plans
+
+
+def _python_udf_free(plans):
+    assert plans
+    for p in plans:
+        assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p, p
+
+
+def test_fuzzy_search_plans_hold_no_python_udf(saved, monkeypatch):
+    plans = _collected_plans(monkeypatch, saved)
+    rows = Searcher(saved).search(FuzzyTerm("delte", maxdist=1)).collect()
+    assert {r["uid"] for r in rows} == {"u2", "u3"}
+    _python_udf_free(plans)
+
+
+def test_overflowing_fuzzy_search_plans_hold_no_python_udf(saved, monkeypatch):
+    from whoosh_reloaded_spark.query import planner
+
+    monkeypatch.setattr(planner, "TOO_MANY_CLAUSES", 1)
+    q = FuzzyTerm("alfa", maxdist=4, prefixlength=0)
+    fresh = Searcher(saved)
+    assert fresh.expand_terms(q) is None
+    plans = _collected_plans(monkeypatch, saved)
+    rows = fresh.search(q, limit=None).collect()
+    want = {
+        u for u, text in DOCS
+        if any(planner.levenshtein_distance("alfa", w) <= 4 for w in text.split())
+    }
+    assert {r["uid"] for r in rows} == want
+    _python_udf_free(plans)
+
+
+def test_suggest_probe_plan_holds_no_python_udf(saved, monkeypatch):
+    plans = _collected_plans(monkeypatch, saved)
+    assert Searcher(saved).suggest("delte", maxdist=1) == ["delta"]
+    _python_udf_free(plans)
+
+
+def test_per_term_map_round_trips_exactly(spark):
+    """The term -> value map reaches the plan as SQL text: every double
+    comes back bit for bit, and every term, whatever it holds."""
+    import random
+    import struct
+
+    from whoosh_reloaded_spark.query.planner import _per_term
+
+    rng = random.Random(5)
+    alphabet = "ab'\"\\%_$\n\tçß東𐐨\u0301 "
+    values = {}
+    while len(values) < 1000:
+        term = "".join(rng.choices(alphabet, k=rng.randint(1, 8)))
+        bits = rng.getrandbits(64)
+        if (bits >> 52) & 0x7FF == 0x7FF:  # not a finite double
+            continue
+        values[term] = struct.unpack("<d", bits.to_bytes(8, "little"))[0]
+    frame = spark.createDataFrame([(t,) for t in values], "term string")
+    got = {
+        r["term"]: r["v"]
+        for r in frame.select("term", _per_term(values).alias("v")).collect()
+    }
+    assert got.keys() == values.keys()
+    for t, v in values.items():
+        assert struct.pack("<d", got[t]) == struct.pack("<d", v), (t, v)

@@ -114,7 +114,8 @@ def key_terms_from_text(searcher: Searcher, text: str, numterms: int = 5,
     Parity notes: the total weight `tt` sums EVERY analyzed token
     (including words absent from the index — Expander.add adds before the
     membership check), while scored candidates are only the words present
-    in the lexicon (one pushed `term IN` lookup, never a lexicon scan)."""
+    in the lexicon (read through the searcher's stats memo: at most one
+    pushed `term IN` lookup, never a lexicon scan)."""
     from collections import Counter
 
     from whoosh_reloaded_spark.analysis import StandardAnalyzer
@@ -126,17 +127,15 @@ def key_terms_from_text(searcher: Searcher, text: str, numterms: int = 5,
     if not weights:
         return []
     tt = float(sum(weights.values()))
-    rows = (
-        searcher.ix.term_stats.where(F.col("term").isin(list(weights)))
-        .select("term", F.col("total_weight").alias("cf"))
-        .collect()
-    )
+    stats = searcher._lookup_stats(list(weights))
     tlist = []
     maxscore = 0.0
-    for r in rows:
-        s = m.score(float(weights[r["term"]]), float(r["cf"]), tt)
-        maxscore = max(maxscore, s)
-        tlist.append((s, r["term"]))
+    for t, wt in weights.items():
+        df, cf = stats[t]
+        if df:
+            s = m.score(float(wt), cf, tt)
+            maxscore = max(maxscore, s)
+            tlist.append((s, t))
     if not tlist:
         return []
     norm = m.normalizer(maxscore, tt) if normalize else maxscore

@@ -283,6 +283,18 @@ def assign_docids(df: DataFrame, uid_col: str, num_partitions: int = 0) -> DataF
     return rank_docids(df, uid_col, num_partitions).docs
 
 
+def term_stats_of(postings: DataFrame) -> DataFrame:
+    """The term_stats table of a postings frame: per (field, term) the df,
+    the total and max weight and the shortest doc's length byte — the
+    TermInfo the reference keeps per term (codec/whoosh3.py:1179-1188)."""
+    return postings.groupBy("field", "term").agg(
+        F.count(F.lit(1)).alias("df"),
+        F.sum("weight").alias("total_weight"),
+        F.max("weight").alias("max_weight"),
+        F.min("len_byte").alias("min_len_byte"),
+    )
+
+
 def build_index(
     corpus: DataFrame,
     uid_col: str = "url",
@@ -419,12 +431,7 @@ def build_index(
         )
         docmeta = docmeta.join(vec, "docid", "left")
 
-    term_stats = postings.groupBy("field", "term").agg(
-        F.count(F.lit(1)).alias("df"),
-        F.sum("weight").alias("total_weight"),
-        F.max("weight").alias("max_weight"),
-        F.min("len_byte").alias("min_len_byte"),
-    )
+    term_stats = term_stats_of(postings)
 
     docs_raw = docs.select(
         "docid", F.col(uid_col).alias("uid"), *meta_cols
@@ -543,14 +550,8 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         wp = spark.read.parquet(f"{path}/postings")
 
         def _write_term_stats():
-            term_stats = wp.groupBy("field", "term").agg(
-                F.count(F.lit(1)).alias("df"),
-                F.sum("weight").alias("total_weight"),
-                F.max("weight").alias("max_weight"),
-                F.min("len_byte").alias("min_len_byte"),
-            )
             (
-                term_stats.repartitionByRange(
+                term_stats_of(wp).repartitionByRange(
                     max(1, term_partitions // 4), "term"
                 )
                 .sortWithinPartitions("term")

@@ -26,7 +26,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whoosh_reloaded_spark.index.build import InvertedIndex
+from whoosh_reloaded_spark.index.build import InvertedIndex, term_stats_of
 
 
 def _deleted_path(path: str) -> str:
@@ -116,14 +116,7 @@ def with_deleted(ix: InvertedIndex, deleted: Optional[DataFrame]) -> InvertedInd
     return InvertedIndex(
         docmeta=ix.docmeta.join(d, "docid", "left_anti"),
         postings=ix.postings.join(d, "docid", "left_anti"),
-        term_stats=ix.postings.join(d, "docid", "left_anti")
-        .groupBy("field", "term")
-        .agg(
-            F.count(F.lit(1)).alias("df"),
-            F.sum("weight").alias("total_weight"),
-            F.max("weight").alias("max_weight"),
-            F.min("len_byte").alias("min_len_byte"),
-        ),
+        term_stats=term_stats_of(ix.postings.join(d, "docid", "left_anti")),
         stats=None,  # recomputed lazily over live docs
         uid_col=ix.uid_col,
         fieldname=ix.fieldname,

@@ -29,10 +29,14 @@ combinator to a relational op:
                  == TakeOrderedAndProject, ties broken by LOWER docid first
                  exactly like the reference heap (collectors.py:466-483)
 
-idf values for the query's terms are looked up once per search and embedded
-as literals (the reference caches idf per searcher, searching.py:334-351) —
-no join against term_stats on the hot path.  Every score expression runs in
-whole-stage codegen; Python appears only in driver-side planning.
+A multiterm leaf expands with one pushed term_stats scan whose predicate
+is exact for every kind (FuzzyTerm included: Spark's native thresholded
+`levenshtein`), and that scan also brings each expansion term's df and
+total weight.  A searcher memoizes term -> (df, total weight) for every
+term it has looked up or expanded (the reference caches idf per searcher,
+searching.py:334-351), and idf/cf reach the plan as literals — no join
+against term_stats on the hot path.  Every expression runs in the JVM,
+most in whole-stage codegen; Python appears only in driver-side planning.
 """
 
 from __future__ import annotations
@@ -58,7 +62,6 @@ from whoosh_reloaded_spark.scoring import (
 )
 
 TOO_MANY_CLAUSES = 1024  # compound.py:282 heuristic bound for expansions
-FUZZY_DRIVER_LIMIT = 20_000  # fuzzy slices below this run the DP driver-side
 EXPAND_CACHE_SIZE = 256  # multiterm expansions memoized per Searcher (LRU)
 
 
@@ -90,19 +93,26 @@ def levenshtein_distance(a: str, b: str, limit: Optional[int] = None) -> int:
     return prev[lb]
 
 
-def _make_lev_match_udf(qtext: str, maxdist: int):
-    """Arrow-batched predicate: levenshtein_distance(qtext, term) <= maxdist.
-    Runs the DP on executors so fuzzy expansion never collects the
-    un-filtered lexicon slice to the driver."""
-    from pyspark.sql.functions import pandas_udf
+def fuzzy_predicate(text: str, maxdist: int, prefixlength: int):
+    """The exact pushed filter for lexicon terms within plain-Levenshtein
+    `maxdist` of `text` that share its first `prefixlength` characters: a
+    function mapping a term Column to a boolean Column.  The prefix slice
+    and the length window prune; Spark's native ``levenshtein(text, term,
+    maxdist)`` (-1 past the threshold) decides.  It counts the same
+    insert/delete/substitute edits per code point as levenshtein_distance,
+    with no Python UDF.  Fuzzy expansion and the spelling probe both
+    filter term_stats with it (the one lexicon walk of the reference's
+    terms_within, reading.py:516-544)."""
+    pre = text[:prefixlength]
+    n = len(text)
 
-    @pandas_udf("boolean")
-    def within(terms):
-        return terms.map(
-            lambda t: levenshtein_distance(qtext, t, maxdist) <= maxdist
+    def pred(c):
+        cond = (F.abs(F.length(c) - F.lit(n)) <= maxdist) & (
+            F.levenshtein(F.lit(text), c, maxdist) >= 0
         )
+        return c.startswith(pre) & cond if pre else cond
 
-    return within
+    return pred
 
 
 def range_condition(q) -> "F.Column":
@@ -148,14 +158,19 @@ def glob_literal_prefix(pat: str) -> str:
 
 def _per_term(values: Dict[str, float]) -> "F.Column":
     """A per-row value keyed by the row's term: one literal when every
-    term shares it, else a literal term -> value map lookup."""
+    term shares it, else a literal term -> value map lookup.  The map is
+    one parsed SQL expression: for 790 terms, two F.lit py4j calls per
+    term took 0.7-1.05 s (4 cores), the SQL text 3-4 ms plus about
+    100-200 ms more analysis.  A float is written as its shortest
+    round-trip repr with the D suffix, so the double is exact."""
     vals = set(values.values())
     if len(vals) == 1:
         return F.lit(next(iter(vals)))
-    pairs = []
-    for t, v in values.items():
-        pairs += [F.lit(t), F.lit(v)]
-    return F.element_at(F.create_map(*pairs), F.col("term"))
+    pairs = ", ".join(
+        f"{_sql_str(t)}, {v if isinstance(v, int) else repr(float(v)) + 'D'}"
+        for t, v in values.items()
+    )
+    return F.expr(f"element_at(map({pairs}), term)")
 
 
 def _union(frames: List[DataFrame]) -> DataFrame:
@@ -289,7 +304,7 @@ class _TermTree:
         return len(cover) == len(self.terms)
 
     def _live(self, term: str) -> bool:
-        return self.s._df_cache[term] > 0
+        return self.s._stats[term][0] > 0
 
     def compile(self, q: Q.Query) -> _Compiled:
         if isinstance(q, Q.Term):
@@ -458,9 +473,8 @@ class Searcher:
         self.N = int(stats["doc_count"])
         self.avgfl = float(stats["avg_field_length"]) or 1.0
         self.field_length = int(stats["field_length"])
-        self._idf_cache: Dict[str, float] = {}
-        self._df_cache: Dict[str, int] = {}
-        self._cf_cache: Dict[str, float] = {}
+        # term -> (df, total weight): every term looked up or expanded
+        self._stats: Dict[str, Tuple[int, float]] = {}
         # multiterm expansion memo (see expand_terms), keyed by the node's
         # repr: round 6 found 3 of the 5 per-repetition Spark jobs of every
         # multiterm bench query were repeated expansion lookups
@@ -470,21 +484,27 @@ class Searcher:
 
     # -- statistics ----------------------------------------------------------
 
-    def _lookup_stats(self, terms: Sequence[str]) -> None:
-        missing = [t for t in set(terms) if t not in self._df_cache]
-        if not missing:
-            return
-        rows = (
-            self.ix.term_stats.where(F.col("term").isin(missing))
-            .select("term", "df", "total_weight")
-            .collect()
-        )
-        found = {r["term"]: (int(r["df"]), float(r["total_weight"])) for r in rows}
-        for t in missing:
-            df, cf = found.get(t, (0, 0.0))
-            self._df_cache[t] = df
-            self._cf_cache[t] = cf
-            self._idf_cache[t] = idf_value(self.N, df)
+    def _lookup_stats(
+        self, terms: Sequence[str]
+    ) -> Dict[str, Tuple[int, float]]:
+        """The memo of term -> (df, total weight), after one term_stats
+        lookup job for the `terms` it lacks; a term absent from the
+        lexicon is (0, 0.0)."""
+        missing = [t for t in set(terms) if t not in self._stats]
+        if missing:
+            rows = (
+                self.ix.term_stats.where(F.col("term").isin(missing))
+                .select("term", "df", "total_weight")
+                .collect()
+            )
+            self._stats.update(dict.fromkeys(missing, (0, 0.0)))
+            self._remember(rows)
+        return self._stats
+
+    def _remember(self, rows) -> None:
+        """Memoize the (term, df, total_weight) rows of a term_stats scan."""
+        for r in rows:
+            self._stats[r["term"]] = (int(r["df"]), float(r["total_weight"]))
 
     def score_context(
         self, terms: Sequence[str],
@@ -493,18 +513,14 @@ class Searcher:
         """Build a ScoreContext for `terms` with idf/cf literal maps.
         Single-term contexts embed plain literals (no per-row map lookup);
         distinct-valued stats collapse the same way."""
-        self._lookup_stats(terms)
+        stats = self._lookup_stats(terms)
         uniq = list(dict.fromkeys(terms))
-
-        def _stat_col(cache: Dict[str, float]) -> "F.Column":
-            return _per_term({t: cache[t] for t in uniq})
-
         return ScoreContext(
             weight=weight if weight is not None else F.col("weight"),
             len_byte=len_byte if len_byte is not None else F.col("len_byte"),
             length=length if length is not None else F.col("length"),
-            idf=_stat_col(self._idf_cache),
-            cf=_stat_col(self._cf_cache),
+            idf=_per_term({t: idf_value(self.N, stats[t][0]) for t in uniq}),
+            cf=_per_term({t: stats[t][1] for t in uniq}),
             N=self.N,
             avgfl=self.avgfl,
             field_length=self.field_length,
@@ -584,11 +600,10 @@ class Searcher:
 
     def _pattern_predicate(self, q: Q.Query):
         """Pushdown predicate builder for a multiterm query: a function
-        mapping a term Column to a boolean Column.  EXACT for Prefix/
-        Wildcard/Regex/TermRange/Variations; a SUPERSET (prefix slice +
-        length window) for FuzzyTerm, whose exact filter is the Levenshtein DP.
-        Applicable to term_stats AND postings — both carry `term`, so the
-        same predicate reaches both parquet scans as a pushed filter."""
+        mapping a term Column to a boolean Column, EXACT for every kind —
+        FuzzyTerm through fuzzy_predicate.  Applicable to term_stats AND
+        postings — both carry `term`, so the same predicate reaches both
+        parquet scans as a filter."""
         if isinstance(q, Q.Prefix):
             return lambda c: c.startswith(q.text)
         if isinstance(q, Q.Wildcard):
@@ -617,35 +632,27 @@ class Searcher:
             cand = sorted(set(variations(q.text)))
             return lambda c: c.isin(cand)
         if isinstance(q, Q.FuzzyTerm):
-            pre = q.text[: q.prefixlength]
-            n = len(q.text)
-
-            def _window(c):
-                cond = F.abs(F.length(c) - F.lit(n)) <= q.maxdist
-                if pre:
-                    cond = c.startswith(pre) & cond
-                return cond
-
-            return _window
+            return fuzzy_predicate(q.text, q.maxdist, q.prefixlength)
         raise TypeError(f"not a multiterm query: {q!r}")
 
     def _multiterm_frame(self, q: Q.Query) -> DataFrame:
         """EXACT matching lexicon slice as a DataFrame (term, df,
         total_weight) — the relational counterpart of the reference's full
-        expansion (terms.py:293-307), with no driver round-trip.  Fuzzy
-        adds the distributed Levenshtein Arrow-UDF filter on top of the
-        pushed superset window."""
+        expansion (terms.py:293-307)."""
         pred = self._pattern_predicate(q)
-        c = self.ix.term_stats.where(pred(F.col("term")))
-        if isinstance(q, Q.FuzzyTerm):
-            within = _make_lev_match_udf(q.text, q.maxdist)
-            c = c.where(within(F.col("term")))
-        return c.select("term", "df", "total_weight")
+        return self.ix.term_stats.where(pred(F.col("term"))).select(
+            "term", "df", "total_weight"
+        )
 
     def expand_terms(self, q: Q.Query) -> Optional[List[str]]:
         """Driver-side expansion when it is SMALL: the matching terms
         (<= TOO_MANY_CLAUSES of them) as a sorted list, for the pushed
-        `term IN (...)` scan plan.  Returns **None** when the expansion
+        `term IN (...)` scan plan.  Every kind expands the same way: one
+        term_stats scan under the exact _pattern_predicate, capped at
+        TOO_MANY_CLAUSES + 1 rows before collect, whose df and total_weight
+        fill the stats memo (Variations looks its few candidates up
+        through that memo), so planning the expansion's scan runs no
+        second lookup job.  Returns **None** when the expansion
         overflows TOO_MANY_CLAUSES — callers then switch to the relational
         postings<->lexicon-frame join plan (`_scored_postings_rel`), which
         expands FULLY with zero driver round-trip.  The reference expands
@@ -655,7 +662,7 @@ class Searcher:
 
         Expansions are memoized per searcher in an LRU of
         EXPAND_CACHE_SIZE entries: the index is an immutable snapshot
-        (like the stats caches), so a repeated node expands identically
+        (like the stats memo), so a repeated node expands identically
         and runs no lookup job.  Repeated searches — bench reps and the
         benchmark's memo-hit repeats among them — therefore report the
         memoized steady state, not the cost of a cold expansion."""
@@ -672,51 +679,20 @@ class Searcher:
 
     def _expand_terms_uncached(self, q: Q.Query) -> Optional[List[str]]:
         if isinstance(q, Q.Variations):
-            # driver-side candidate generation (a few dozen), then one
-            # pushed IN-filter scan keeps lexicon members (terms.py:551-561)
+            # driver-side candidates (a few dozen), kept where the lexicon
+            # holds them (terms.py:551-561): one stats lookup
             from whoosh_reloaded_spark.variations import variations
 
             cand = sorted(set(variations(q.text)))
-            rows = (
-                self.ix.term_stats.where(F.col("term").isin(cand))
-                .select("term")
-                .collect()
-            )
-            return sorted(r["term"] for r in rows)
-        pred = self._pattern_predicate(q)
-        c = self.ix.term_stats.where(pred(F.col("term")))
-        if isinstance(q, Q.FuzzyTerm):
-            # bounded probe: collect at most LIMIT+1 windowed terms; a small
-            # slice (the common case — prefix + length window prune hard)
-            # runs the DP on the driver with no extra Python-worker job.  A
-            # head-term slice falls back to the distributed Arrow UDF with
-            # the TOO_MANY_CLAUSES cap applied BEFORE collect, so no path
-            # ever collects an unbounded term list (round-2 ADVICE fix).
-            cand = [
-                r["term"]
-                for r in c.select("term").limit(FUZZY_DRIVER_LIMIT + 1).collect()
-            ]
-            if len(cand) <= FUZZY_DRIVER_LIMIT:
-                out = sorted(
-                    t
-                    for t in cand
-                    if levenshtein_distance(q.text, t, q.maxdist)
-                    <= q.maxdist
-                )
-                return out if len(out) <= TOO_MANY_CLAUSES else None
-            within = _make_lev_match_udf(q.text, q.maxdist)
-            matches = (
-                c.select("term")
-                .where(within(F.col("term")))
-                .limit(TOO_MANY_CLAUSES + 1)
-                .collect()
-            )
-            if len(matches) > TOO_MANY_CLAUSES:
-                return None
-            return sorted(r["term"] for r in matches)
-        rows = c.select("term").limit(TOO_MANY_CLAUSES + 1).collect()
+            stats = self._lookup_stats(cand)
+            return [t for t in cand if stats[t][0] > 0]
+        # one pushed scan, capped before collect so no path collects an
+        # unbounded term list; its df / total_weight fill the stats memo,
+        # so scoring the expansion runs no second lookup
+        rows = self._multiterm_frame(q).limit(TOO_MANY_CLAUSES + 1).collect()
         if len(rows) > TOO_MANY_CLAUSES:
             return None
+        self._remember(rows)
         return sorted(r["term"] for r in rows)
 
     def _scored_postings_rel(
@@ -792,8 +768,7 @@ class Searcher:
             # a re-weighted subtree builds the same term matchers
             return self._tm_frame(q.child)
         if isinstance(q, Q.Term):
-            self._lookup_stats([q.text])
-            if self._df_cache[q.text] == 0:
+            if self._lookup_stats([q.text])[q.text][0] == 0:
                 return None  # dead term: constant 0 fallback is exact
             return self.ix.postings.where(
                 F.col("term") == q.text
@@ -904,14 +879,13 @@ class Searcher:
             # would prune them, and that path is the reference's
             # exhaustion artifact (test_reference_coord_exhaustion_
             # artifact), not semantics we mirror.
-            self._lookup_stats([q.text])
-            return 1 if self._df_cache[q.text] > 0 else 0
+            return 1 if self._lookup_stats([q.text])[q.text][0] > 0 else 0
         if isinstance(q, (Q.Phrase, Q.Ordered)):
             # Phrase.matcher returns NullMatcher wholesale when ANY word
             # is missing from the field (positional.py is_leaf check), so
             # a phrase contributes len(words) live matchers or none
-            self._lookup_stats(list(q.words))
-            if all(self._df_cache[w] > 0 for w in q.words):
+            stats = self._lookup_stats(q.words)
+            if all(stats[w][0] > 0 for w in q.words):
                 return len(q.words)
             return 0
         if isinstance(q, Q._MultiTerm):
@@ -995,7 +969,7 @@ class Searcher:
                 # term matchers active at the doc.  Each child frame carries
                 # its term-matcher count; when a child matches, all of its
                 # term matchers are active (exact for Term/Phrase/Ordered/
-                # And; Not contributes 0).  Pre-warm the df cache in ONE
+                # And; Not contributes 0).  Pre-warm the stats memo in ONE
                 # lexicon lookup so the per-child live-matcher counts
                 # don't each pay a driver round-trip.
                 self._lookup_stats([t for _, t in q.iter_all_terms()])
@@ -1329,8 +1303,7 @@ class Searcher:
 
     def doc_frequency(self, term: str) -> int:
         """df of a term, 0 when absent (IndexReader.doc_frequency)."""
-        self._lookup_stats([term])
-        return self._df_cache[term]
+        return self._lookup_stats([term])[term][0]
 
     def vector(self, docnum: int) -> Dict[str, float]:
         """Forward-index term vector {term: weight} for one doc
@@ -1382,8 +1355,7 @@ class Searcher:
 
     def frequency(self, term: str) -> float:
         """Total collection weight of a term (IndexReader.frequency)."""
-        self._lookup_stats([term])
-        return self._cf_cache[term]
+        return self._lookup_stats([term])[term][1]
 
     def doc_count(self) -> int:
         return self.N
@@ -1416,8 +1388,7 @@ class Searcher:
         """Cached IDF of a term (Searcher.idf, searching.py) — accepts
         (fieldname, text) like the reference; the single indexed field
         makes fieldname advisory."""
-        self._lookup_stats([text])
-        return self._idf_cache[text]
+        return idf_value(self.N, self._lookup_stats([text])[text][0])
 
     def reader(self) -> "InvertedIndex":
         """The reference returns its IndexReader; the analogous handle
@@ -1747,13 +1718,8 @@ class Results:
             if fieldname is None or fn == fieldname:
                 texts.add((fn, text))
         if texts:
-            present = {
-                r["term"]
-                for r in s.ix.term_stats.where(
-                    F.col("term").isin([t for _, t in texts])
-                ).select("term").collect()
-            }
-            out |= {(fn, t) for fn, t in texts if t in present}
+            stats = s._lookup_stats([t for _, t in texts])
+            out |= {(fn, t) for fn, t in texts if stats[t][0] > 0}
         if expand:
             for leaf in self._q.leaves():
                 if isinstance(leaf, Q._MultiTerm):

@@ -9,9 +9,12 @@ maxdist, not the term's actual distance — ranking is therefore frequency
 descending, then alphabetical; we replicate that exactly) and the top
 `limit` are returned sorted by (score desc, term asc).
 
-The lexicon slice is a pushed-down prefix + length-window scan of
-term_stats; the DP distance runs on the (small) collected candidate set,
-like reading.py:516-544.
+Both :func:`suggest` and :class:`ReaderCorrector` read their candidates
+from one probe (:func:`_candidates`): a single term_stats scan filtered by
+planner.fuzzy_predicate, the exact prefix + length-window + native
+``levenshtein`` predicate fuzzy expansion uses, so only the matching
+terms reach the driver and no Python UDF runs (reading.py:516-544 walks
+the lexicon the same way).
 """
 
 from __future__ import annotations
@@ -22,55 +25,37 @@ from typing import Dict, List, Optional, Tuple
 from pyspark.sql import functions as F
 
 from whoosh_reloaded_spark.query.planner import (
-    FUZZY_DRIVER_LIMIT,
     Searcher,
-    _make_lev_match_udf,
+    fuzzy_predicate,
     levenshtein_distance,
 )
 
 
-def suggest(searcher: Searcher, text: str, limit: int = 5, maxdist: int = 2,
-            prefix: int = 0, fieldname: Optional[str] = None) -> List[str]:
-    ts = searcher.ix.term_stats
-    c = ts
+def _candidates(searcher: Searcher, text: str, maxdist: int, prefix: int,
+                fieldname: Optional[str]) -> List[Tuple[str, float]]:
+    """(term, total_weight) of every lexicon term of `fieldname` (any
+    field when None) within plain-Levenshtein `maxdist` of `text` that
+    shares its first `prefix` characters: one pushed term_stats scan."""
+    c = searcher.ix.term_stats
     if fieldname is not None:
         c = c.where(F.col("field") == fieldname)
-    if prefix:
-        c = c.where(F.col("term").startswith(text[:prefix]))
-    # length pushdown: |len(term) - len(text)| <= maxdist
-    c = c.where(
-        (F.length("term") >= len(text) - maxdist)
-        & (F.length("term") <= len(text) + maxdist)
+    rows = (
+        c.where(fuzzy_predicate(text, maxdist, prefix)(F.col("term")))
+        .select("term", "total_weight")
+        .collect()
     )
-    # bounded probe (same pattern as fuzzy expansion, planner.py): a small
-    # windowed slice runs the DP driver-side with no extra Python-worker
-    # job; a head-size slice (prefix=0 over a huge lexicon) runs the
-    # Levenshtein DP DISTRIBUTED in an Arrow-batched pandas UDF and
-    # collects only the matches — no path collects an unbounded slice.
-    probe = c.select("term", "total_weight").limit(
-        FUZZY_DRIVER_LIMIT + 1
-    ).collect()
-    if len(probe) > FUZZY_DRIVER_LIMIT:
-        within = _make_lev_match_udf(text, maxdist)
-        probe = (
-            c.where(within(F.col("term")))
-            .select("term", "total_weight")
-            .collect()
-        )
-        pairs = [(r["term"], float(r["total_weight"])) for r in probe]
-    else:
-        pairs = [
-            (r["term"], float(r["total_weight"]))
-            for r in probe
-            if levenshtein_distance(text, r["term"], maxdist) <= maxdist
-        ]
+    return [(r["term"], float(r["total_weight"])) for r in rows]
+
+
+def suggest(searcher: Searcher, text: str, limit: int = 5, maxdist: int = 2,
+            prefix: int = 0, fieldname: Optional[str] = None) -> List[str]:
     # NOTE: the word itself IS suggested when present — the reference's
     # Corrector.suggest docstring (spelling.py:48-52) claims otherwise, but
     # terms_within yields distance-0 matches and the reference's own
     # test_reader_corrector asserts suggest("koala") == ["koala", "zoala"];
     # observed behavior wins (document-and-mirror convention)
     scored = []
-    for t, f in pairs:
+    for t, f in _candidates(searcher, text, maxdist, prefix, fieldname):
         score = 0.0 - (maxdist + (1.0 / (f or 1.0) * 0.5))
         scored.append((score, t))
     scored.sort(key=lambda x: (0 - x[0], x[1]))
@@ -104,8 +89,8 @@ class Corrector:
 class ReaderCorrector(Corrector):
     """Index-lexicon corrector (reference spelling.py:90-115) bound to a
     Searcher: candidates within plain-Levenshtein `maxdist`, scored
-    ``-(maxdist + 0.5/frequency)`` — the distributed bounded-probe scan
-    of :func:`suggest` packaged as a composable Corrector."""
+    ``-(maxdist + 0.5/frequency)`` — the lexicon probe of :func:`suggest`
+    packaged as a composable Corrector."""
 
     def __init__(self, searcher: "Searcher",
                  fieldname: Optional[str] = None):
@@ -113,35 +98,9 @@ class ReaderCorrector(Corrector):
         self.fieldname = fieldname
 
     def _suggestions(self, text, maxdist, prefix):
-        ts = self.searcher.ix.term_stats
-        c = ts
-        if self.fieldname is not None:
-            c = c.where(F.col("field") == self.fieldname)
-        if prefix:
-            c = c.where(F.col("term").startswith(text[:prefix]))
-        c = c.where(
-            (F.length("term") >= len(text) - maxdist)
-            & (F.length("term") <= len(text) + maxdist)
-        )
-        probe = c.select("term", "total_weight").limit(
-            FUZZY_DRIVER_LIMIT + 1
-        ).collect()
-        if len(probe) > FUZZY_DRIVER_LIMIT:
-            within = _make_lev_match_udf(text, maxdist)
-            probe = (
-                c.where(within(F.col("term")))
-                .select("term", "total_weight")
-                .collect()
-            )
-            pairs = [(r["term"], float(r["total_weight"])) for r in probe]
-        else:
-            pairs = [
-                (r["term"], float(r["total_weight"]))
-                for r in probe
-                if levenshtein_distance(text, r["term"], maxdist)
-                <= maxdist
-            ]
-        for t, f in pairs:
+        for t, f in _candidates(
+            self.searcher, text, maxdist, prefix, self.fieldname
+        ):
             yield (0.0 - (maxdist + (1.0 / (f or 1.0) * 0.5)), t)
 
 
@@ -349,8 +308,8 @@ def correct_query(searcher: Searcher, q, qstring: Optional[str],
     (searching.py:946-951).
 
     Missing-term detection is ONE pushed `term IN (...)` scan over
-    term_stats (never a lexicon collect); suggestions reuse the bounded
-    probe / distributed-Levenshtein path of :func:`suggest`.
+    term_stats (never a lexicon collect); suggestions reuse the lexicon
+    probe of :func:`suggest`.
 
     String correction scans `qstring` with the analyzer token pattern and
     replaces every occurrence of a corrected word, so a word appearing
