@@ -47,3 +47,19 @@ def reference_importable() -> bool:
         except Exception:
             return False
     return False
+
+
+def final_plan(df) -> str:
+    """The final adaptive plan of a collected DataFrame, without the
+    initial plan that AQE prints after it."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
+def postings_scans(plan: str) -> list:
+    """The postings table's parquet scans in a plan string."""
+    return [
+        ln for ln in plan.splitlines()
+        if "FileScan parquet" in ln and "/postings" in ln
+    ]

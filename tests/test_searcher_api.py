@@ -258,13 +258,36 @@ def test_suggest_probe_plan_holds_no_python_udf(saved, monkeypatch):
     _python_udf_free(plans)
 
 
+def test_weighting_query_shares_the_stats_memo(spark, saved):
+    """A WeightingQuery plans its child with this searcher's stats memo
+    and expansion cache, so memoized terms run no lookup job."""
+    from whoosh_reloaded_spark.query import WeightingQuery
+    from whoosh_reloaded_spark.scoring import TF_IDF
+
+    fresh = Searcher(saved)
+    q = Or([Term(w) for w in ("alfa", "bravo", "charlie", "delta", "echo")])
+    assert fresh.search(q).collect()
+    sc = spark.sparkContext
+    group = "wrs-plan-weighting"
+    sc.setJobGroup(group, "search() before execution")
+    try:
+        df = fresh.search(WeightingQuery(q, TF_IDF()), limit=10)
+    finally:
+        sc.setJobGroup(None, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert df.collect()
+
+
 def test_per_term_map_round_trips_exactly(spark):
-    """The term -> value map reaches the plan as SQL text: every double
-    comes back bit for bit, and every term, whatever it holds."""
+    """The term -> value map and the `term IN` filter reach the plan as
+    SQL text: every double comes back bit for bit, and every term,
+    whatever it holds, selects exactly its own row."""
     import random
     import struct
 
-    from whoosh_reloaded_spark.query.planner import _per_term
+    from pyspark.sql import functions as F
+
+    from whoosh_reloaded_spark.query.planner import _per_term, term_in
 
     rng = random.Random(5)
     alphabet = "ab'\"\\%_$\n\tçß東𐐨\u0301 "
@@ -283,3 +306,17 @@ def test_per_term_map_round_trips_exactly(spark):
     assert got.keys() == values.keys()
     for t, v in values.items():
         assert struct.pack("<d", got[t]) == struct.pack("<d", v), (t, v)
+    # term_in: one flag column per term, 100 terms a pass
+    terms = list(values)
+    for lo in range(0, len(terms), 100):
+        chunk = terms[lo:lo + 100]
+        flags = frame.select(
+            "term", *[F.expr(term_in([t])).alias(f"f{i}")
+                      for i, t in enumerate(chunk)]
+        ).collect()
+        for r in flags:
+            assert [i for i in range(len(chunk)) if r[f"f{i}"]] == (
+                [chunk.index(r["term"])] if r["term"] in chunk else []
+            ), r["term"]
+    assert frame.where(term_in(terms)).count() == len(terms)
+    assert frame.where(term_in([])).count() == 0

@@ -305,7 +305,6 @@ def build_index(
     field_boost: float = 1.0,
     num_partitions: int = 0,
     with_docids: bool = False,
-    cache_intermediate: bool = True,
     format: str = "positions",
     store_vector: bool = False,
     boost_delim: Optional[str] = None,

@@ -17,12 +17,9 @@ docid) restores the data-skipping layout.
 
 from __future__ import annotations
 
-import json
-import os
-import time
-from typing import List, Optional
+from typing import List
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from whoosh_reloaded_spark.index.build import (

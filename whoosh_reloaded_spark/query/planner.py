@@ -2,20 +2,25 @@
 
 The reference executes queries with a single-threaded pull-based Matcher tree
 (src/whoosh/matching/*.py); here each AST node evaluates to a docid-unique
-DataFrame of ``(docid, score)``.  A boolean tree whose leaves are terms,
-phrases, Ordereds and small multiterm expansions — or one such leaf alone —
-compiles to ONE pushed postings scan and ONE groupBy(docid), its operators
-becoming column expressions over per-word score and positions aggregates
-(Searcher._eval_term_tree):
+DataFrame of ``(docid, score)``.  Every query over postings — a boolean
+tree whose leaves are terms, phrases, Ordereds, multiterm expansions and
+span queries, or one such leaf alone — compiles to ONE groupBy(docid) over
+one pushed postings scan, its operators becoming column expressions over
+per-word score and positions aggregates (Searcher._eval_term_tree):
 
     Phrase    -> per-word first(positions) columns + a higher-order-function
                  adjacency chain over them (spans.py:653-699 semantics)
     Ordered   -> the same columns, each word after some earlier match
-    Prefix/Wildcard/Fuzzy/... -> an Or of the expansion's terms
+    Prefix/Wildcard/Fuzzy/... -> an Or of the expansion's terms; an
+                 expansion past TOO_MANY_CLAUSES adds its own tagged
+                 postings rows (_scored_postings_rel) to the aggregate
+    Span*     -> (score, spans) columns (query/spans.py)
 
-Any other tree (spans, Every, ranges, overflowing expansions, leaves on
-another field, the WeightingQuery-wrapped differential) maps each
-combinator to a relational op:
+Only the trees with a leaf that is not over this field's postings (Every,
+ranges, ColumnQuery, nested queries, wrappers such as ConstantScore,
+Otherwise and WeightingQuery — the last also reaches the differential
+oracle — and leaves on another field) map each combinator to a
+relational op, each compilable subtree planned as above:
 
     And       -> union + groupBy(docid) having count == n, score = sum
                  (IntersectionMatcher sums scores, matching/binary.py:95-96)
@@ -54,6 +59,7 @@ from pyspark.sql import functions as F
 
 from whoosh_reloaded_spark.index.build import InvertedIndex
 from whoosh_reloaded_spark.query import ast as Q
+from whoosh_reloaded_spark.query.spans import SpanQuery, span_columns
 from whoosh_reloaded_spark.scoring import (
     BM25F,
     ScoreContext,
@@ -134,6 +140,15 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+def term_in(terms: Sequence[str]) -> str:
+    """The SQL filter `term IN (...)` over a term set, each term written by
+    _sql_str: `isin` makes one py4j literal per term, which took 525-747 ms
+    for 790 terms.  An empty set is FALSE."""
+    if not terms:
+        return "FALSE"
+    return f"term IN ({', '.join(_sql_str(t) for t in terms)})"
+
+
 def glob_to_java_regex(pat: str) -> str:
     """Translate a * / ? glob into an anchored Java regex for rlike()."""
     out = []
@@ -197,43 +212,47 @@ def _all_sum(cols: List[Optional["F.Column"]]) -> Optional["F.Column"]:
 
 # the operators Searcher._eval_term_tree compiles (plus Not under an And)
 _TREE_NODES = (Q.And, Q.Or, Q.DisjunctionMax, Q.AndNot, Q.Require, Q.AndMaybe)
-# ... and its leaves; a _MultiTerm only when its expansion is small
+# ... and its leaves, besides span queries
 _LEAVES = (Q.Term, Q.Phrase, Q.Ordered, Q._MultiTerm)
 
 
-def _is_term_tree(
-    q: Q.Query, fieldname: str, expand, under_and: bool = False
-) -> bool:
+def _is_term_tree(q: Q.Query, fieldname: str, under_and: bool = False) -> bool:
     """True for a _TREE_NODES tree (or a bare leaf) whose leaves are
-    Terms, Phrases, Ordereds or multiterm leaves whose `expand` (the
-    searcher's expand_terms) is not None, all on `fieldname`, where a Not
-    is only the child of an And that also has a positive child — so
-    every doc the tree matches holds one of its terms."""
+    Terms, Phrases, Ordereds or multiterm leaves on `fieldname`, or span
+    queries (whose own leaves' fieldnames are not read), where a Not is
+    only the child of an And that also has a positive child — so every
+    doc the tree matches holds one of its leaves' postings rows."""
+    if isinstance(q, SpanQuery):
+        return True
     if isinstance(q, _LEAVES):
-        if q.fieldname != fieldname:
-            return False
-        return not isinstance(q, Q._MultiTerm) or expand(q) is not None
+        return q.fieldname == fieldname
     if isinstance(q, Q.Not):
-        return under_and and _is_term_tree(q.child, fieldname, expand)
+        return under_and and _is_term_tree(q.child, fieldname)
     if isinstance(q, (Q.AndNot, Q.Require, Q.AndMaybe)):
-        return (
-            _is_term_tree(q.a, fieldname, expand)
-            and _is_term_tree(q.b, fieldname, expand)
-        )
+        return _is_term_tree(q.a, fieldname) and _is_term_tree(q.b, fieldname)
     if not isinstance(q, _TREE_NODES) or not q.children:
         return False
     is_and = isinstance(q, Q.And)
     if is_and and all(isinstance(c, Q.Not) for c in q.children):
         return False
-    return all(_is_term_tree(c, fieldname, expand, is_and) for c in q.children)
+    return all(_is_term_tree(c, fieldname, is_and) for c in q.children)
 
 
 class _Compiled(NamedTuple):
     score: "F.Column"  # NULL exactly where the node does not match
     tm: Optional["F.Column"]  # live term matchers at the doc (see _TermTree)
-    # terms whose every doc the node matches; the node is set at every
-    # doc of the aggregate when this covers all of the tree's terms
-    cover: FrozenSet[str] = frozenset()
+    # terms (and indices of overflowing leaves) whose every doc the node
+    # matches; the node is set at every doc of the aggregate when this
+    # covers all of the tree's terms and overflowing leaves
+    cover: FrozenSet = frozenset()
+
+
+def _term_boosts(terms: Sequence[Q.Term]) -> Dict[str, float]:
+    """term -> the summed boosts of the Terms that name it."""
+    boost: Dict[str, float] = {}
+    for t in terms:
+        boost[t.text] = boost.get(t.text, 0.0) + t.boost
+    return boost
 
 
 class _TermTree:
@@ -246,37 +265,94 @@ class _TermTree:
     `greatest` (which skips NULLs), AndNot and Require gate `a` on `b`
     being NULL or set.  A word has one score column (`word`), shared by
     its Term leaves and the phrases that hold it, and one positions
-    column (`positions`) when a positional leaf reads it.  `tm` mirrors
-    Searcher._tm_frame for the scaled-Or matching count: the node's live
-    term matchers active at the doc, NULL where its frame has no row, or
-    None where _tm_frame has no frame and the count falls back to
-    _matching_term_count.  Catalyst prunes the aggregates nothing reads,
-    so unused counts cost nothing."""
+    column (`positions`) when a positional leaf reads it; a span leaf
+    over a term set reads one positions union (`span_leaf`), and a span
+    query is a leaf whose (score, spans) columns query/spans.py builds.
+    `tm` mirrors Searcher._tm_frame for the scaled-Or matching count: the
+    node's live term matchers active at the doc, NULL where its frame has
+    no row, or None where _tm_frame has no frame (spans, overflowing
+    expansions) and the count falls back to _matching_term_count.
+    Catalyst prunes the aggregates nothing reads, so unused counts cost
+    nothing.
 
-    def __init__(self, searcher: "Searcher", terms: List[str]):
+    An overflowing multiterm leaf (`rels`: its expansion passed
+    TOO_MANY_CLAUSES) adds its _scored_postings_rel rows to the same
+    aggregate, tagged `_leaf` = its index and with a NULL term, so a term
+    that is both scanned and matched by the leaf's pattern counts once per
+    leaf.  A tree without one has no tag column and no union."""
+
+    def __init__(
+        self, searcher: "Searcher", terms: List[str], rels: Sequence = ()
+    ):
         self.s = searcher
         self.terms = terms
+        self.rels = list(rels)
         self.aggs: List["F.Column"] = []
         self._words: Dict[str, "F.Column"] = {}
-        self._positions: Dict[str, str] = {}
+        self._positions: Dict[object, str] = {}
         # one stats lookup for every scanned term, before any leaf asks
         searcher._lookup_stats(terms)
 
-    def frame(self) -> DataFrame:
-        """The one pushed `term IN` scan, grouped by docid into `aggs`;
-        positions are read only when a positional leaf asked for them."""
-        postings = self.s._scored_postings(
-            self.terms, with_positions=bool(self._positions)
+    @classmethod
+    def of(cls, searcher: "Searcher", q: Q.Query) -> "_TermTree":
+        """The tree over q's leaves: Terms, phrase words and small
+        expansions join the one scan, overflowing expansions are rels."""
+        terms: List[str] = []
+        rels: List[Q.Query] = []
+        for leaf in q.leaves():
+            if isinstance(leaf, Q.Term):
+                terms.append(leaf.text)
+            elif isinstance(leaf, (Q.Phrase, Q.Ordered)):
+                terms += leaf.words
+            elif isinstance(leaf, Q._MultiTerm):
+                texts = searcher.expand_terms(leaf)
+                if texts is None:
+                    rels.append(leaf)
+                else:
+                    terms += texts
+        return cls(
+            searcher, list(dict.fromkeys(terms)), list(dict.fromkeys(rels))
         )
-        return postings.groupBy("docid").agg(*self.aggs)
 
-    def _agg(self, terms, value: "F.Column") -> "F.Column":
-        """sum(value) over the doc's rows of `terms`; NULL where it has none."""
-        if len(terms) < len(self.terms):
-            value = F.when(F.col("term").isin(list(terms)), value)
+    def frame(self) -> DataFrame:
+        """The one pushed `term IN` scan and each overflowing leaf's rows,
+        grouped by docid into `aggs`; positions are read only when a
+        positional leaf asked for them."""
+        pos = bool(self._positions)
+        parts = [self.s._scored_postings(self.terms, pos)] if self.terms else []
+        for i, leaf in enumerate(self.rels):
+            rel = self.s._scored_postings_rel(leaf, pos).drop("term")
+            parts.append(rel.withColumn("_leaf", F.lit(i)))
+        if not parts:  # only empty expansions: nothing can match
+            return self.s.ix.postings.sparkSession.createDataFrame(
+                [], "docid long"
+            )
+        rows = reduce(
+            lambda x, y: x.unionByName(y, allowMissingColumns=True), parts
+        )
+        return rows.groupBy("docid").agg(*self.aggs)
+
+    def _rows(self, key) -> str:
+        """SQL condition for the rows of `key`: a term set, or the index
+        of an overflowing leaf."""
+        return f"_leaf = {key}" if isinstance(key, int) else term_in(list(key))
+
+    def _agg(self, key, value: "F.Column") -> "F.Column":
+        """sum(value) over the doc's rows of `key` (see _rows); NULL where
+        it has none."""
+        if isinstance(key, int) or self.rels or len(key) < len(self.terms):
+            value = F.when(F.expr(self._rows(key)), value)
         name = f"_a{len(self.aggs)}"
         self.aggs.append(F.sum(value).alias(name))
         return F.col(name)
+
+    def _set_score(self, boosts: Dict[str, float]) -> "F.Column":
+        """The sum over the doc's rows of `boosts`' terms of score × the
+        row's term boost."""
+        value = F.col("score")
+        if set(boosts.values()) != {1.0}:
+            value = value * _per_term(boosts)
+        return self._agg(boosts, value)
 
     def word(self, w: str) -> "F.Column":
         """The score of word `w` at the doc; postings are unique per
@@ -299,14 +375,54 @@ class _TermTree:
             self._positions[w] = name
         return self._positions[w]
 
-    def total(self, cover: FrozenSet[str]) -> bool:
+    def positions_of(self, key) -> str:
+        """The name of the column holding the sorted distinct union of the
+        positions of `key`'s rows (see _rows) at the doc, empty where it
+        has none."""
+        k = key if isinstance(key, int) else frozenset(key)
+        if k not in self._positions:
+            name = f"_p{len(self.aggs)}"
+            self.aggs.append(F.expr(
+                "array_sort(array_distinct(flatten(collect_list(CASE WHEN"
+                f" {self._rows(key)} THEN positions END)))) AS {name}"
+            ))
+            self._positions[k] = name
+        return self._positions[k]
+
+    def span_leaf(self, q: Q.Query) -> Tuple["F.Column", Optional[str]]:
+        """(score, positions column) of a multiterm or Or-of-Terms span
+        leaf, read as its term set (the reference's UnionMatcher over the
+        expansion, terms.py:150-520): the sum of its terms' scores, each
+        times its own boost, and the union of their positions.  A
+        multiterm leaf's terms carry its boost, even a single-term
+        expansion's; an Or's Terms carry theirs (a repeated term sums
+        them) and its own boost and scale are not read.  An empty
+        expansion has a NULL score and no positions column."""
+        if isinstance(q, Q._MultiTerm):
+            texts = self.s.expand_terms(q)
+            if texts is None:
+                return self._multiterm(q).score, self.positions_of(
+                    self.rels.index(q)
+                )
+            boosts = dict.fromkeys(texts, q.boost)
+        else:
+            boosts = _term_boosts(q.children)
+        if not boosts:
+            return F.lit(None).cast("double"), None
+        return self._set_score(boosts), self.positions_of(boosts)
+
+    def total(self, cover: FrozenSet) -> bool:
         """Whether a node with this cover is set at every aggregated doc."""
-        return len(cover) == len(self.terms)
+        return len(cover) == len(self.terms) + len(self.rels)
 
     def _live(self, term: str) -> bool:
         return self.s._stats[term][0] > 0
 
     def compile(self, q: Q.Query) -> _Compiled:
+        if isinstance(q, SpanQuery):
+            # no matcher count (_tm_frame has no frame for spans) and no cover
+            score, _ = span_columns(self, q)
+            return _Compiled(score, None)
         if isinstance(q, Q.Term):
             col = self.word(q.text)
             tm = F.when(col.isNotNull(), F.lit(1)) if self._live(q.text) else None
@@ -391,8 +507,14 @@ class _TermTree:
         leaf's boost applies only to a multi-term expansion, through
         Or(qs, boost) (compound.py:232-233); pinned by
         test_multiterm_singleton_boost_drop_golden.  An empty expansion
-        never matches."""
+        never matches.  An overflowing expansion scores its tagged rows
+        and has no matcher count (`tm` None, as _tm_frame has no frame for
+        it), so a scaled Or counts it by _matching_term_count."""
         texts = self.s.expand_terms(q)
+        if texts is None:
+            key = self.rels.index(q)
+            score = _boosted(self._agg(key, F.col("score")), q.boost)
+            return _Compiled(score, None, frozenset([key]))
         if not texts:
             return _Compiled(F.lit(None).cast("double"), F.lit(None).cast("int"))
         score = self._agg(texts, F.col("score"))
@@ -404,14 +526,16 @@ class _TermTree:
         terms = [c for c in q.children if isinstance(c, Q.Term)]
         others = [c for c in q.children if not isinstance(c, Q.Term)]
         kids = [self.compile(c) for c in others]
-        # what each child adds to the SQR matching count where it matches
+        # what each child adds to the SQR matching count where it matches;
+        # only a scaled Or reads it (the constant count of an overflowing
+        # expansion costs a Spark job)
         counts = [
             F.when(
                 k.score.isNotNull(),
                 k.tm if k.tm is not None
                 else F.lit(self.s._matching_term_count(c)),
             )
-            for c, k in zip(others, kids)
+            for c, k in zip(others, kids) if q.scale
         ]
         if terms:
             # the Term children aggregate as ONE boosted score sum (a
@@ -419,15 +543,11 @@ class _TermTree:
             # which a repeated term counts its multiplicity — Or([alfa,
             # alfa^2]) builds two term matchers (round-5 or-mode fuzz,
             # "'alfa alfa'^2"); an OOV term has no rows, so it counts 0
-            boost: Dict[str, float] = {}
+            boost = _term_boosts(terms)
             mult: Dict[str, int] = {}
             for t in terms:
-                boost[t.text] = boost.get(t.text, 0.0) + t.boost
                 mult[t.text] = mult.get(t.text, 0) + 1
-            value = F.col("score")
-            if set(boost.values()) != {1.0}:
-                value = value * _per_term(boost)
-            score = self._agg(boost, value)
+            score = self._set_score(boost)
             m = self._agg(mult, _per_term(mult))
             live = all(self._live(t) for t in boost)
             kids.append(_Compiled(score, m if live else None, frozenset(boost)))
@@ -493,7 +613,7 @@ class Searcher:
         missing = [t for t in set(terms) if t not in self._stats]
         if missing:
             rows = (
-                self.ix.term_stats.where(F.col("term").isin(missing))
+                self.ix.term_stats.where(term_in(missing))
                 .select("term", "df", "total_weight")
                 .collect()
             )
@@ -557,7 +677,7 @@ class Searcher:
         lookup).  idf constants are embedded as a literal map.
         """
         terms = [t for t in dict.fromkeys(terms)]
-        p = self.ix.postings.where(F.col("term").isin(list(terms)))
+        p = self.ix.postings.where(term_in(terms))
         # idf/cf via a tiny driver lookup cached per searcher (the
         # reference caches idf the same way, searching.py:334-351).
         # A broadcast-join alternative was measured SLOWER per query
@@ -630,7 +750,7 @@ class Searcher:
             from whoosh_reloaded_spark.variations import variations
 
             cand = sorted(set(variations(q.text)))
-            return lambda c: c.isin(cand)
+            return lambda c: F.expr(term_in(cand))  # c is always `term`
         if isinstance(q, Q.FuzzyTerm):
             return fuzzy_predicate(q.text, q.maxdist, q.prefixlength)
         raise TypeError(f"not a multiterm query: {q!r}")
@@ -783,7 +903,7 @@ class Searcher:
             if texts is None:
                 return None
             return (
-                self.ix.postings.where(F.col("term").isin(list(texts)))
+                self.ix.postings.where(term_in(texts))
                 .groupBy("docid")
                 .agg(F.count(F.lit(1)).alias("_tm"))
             )
@@ -940,13 +1060,7 @@ class Searcher:
 
     def _eval(self, q: Q.Query) -> DataFrame:
         """Evaluate to a docid-unique (docid, score) frame."""
-        from whoosh_reloaded_spark.query.spans import SpanEvaluator, SpanQuery
-
         spark = self.ix.postings.sparkSession
-        if isinstance(q, SpanQuery):
-            # a doc matches iff its span list is nonempty (already filtered
-            # inside SpanEvaluator); score follows the wrapped matcher tree
-            return SpanEvaluator(self).frame(q).select("docid", "score")
         if isinstance(q, Q.NullQuery):
             return spark.createDataFrame([], "docid long, score double")
         if isinstance(q, Q.Every):
@@ -1084,11 +1198,14 @@ class Searcher:
         if isinstance(q, Q.WeightingQuery):
             # re-plan the subtree under the wrapped model
             # (wrappers.py:193-199: context.set(weighting=...)); the
-            # sub-searcher shares ix (stats already cached) so this adds
-            # no extra Spark jobs
+            # sub-searcher shares ix and this searcher's stats memo and
+            # expansion cache, which do not depend on the weighting, so
+            # memoized terms run no lookup job
             if q.weighting is None or q.weighting is self.weighting:
                 return self._eval(q.child)
-            return Searcher(self.ix, q.weighting)._eval(q.child)
+            sub = Searcher(self.ix, q.weighting)
+            sub._stats, sub._expand_cache = self._stats, self._expand_cache
+            return sub._eval(q.child)
         if isinstance(q, Q.Otherwise):
             a = self._eval(q.a)
             return self._boosted_frame(
@@ -1113,56 +1230,36 @@ class Searcher:
             # q's matcher with the parent bitset, nested.py:209+)
             pq = Q.Require(q.q, q.parents)
             return self._boosted_frame(nested_children(self, pq), q.boost)
-        if isinstance(q, Q._MultiTerm):
-            # expansion > TOO_MANY_CLAUSES (a smaller one compiles above):
-            # relational full-expansion plan — postings join lexicon
-            # frame, no truncation.  NOTE: the reference's MultiTerm.matcher
-            # sets weighting=None for constantscore fuzzy queries, but its
-            # Or-matcher falls back to the searcher's weighting anyway —
-            # observed behavior is plain BM25-scored Or over the expanded
-            # terms, mirrored.
-            out = self._scored_postings_rel(q).groupBy("docid").agg(
-                F.sum("score").alias("score")
-            )
-            return self._boosted_frame(out, q.boost)
         raise TypeError(f"unsupported query node: {q!r}")
 
     def _eval_term_tree(self, q: Q.Query) -> Optional[DataFrame]:
-        """One scan and one aggregation for a boolean tree of postings
-        leaves (_is_term_tree): any nesting of And / Or (plain or scaled)
-        / DisjunctionMax / AndNot / Require / AndMaybe, with Not children
-        under an And, over Terms, Phrases, Ordereds and multiterm leaves
-        whose expansion is small.  A bare Phrase, Ordered or multiterm
-        leaf compiles as a one-leaf tree whatever its fieldname, as the
-        Term branch of _eval plans a bare Term.  None for any other tree,
-        which the union/join path of _eval then plans operator by
-        operator.
+        """One aggregation for every query over postings (_is_term_tree):
+        any nesting of And / Or (plain or scaled) / DisjunctionMax /
+        AndNot / Require / AndMaybe, with Not children under an And, over
+        Terms, Phrases, Ordereds, multiterm leaves and span queries.  A
+        bare Phrase, Ordered, multiterm leaf or span query compiles as a
+        one-leaf tree whatever its fieldnames, as the Term branch of _eval
+        plans a bare Term.  None for any other tree, which the union/join
+        path of _eval then plans operator by operator.
 
-        The leaves' distinct terms (phrase words and expansions included)
-        are scanned once (the pushed `term IN` filter) and grouped by
-        docid once: the Term children of an Or aggregate as one boosted
-        score sum, every other leaf reads per-word score and positions
-        columns.  The tree then evaluates bottom-up as column expressions
-        over those aggregates (_TermTree) — the vectorized boolean and
-        positional evaluation of "Columnar Formatted Inverted Index for
-        Highly-Paralleled, Vectorized Query Processing" (PAPERS.md), not
-        one join per operator.  Every matched doc holds one of the
-        tree's terms, so the aggregate's docids cover all hits."""
+        The leaves' distinct terms (phrase words, span leaves and small
+        expansions included) are scanned once (the pushed `term IN`
+        filter), each overflowing expansion adds its tagged
+        _scored_postings_rel rows, and the rows are grouped by docid
+        once: the Term children of an Or aggregate as one boosted score
+        sum, every other leaf reads per-word score and positions columns
+        or a term set's score sum and positions union.  The tree then
+        evaluates bottom-up as column expressions over those aggregates
+        (_TermTree, and query/spans.py for span nodes) — the vectorized
+        boolean and positional evaluation of "Columnar Formatted Inverted
+        Index for Highly-Paralleled, Vectorized Query Processing"
+        (PAPERS.md), not one join per operator.  Every matched doc holds
+        one of the leaves' rows, so the aggregate's docids cover all
+        hits."""
         field = q.fieldname if isinstance(q, _LEAVES) else self.ix.fieldname
-        if not _is_term_tree(q, field, self.expand_terms):
+        if not _is_term_tree(q, field):
             return None
-        terms: List[str] = []
-        for leaf in q.leaves():
-            if isinstance(leaf, Q.Term):
-                terms.append(leaf.text)
-            elif isinstance(leaf, Q._MultiTerm):
-                terms += self.expand_terms(leaf)
-            else:
-                terms += leaf.words
-        if not terms:  # only empty expansions: nothing can match
-            spark = self.ix.postings.sparkSession
-            return spark.createDataFrame([], "docid long, score double")
-        tree = _TermTree(self, list(dict.fromkeys(terms)))
+        tree = _TermTree.of(self, q)
         root = tree.compile(q)
         out = tree.frame().select("docid", root.score.alias("score"))
         if tree.total(root.cover):
@@ -1175,7 +1272,7 @@ class Searcher:
         queries."""
         terms = sorted(self._collect_terms(q.normalize()))
         hits = self._eval(q.normalize()).select("docid")
-        per_term = self.ix.postings.where(F.col("term").isin(terms)).select(
+        per_term = self.ix.postings.where(term_in(terms)).select(
             "docid", "term"
         )
         return (

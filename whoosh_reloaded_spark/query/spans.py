@@ -1,17 +1,19 @@
 """Span algebra: position-interval queries as JVM higher-order functions.
 
 The reference (query/spans.py:309-930) computes spans with per-doc Python
-matcher trees; here every span node evaluates to a DataFrame
-``(docid, score, spans array<struct<s:int, e:int>>)`` and the combinators
-are array higher-order functions inside whole-stage codegen.  A SpanNear2
-of plain Terms reads the planner's one-scan aggregate (the per-word score
-and positions columns of ``planner._TermTree``, which also evaluates
-Phrase and Ordered); every other node joins its children's frames.
+matcher trees, in the same matcher tree as the boolean operators.  Here a
+span query is a leaf of the planner's one compiler (``planner._TermTree``):
+its leaves read the tree's one postings aggregate, and every node is a
+``(score, spans array<struct<s:int, e:int>>)`` pair of column expressions
+over it (`span_columns`), so a span tree, alone or anywhere in a boolean
+tree, plans as one postings scan and one ``groupBy(docid)``.  The
+combinators are array higher-order functions written as parsed SQL text.
 
 Semantics mirrored per node (reference file:line):
 - span leaf Term     -> one Span(p, p) per position (mcore.py:266-282)
-- Or-of-terms leaf   -> sorted distinct union, NO merging
-                        (UnionMatcher.spans, matching/binary.py:219-232)
+- multiterm / Or-of-terms leaf -> sorted distinct union of the term set's
+                        positions, NO merging (UnionMatcher.spans,
+                        matching/binary.py:219-232)
 - SpanFirst(q,limit) -> spans with end <= limit      (spans.py:309-352)
 - SpanNear2(qs,...)  -> left-fold pairwise window join with slop / ordered /
                         mindist and span merging     (spans.py:530-699)
@@ -25,15 +27,19 @@ Semantics mirrored per node (reference file:line):
 - SpanCondition(a,b) -> a-spans, b only filters docs  (spans.py:904-930)
 
 A doc matches a span node iff its span list is nonempty
-(SpanWrappingMatcher._find_next, spans.py:193-236) — each node filters
-eagerly so nested spans compose exactly like the reference's matcher tree.
-Scores follow the underlying binary matchers (sum through intersections /
-unions), identical to the reference's scoring through SpanWrappingMatcher.
+(SpanWrappingMatcher._find_next, spans.py:193-236), and the node's score
+is NULL exactly where it does not: Near, Contains, Before and Condition
+need every child, Not only its `a`, Or any child — the doc sets of the
+reference's intersection, AndMaybe and union matchers.  Scores follow
+those binary matchers (sum through intersections / unions), identical to
+the reference's scoring through SpanWrappingMatcher.
 """
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 from typing import Tuple
 
 from pyspark.sql import Column, DataFrame
@@ -115,275 +121,154 @@ class SpanCondition(SpanQuery):
     b: Q.Query
 
 
-# ---- span-expression helpers (all JVM higher-order functions) ---------------
+# ---- span-expression helpers (SQL text of JVM higher-order functions) -----
+# Each Python-lambda higher-order function costs a py4j round trip at
+# plan time, so the span algebra is written as SQL text over the
+# aggregate's columns.
+
+_EMPTY = f"CAST(array() AS {SPANS_TYPE})"
+_NULL = f"CAST(NULL AS {SPANS_TYPE})"
 
 
-def _pos_to_spans(positions: Column) -> Column:
-    def mk(p):
-        return F.struct(p.cast("int").alias("s"), p.cast("int").alias("e"))
-
-    return F.transform(positions, mk)
+def _pos_to_spans(positions: str) -> str:
+    return f"transform({positions}, p -> named_struct('s', p, 'e', p))"
 
 
-def _overlaps(a: Column, b: Column) -> Column:
+def _overlaps(a: str, b: str) -> str:
     # Span.overlaps (spans.py:146-155): intervals intersect
-    return (a["s"] <= b["e"]) & (b["s"] <= a["e"])
+    return f"{a}.s <= {b}.e AND {b}.s <= {a}.e"
 
 
-def _distance(a: Column, b: Column) -> Column:
+def _distance(a: str, b: str) -> str:
     # Span.distance_to (spans.py:169-175)
     return (
-        F.when(_overlaps(a, b), F.lit(0))
-        .when(a["e"] < b["s"], b["s"] - a["e"])
-        .otherwise(a["s"] - b["e"])
+        f"CASE WHEN {_overlaps(a, b)} THEN 0"
+        f" WHEN {a}.e < {b}.s THEN {b}.s - {a}.e ELSE {a}.s - {b}.e END"
     )
 
 
-def _merge_pair(a: Column, b: Column) -> Column:
+def _merge_pair(a: str, b: str) -> str:
     # Span.to (spans.py:128-144): covering interval
-    return F.struct(
-        F.least(a["s"], b["s"]).alias("s"), F.greatest(a["e"], b["e"]).alias("e")
+    return (
+        f"named_struct('s', least({a}.s, {b}.s),"
+        f" 'e', greatest({a}.e, {b}.e))"
     )
 
 
-def _near_combine(a_spans: Column, b_spans: Column, slop: int, ordered: bool,
-                  mindist: int) -> Column:
+def _near_combine(a_spans: str, b_spans: str, slop: int, ordered: bool,
+                  mindist: int) -> str:
     """One fold step of SpanNear2Matcher._get_spans (spans.py:653-699)."""
-
-    def per_a(a):
-        def keep(b):
-            c = ~(b["e"] < a["s"] - slop)
-            if ordered:
-                c = c & ~(a["s"] > b["s"])
-            c = c & ~(b["s"] > a["e"] + slop)
-            d = _distance(a, b)
-            return c & (d >= mindist) & (d <= slop)
-
-        def merge(b):
-            return _merge_pair(a, b)
-
-        return F.transform(F.filter(b_spans, keep), merge)
-
-    return F.array_distinct(F.array_sort(F.flatten(F.transform(a_spans, per_a))))
+    keep = [f"NOT (y.e < x.s - {int(slop)})"]
+    if ordered:
+        keep.append("NOT (x.s > y.s)")
+    keep.append(f"NOT (y.s > x.e + {int(slop)})")
+    d = _distance("x", "y")
+    keep += [f"{d} >= {int(mindist)}", f"{d} <= {int(slop)}"]
+    merged = (
+        f"transform(filter({b_spans}, y -> {' AND '.join(keep)}),"
+        f" y -> {_merge_pair('x', 'y')})"
+    )
+    return (
+        "array_distinct(array_sort(flatten("
+        f"transform({a_spans}, x -> {merged}))))"
+    )
 
 
-def _merge_sorted(spans: Column) -> Column:
+def _merge_sorted(spans: str) -> str:
     """Span.merge (spans.py:99-126): fold the SORTED list, merging each span
     into the accumulator's last element when they overlap or touch."""
-    empty = F.expr(f"CAST(array() AS {SPANS_TYPE})")
+    last = "element_at(acc, -1)"
+    merged = (
+        "concat(slice(acc, 1, size(acc) - 1),"
+        f" array({_merge_pair(last, 'x')}))"
+    )
+    return (
+        f"aggregate(array_sort(array_distinct({spans})), {_EMPTY}, (acc, x) ->"
+        f" CASE WHEN size(acc) = 0 THEN concat(acc, array(x))"
+        f" WHEN x.s <= {last}.e + 1 THEN {merged}"
+        f" ELSE concat(acc, array(x)) END)"
+    )
 
-    def step(acc, x):
-        last = F.element_at(acc, -1)
-        merged = F.concat(
-            F.slice(acc, 1, F.size(acc) - 1), F.array(_merge_pair(last, x))
+
+def _matched(spans: str, score: Column) -> Tuple[Column, str]:
+    """A node whose score is NULL wherever its span list is empty."""
+    return F.when(F.expr(f"size({spans}) > 0"), score), spans
+
+
+# ---- compilation --------------------------------------------------------------
+
+
+def span_columns(tree, q: Q.Query) -> Tuple[Column, str]:
+    """(score, spans) of span query `q` over `tree` (a planner._TermTree):
+    `score` a column NULL exactly where `q` does not match, `spans` the SQL
+    text of its span list there (empty or NULL elsewhere).  A Term reads
+    the tree's word score and positions columns; a multiterm leaf or an
+    Or of Terms reads one score sum and one positions union over its term
+    set (_TermTree.span_leaf)."""
+    if isinstance(q, Q.Term):
+        score = tree.word(q.text)
+        if q.boost != 1.0:
+            score = score * F.lit(q.boost)
+        return score, _pos_to_spans(tree.positions(q.text))
+    if isinstance(q, Q._MultiTerm) or (
+        isinstance(q, Q.Or) and all(isinstance(c, Q.Term) for c in q.children)
+    ):
+        score, positions = tree.span_leaf(q)
+        return score, _pos_to_spans(positions) if positions else _NULL
+    if isinstance(q, SpanFirst):
+        score, spans = span_columns(tree, q.q)
+        return _matched(f"filter({spans}, x -> x.e <= {int(q.limit)})", score)
+    if isinstance(q, SpanNear2):
+        kids = [span_columns(tree, sq) for sq in q.qs]
+        spans = kids[0][1]
+        for _, b in kids[1:]:
+            spans = _near_combine(spans, b, q.slop, q.ordered, q.mindist)
+        return _matched(spans, reduce(operator.add, [s for s, _ in kids]))
+    if isinstance(q, SpanOr):
+        kids = [span_columns(tree, sq) for sq in q.subqs]
+        spans = ", ".join(f"coalesce({b}, {_EMPTY})" for _, b in kids)
+        score = reduce(
+            operator.add, [F.coalesce(s, F.lit(0.0)) for s, _ in kids]
         )
-        appended = F.concat(acc, F.array(x))
-        return (
-            F.when(F.size(acc) == 0, appended)
-            .when(x["s"] <= last["e"] + 1, merged)
-            .otherwise(appended)
+        return _matched(_merge_sorted(f"concat({spans})"), score)
+    if not isinstance(q, (SpanNot, SpanContains, SpanBefore, SpanCondition)):
+        raise TypeError(f"unsupported span subquery: {q!r}")
+    a_score, a = span_columns(tree, q.a)
+    b_score, b = span_columns(tree, q.b)
+    if isinstance(q, SpanNot):
+        # b counts where it matches (AndMaybe); with no b, a's spans stay
+        spans = (
+            f"filter({a}, x -> NOT exists(coalesce({b}, {_EMPTY}),"
+            f" y -> {_overlaps('x', 'y')}))"
         )
-
-    return F.aggregate(F.array_sort(F.array_distinct(spans)), empty, step)
-
-
-# ---- evaluation -------------------------------------------------------------
+        return _matched(spans, a_score + F.coalesce(b_score, F.lit(0.0)))
+    if isinstance(q, SpanContains):
+        spans = (
+            f"filter({a}, x -> exists({b}, y -> y.s >= x.s AND y.e <= x.e))"
+        )
+    elif isinstance(q, SpanBefore):
+        spans = f"filter({a}, x -> x.e < array_min(transform({b}, y -> y.s)))"
+    else:  # SpanCondition: a's spans untouched, where b matches
+        spans = f"CASE WHEN size({b}) > 0 THEN {a} END"
+    return _matched(spans, a_score + b_score)
 
 
 class SpanEvaluator:
-    """Evaluates a span tree to (docid, score, spans) frames using the
-    Searcher's scored-posting machinery."""
+    """The (docid, score, spans) frame of a span query: its compiled
+    tree's one aggregate, at the docs where the query matches."""
 
     def __init__(self, searcher):
         self.s = searcher
 
     def frame(self, q: Q.Query) -> DataFrame:
-        if isinstance(q, Q.Term):
-            df = self.s._scored_postings([q.text], with_positions=True)
-            return df.select(
-                "docid",
-                (F.col("score") * F.lit(q.boost)).alias("score"),
-                _pos_to_spans(F.col("positions")).alias("spans"),
-            )
-        if isinstance(q, Q._MultiTerm):
-            # lexicon-expanding leaves (Prefix/Wildcard/Fuzzy/Variations...)
-            # become a union of their expansion's term spans — the
-            # reference's multiterm matcher is a UnionMatcher over the same
-            # expansion (terms.py:150-520)
-            terms = self.s.expand_terms(q)
-            spark = self.s.ix.postings.sparkSession
-            if terms is None:
-                # overflowing expansion (> TOO_MANY_CLAUSES): relational
-                # full-expansion plan — same union semantics, no IN-list
-                df = self.s._scored_postings_rel(q, with_positions=True)
-                return (
-                    df.select(
-                        "docid",
-                        (F.col("score") * F.lit(q.boost)).alias("score"),
-                        _pos_to_spans(F.col("positions")).alias("spans"),
-                    )
-                    .groupBy("docid")
-                    .agg(
-                        F.sum("score").alias("score"),
-                        F.array_sort(
-                            F.array_distinct(F.flatten(F.collect_list("spans")))
-                        ).alias("spans"),
-                    )
-                )
-            if not terms:
-                return spark.createDataFrame(
-                    [], f"docid long, score double, spans {SPANS_TYPE}"
-                )
-            return self.frame(
-                Q.Or(tuple(Q.Term(t, q.fieldname, q.boost) for t in terms))
-            )
-        if isinstance(q, Q.Or) and all(
-            isinstance(c, Q.Term) for c in q.children
-        ):
-            # UnionMatcher.spans (binary.py:219-232): sorted distinct union,
-            # NOT merged (only SpanOr merges)
-            parts = [self.frame(c) for c in q.children]
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            return u.groupBy("docid").agg(
-                F.sum("score").alias("score"),
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("spans")))
-                ).alias("spans"),
-            )
-        if isinstance(q, SpanFirst):
-            child = self.frame(q.q)
-            out = child.select(
-                "docid",
-                "score",
-                F.filter(F.col("spans"), _first_pred(q.limit)).alias("spans"),
-            )
-            return out.where(F.size("spans") > 0)
-        if isinstance(q, SpanNear2) and all(
-            isinstance(sq, Q.Term) for sq in q.qs
-        ):
-            # all-Terms path: the planner's one scan and one aggregate of
-            # per-word score and positions columns (_TermTree), then the
-            # near-window fold over those columns
-            from whoosh_reloaded_spark.query.planner import _TermTree
+        from whoosh_reloaded_spark.query.planner import _TermTree
 
-            words = [sq.text for sq in q.qs]
-            tree = _TermTree(self.s, list(dict.fromkeys(words)))
-            spans = _pos_to_spans(F.col(tree.positions(words[0])))
-            for w in words[1:]:
-                spans = _near_combine(
-                    spans, _pos_to_spans(F.col(tree.positions(w))),
-                    q.slop, q.ordered, q.mindist,
-                )
-            score = sum(
-                [tree.word(sq.text) * F.lit(sq.boost) for sq in q.qs],
-                F.lit(0.0),
+        tree = _TermTree.of(self.s, q)
+        score, spans = span_columns(tree, q)
+        return (
+            tree.frame()
+            .select(
+                "docid", score.alias("score"), F.expr(spans).alias("spans")
             )
-            return (
-                tree.frame()
-                .select("docid", score.alias("score"), spans.alias("spans"))
-                .where(F.size("spans") > 0)
-            )
-        if isinstance(q, SpanNear2):
-            frames = [self.frame(sq) for sq in q.qs]
-            j = frames[0].select(
-                "docid", F.col("score").alias("_s0"), F.col("spans").alias("_sp0")
-            )
-            for i, fr in enumerate(frames[1:], start=1):
-                j = j.join(
-                    fr.select(
-                        "docid",
-                        F.col("score").alias(f"_s{i}"),
-                        F.col("spans").alias(f"_sp{i}"),
-                    ),
-                    "docid",
-                )
-            spans = F.col("_sp0")
-            for i in range(1, len(frames)):
-                spans = _near_combine(
-                    spans, F.col(f"_sp{i}"), q.slop, q.ordered, q.mindist
-                )
-            score = sum(
-                [F.col(f"_s{i}") for i in range(len(frames))], F.lit(0.0)
-            )
-            return (
-                j.select("docid", score.alias("score"), spans.alias("spans"))
-                .where(F.size("spans") > 0)
-            )
-        if isinstance(q, SpanOr):
-            parts = [self.frame(sq) for sq in q.subqs]
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            agg = u.groupBy("docid").agg(
-                F.sum("score").alias("score"),
-                F.flatten(F.collect_list("spans")).alias("_all"),
-            )
-            return agg.select(
-                "docid", "score", _merge_sorted(F.col("_all")).alias("spans")
-            ).where(F.size("spans") > 0)
-        if isinstance(q, SpanNot):
-            a = self.frame(q.a)
-            b = self.frame(q.b).select(
-                "docid",
-                F.col("score").alias("_bscore"),
-                F.col("spans").alias("_bspans"),
-            )
-            j = a.join(b, "docid", "left")
-
-            def no_overlap(x):
-                def hits(y):
-                    return _overlaps(x, y)
-
-                return ~F.exists(F.col("_bspans"), hits)
-
-            spans = F.when(
-                F.col("_bspans").isNull(), F.col("spans")
-            ).otherwise(F.filter(F.col("spans"), no_overlap))
-            score = F.col("score") + F.coalesce(F.col("_bscore"), F.lit(0.0))
-            return (
-                j.select("docid", score.alias("score"), spans.alias("spans"))
-                .where(F.size("spans") > 0)
-            )
-        if isinstance(q, (SpanContains, SpanBefore, SpanCondition)):
-            a = self.frame(q.a)
-            b = self.frame(q.b).select(
-                "docid",
-                F.col("score").alias("_bscore"),
-                F.col("spans").alias("_bspans"),
-            )
-            j = a.join(b, "docid")
-            if isinstance(q, SpanContains):
-
-                def contains_some(x):
-                    def within(y):
-                        return (y["s"] >= x["s"]) & (y["e"] <= x["e"])
-
-                    return F.exists(F.col("_bspans"), within)
-
-                spans = F.filter(F.col("spans"), contains_some)
-            elif isinstance(q, SpanBefore):
-                bmin = F.array_min(
-                    F.transform(F.col("_bspans"), lambda y: y["s"])
-                )
-
-                def before(bm):
-                    return lambda x: x["e"] < bm
-
-                spans = F.filter(F.col("spans"), before(bmin))
-            else:  # SpanCondition: a's spans untouched
-                spans = F.col("spans")
-            score = F.col("score") + F.col("_bscore")
-            return (
-                j.select("docid", score.alias("score"), spans.alias("spans"))
-                .where(F.size("spans") > 0)
-            )
-        raise TypeError(f"unsupported span subquery: {q!r}")
-
-
-def _first_pred(limit: int):
-    def pred(x):
-        return x["e"] <= F.lit(limit)
-
-    return pred
+            .where(F.col("score").isNotNull())
+        )

@@ -28,6 +28,7 @@ from whoosh_reloaded_spark.query.planner import (
     Searcher,
     fuzzy_predicate,
     levenshtein_distance,
+    term_in,
 )
 
 
@@ -332,7 +333,7 @@ def correct_query(searcher: Searcher, q, qstring: Optional[str],
         present = set()
         if texts:
             rows = (
-                searcher.ix.term_stats.where(F.col("term").isin(texts))
+                searcher.ix.term_stats.where(term_in(texts))
                 .select("field", "term")
                 .distinct()
                 .collect()
