@@ -298,18 +298,24 @@ def test_overflowing_leaves_join_the_one_aggregate(saved, name):
 
 
 def test_phrase_in_tree_needs_positions(spark):
-    """A positional leaf (a phrase, a span) inside a compiled tree on a
-    position-less index raises the positions error instead of returning
-    no hits."""
+    """A positional leaf (a phrase, a span, a span over an overflowing
+    expansion) inside a compiled tree, or alone, on a position-less index
+    raises the positions error instead of returning no hits or failing
+    in Spark's analyzer."""
     from whoosh_reloaded_spark.index import build_index
     from whoosh_reloaded_spark.query import Searcher
 
     df = spark.createDataFrame(
-        [(f"d{i:02d}", t) for i, t in enumerate(DOCS)],
+        [(f"d{i:02d}", t) for i, t in enumerate(_corpus())],
         "url string, text string",
     )
     s = Searcher(build_index(df, format="frequency"))
-    for positional in (Q.Phrase(("alfa", "delta")), SpanNear2((a, b))):
-        q = Q.And((positional, Q.Term("golf")))
-        with pytest.raises(ValueError, match="without positions"):
-            s.search(q, 10).collect()
+    # alf* expands to alfa and alfas, past a cap of 1
+    overflowing = SpanFirst(Q.Prefix("alf"), 3)
+    for positional in (
+        Q.Phrase(("alfa", "delta")), SpanNear2((a, b)), overflowing,
+    ):
+        for q in (Q.And((positional, Q.Term("golf"))), positional):
+            with mock.patch.object(planner, "TOO_MANY_CLAUSES", 1):
+                with pytest.raises(ValueError, match="without positions"):
+                    s.search(q, 10).collect()

@@ -363,6 +363,31 @@ def test_span_frame_golden(searcher, goldens, name):
         assert spans == want_spans, (name, docid)
 
 
+def _plan_jobs(spark, s, q, group):
+    """The Spark jobs s.search(q) runs before its frame executes."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "search() before execution")
+    try:
+        s.search(q, limit=10)
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_overflow_count_is_memoized(spark, searcher, goldens):
+    """A scaled Or counts an overflowing expansion's terms once per
+    searcher: with the expansion and the stats already memoized, it plans
+    with the one count job, and with none when searched again."""
+    with case_searcher(searcher, "overflow ") as s:
+        assert s.search(Q.Or((Q.Prefix("alf"), b)), 10).collect()
+        q = Q.Or((Q.Prefix("alf"), b), scale=0.9)
+        assert _plan_jobs(spark, s, q, "wrs-plan-overflow-1") == 1
+        assert _plan_jobs(spark, s, q, "wrs-plan-overflow-2") == 0
+        got = hits(s, q)
+    want = goldens["hits"]["overflow Or(alf*, b, scale=0.9)"]
+    assert got == pytest.approx(want, rel=1e-9, abs=1e-12)
+
+
 if __name__ == "__main__":
     from pyspark.sql import SparkSession
 

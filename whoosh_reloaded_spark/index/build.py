@@ -448,6 +448,28 @@ def build_index(
     )
 
 
+#: parquet writer options of every index table.  zstd pages; v2 data
+#: pages, whose non-dictionary encodings are the delta ones; and no
+#: dictionary for ``docid``, which parquet then stores
+#: DELTA_BINARY_PACKED — the reference's delta-coded posting docids
+#: (whoosh3.py:714-876).  A column of unique sorted strings
+#: (``term_stats.term``, ``docmeta.uid``) outgrows its dictionary and
+#: falls back to DELTA_BYTE_ARRAY, the prefix coding of the reference's
+#: term dictionary.  Readers decode any encoding, so indexes written
+#: with Spark's defaults (snappy, v1 pages, dictionary docids) still load.
+_TABLE_WRITE_OPTIONS = {
+    "compression": "zstd",
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#docid": "false",
+}
+
+
+def write_table(df: DataFrame, path: str) -> None:
+    """Write one index table (postings, docmeta, term_stats, tombstones)
+    as parquet with :data:`_TABLE_WRITE_OPTIONS`, replacing `path`."""
+    df.write.mode("overwrite").options(**_TABLE_WRITE_OPTIONS).parquet(path)
+
+
 def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
                compress_positions: bool = False,
                codec: str = None) -> int:
@@ -497,12 +519,13 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
     try:
         to_write = ix.postings
         # position codec selection (codecs.py): `codec` names a registered
-        # codec; compress_positions=True is the back-compat alias for
-        # 'varint' (the reference's delta+varint payload encoding,
-        # whoosh3.py:844-850 — smallest at rest but its chained Python
-        # stage costs build throughput at high core counts: 1M docs 14.4k
-        # -> 7.9k docs/s at 32 cores).  'jvmdelta' delta-encodes JVM-side
-        # at ~no build cost.
+        # codec, 'raw' by default; compress_positions=True is the
+        # back-compat alias for 'varint' (the reference's delta+varint
+        # payload encoding, whoosh3.py:844-850 — larger at rest than
+        # 'raw', whose array<int> parquet encodes and compresses better,
+        # and its chained Python stage costs build throughput at high
+        # core counts: 1M docs 14.4k -> 7.9k docs/s at 32 cores).
+        # 'jvmdelta' delta-encodes JVM-side at ~no build cost.
         if codec is None:
             codec = "varint" if compress_positions else "raw"
         if codec != "raw" and "positions" in to_write.columns:
@@ -538,24 +561,22 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         # observed above the range exchange, like the docmeta stats below,
         # so the boundary-sampling pass cannot count rows twice
         obs_postings = Observation("wrs_postings_rows")
-        (
+        write_table(
             ranged.sortWithinPartitions("term", "docid")
             .select(*out_cols)
-            .observe(obs_postings, F.count(F.lit(1)).alias("rows"))
-            .write.mode("overwrite")
-            .parquet(f"{path}/postings")
+            .observe(obs_postings, F.count(F.lit(1)).alias("rows")),
+            f"{path}/postings",
         )
         _mark("postings write (range sort)")
         wp = spark.read.parquet(f"{path}/postings")
 
         def _write_term_stats():
-            (
+            write_table(
                 term_stats_of(wp).repartitionByRange(
                     max(1, term_partitions // 4), "term"
                 )
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(f"{path}/term_stats")
+                .sortWithinPartitions("term"),
+                f"{path}/term_stats",
             )
 
         def _write_docmeta():
@@ -579,7 +600,7 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
             # pass (which executes only the exchange's child) cannot
             # double-count the rows.
             obs = Observation("wrs_docmeta_stats")
-            (
+            write_table(
                 docmeta.repartitionByRange(
                     max(1, term_partitions // 4), "docid"
                 )
@@ -590,9 +611,8 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
                     F.coalesce(F.sum("length"), F.lit(0)).alias(
                         "field_length"
                     ),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{path}/docmeta")
+                ),
+                f"{path}/docmeta",
             )
             return obs.get
 

@@ -2,19 +2,27 @@
 (reference: codec/base.py Codec protocol; whoosh3.py:844-850 delta+varint
 posting payloads), re-expressed as column transforms chosen at save time.
 
-Three built-ins, trading build speed vs size at rest:
+Three built-ins; ``raw`` is the default:
 
 - ``raw``      — positions stored as ``array<int>`` unchanged.  Fastest
                  build (no extra stage); parquet's own encodings apply.
 - ``jvmdelta`` — positions stored as first-order DELTAS, still
                  ``array<int>``, encoded/decoded entirely JVM-side with
                  higher-order functions (whole-stage codegen, NO Python
-                 stage).  Small deltas bit-pack tighter in parquet than
+                 stage).  Small deltas bit-pack a little tighter than
                  absolute positions; costs nothing measurable at build.
 - ``varint``   — delta+varint packed ``binary`` via Arrow-batched pandas
-                 UDFs (the reference's byte encoding).  Smallest at rest;
-                 the chained Python stage costs build throughput at high
-                 core counts (measured 14.4k -> 7.9k docs/s at 1M/32c).
+                 UDFs (the reference's byte encoding).  LARGER at rest
+                 than the other two: parquet dictionary/bit-packs and
+                 page-compresses an ``array<int>`` better than it can
+                 compress an opaque varint blob.  The chained Python
+                 stage also costs build throughput at high core counts
+                 (measured 14.4k -> 7.9k docs/s at 1M/32c).
+
+Index bytes per input text byte, 4,000 perfbench docs (seed 5), raw /
+jvmdelta / varint: 0.2897 / 0.2889 / 0.3154 with the index writer's
+zstd pages (see build.write_table); 0.3657 / 0.3656 / 0.4284 with
+Spark's default snappy pages.
 
 ``save_index(codec=...)`` records the codec name in stats.json;
 ``load_index`` applies the decoder lazily, so column pruning keeps

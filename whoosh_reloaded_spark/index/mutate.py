@@ -26,7 +26,11 @@ from typing import List, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from whoosh_reloaded_spark.index.build import InvertedIndex, term_stats_of
+from whoosh_reloaded_spark.index.build import (
+    InvertedIndex,
+    term_stats_of,
+    write_table,
+)
 
 
 def _deleted_path(path: str) -> str:
@@ -60,7 +64,7 @@ def append_tombstones(spark: SparkSession, path: str,
         n_before = 0
         merged = new
     tmp = _deleted_path(path) + "_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
+    write_table(merged, tmp)
     final = _deleted_path(path)
     if os.path.isdir(final):
         shutil.rmtree(final)

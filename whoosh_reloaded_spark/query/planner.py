@@ -583,6 +583,15 @@ class _TermTree:
         return _Compiled(score, tm, cover)
 
 
+def _require_positions(postings: DataFrame) -> None:
+    if "positions" not in postings.columns:
+        raise ValueError(
+            "this index was built without positions "
+            "(format='frequency'/'existence'); positional queries "
+            "(Phrase/Ordered/Span) need format='positions'"
+        )
+
+
 class Searcher:
     """Plans and executes queries against an :class:`InvertedIndex`."""
 
@@ -601,6 +610,9 @@ class Searcher:
         self._expand_cache: "OrderedDict[str, Optional[List[str]]]" = (
             OrderedDict()
         )
+        # the term count of each overflowing expansion in _expand_cache,
+        # by the same key (see _n_term_matchers)
+        self._overflow_counts: Dict[str, int] = {}
 
     # -- statistics ----------------------------------------------------------
 
@@ -692,12 +704,7 @@ class Searcher:
         )
         cols = ["term", "docid", score.alias("score")]
         if with_positions:
-            if "positions" not in p.columns:
-                raise ValueError(
-                    "this index was built without positions "
-                    "(format='frequency'/'existence'); positional queries "
-                    "(Phrase/Ordered/Span) need format='positions'"
-                )
+            _require_positions(p)
             cols.append("positions")
         return p.select(*cols)
 
@@ -794,7 +801,7 @@ class Searcher:
         out = self._expand_terms_uncached(q)
         cache[key] = out
         if len(cache) > EXPAND_CACHE_SIZE:
-            cache.popitem(last=False)
+            self._overflow_counts.pop(cache.popitem(last=False)[0], None)
         return out
 
     def _expand_terms_uncached(self, q: Q.Query) -> Optional[List[str]]:
@@ -852,6 +859,7 @@ class Searcher:
         score = self.weighting.score_col(ctx)
         cols = ["term", "docid", score.alias("score")]
         if with_positions:
+            _require_positions(p)
             cols.append("positions")
         return joined.select(*cols)
 
@@ -1013,8 +1021,12 @@ class Searcher:
             if small is not None:
                 return len(small)
             # overflowing expansion: exact count via a distributed count
-            # aggregate over the lexicon frame (no term list on the driver)
-            return int(self._multiterm_frame(q).count())
+            # aggregate over the lexicon frame (no term list on the
+            # driver), memoized beside the expansion
+            key, counts = repr(q), self._overflow_counts
+            if key not in counts:
+                counts[key] = int(self._multiterm_frame(q).count())
+            return counts[key]
         if isinstance(
             q,
             (Q.Every, Q.NullQuery, Q.NumericRange, Q.DateRange, Q.ColumnQuery),
@@ -1198,13 +1210,14 @@ class Searcher:
         if isinstance(q, Q.WeightingQuery):
             # re-plan the subtree under the wrapped model
             # (wrappers.py:193-199: context.set(weighting=...)); the
-            # sub-searcher shares ix and this searcher's stats memo and
-            # expansion cache, which do not depend on the weighting, so
-            # memoized terms run no lookup job
+            # sub-searcher shares ix and this searcher's stats memo,
+            # expansion cache and overflow counts, which do not depend on
+            # the weighting, so memoized terms run no lookup job
             if q.weighting is None or q.weighting is self.weighting:
                 return self._eval(q.child)
             sub = Searcher(self.ix, q.weighting)
             sub._stats, sub._expand_cache = self._stats, self._expand_cache
+            sub._overflow_counts = self._overflow_counts
             return sub._eval(q.child)
         if isinstance(q, Q.Otherwise):
             a = self._eval(q.a)
