@@ -63,3 +63,14 @@ def postings_scans(plan: str) -> list:
         ln for ln in plan.splitlines()
         if "FileScan parquet" in ln and "/postings" in ln
     ]
+
+
+def joins(plan: str) -> list:
+    """The join operators in a plan string."""
+    return [ln for ln in plan.splitlines() if "Join " in ln]
+
+
+def aggregates(plan: str) -> list:
+    """The aggregate operators in a plan string, partial and final halves
+    each, outermost first."""
+    return [ln for ln in plan.splitlines() if "Aggregate(keys=" in ln]

@@ -1,31 +1,36 @@
-"""The one-scan compiler (Searcher._eval_term_tree).
+"""The one-aggregate compiler (Searcher._eval_term_tree).
 
 * Differential property test: random trees of And / Or (plain and
   scaled) / DisjunctionMax / AndNot / Require / AndMaybe / Not over
   Terms, Phrases, Ordereds, Prefix / FuzzyTerm leaves and span leaves
   (SpanNear2, SpanFirst and SpanOr over Terms and Prefixes) must give the
-  same doc set and scores (rel 1e-9) as the general per-operator
-  union/join path on the same tree.  The general path is reached by
-  wrapping every leaf (a span query whole) in ``WeightingQuery(leaf,
-  None)``: _eval unwraps it to the same leaf, compiled alone, but the
-  compiler accepts only bare leaves.  A second run patches
-  TOO_MANY_CLAUSES to 1, so two-term expansions overflow.
+  same doc set and scores (rel 1e-9) as the per-operator union/join
+  planner on the same tree (tests/union_join_planner.py), which plans
+  each operator as a union or a join and each leaf compiled alone.  A
+  second run patches TOO_MANY_CLAUSES to 1, so two-term expansions
+  overflow; a third mixes in frame leaves: Every, NullQuery, ranges and
+  ColumnQuerys over stored columns, ConstantScoreQuery, WeightingQuery
+  (TF_IDF()), Otherwise and nested queries over subtrees, Nots anywhere,
+  and Terms on another field.
 * Plan shape: on a saved index, shapes that used to take two postings
   scans and a join or union now plan as exactly one postings scan and
   no join; a tree with overflowing expansions plans as one aggregate
   over the `term IN` scan and one scan (and lexicon join) per
-  overflowing leaf.
+  overflowing leaf; a tree with frame leaves plans as one docid
+  aggregate whose only joins and unions, besides the union of its
+  tagged rows, are those of its frame leaves' own plans.
 """
 
 import random
 from unittest import mock
 
 import pytest
-from hypothesis import HealthCheck, assume, given, settings
+from hypothesis import HealthCheck, assume, example, given, settings
 from hypothesis import strategies as st
 
-from tests.conftest import final_plan, postings_scans
+from tests.conftest import aggregates, final_plan, joins, postings_scans
 from tests.test_parser_fuzz import DOCS, OOV, VOCAB
+from tests.union_join_planner import UnionJoinSearcher
 from whoosh_reloaded_spark.query import ast as Q
 from whoosh_reloaded_spark.query import planner
 from whoosh_reloaded_spark.query.parser import QueryParser
@@ -37,8 +42,8 @@ from whoosh_reloaded_spark.query.spans import (
     SpanNear2,
     SpanNot,
     SpanOr,
-    SpanQuery,
 )
+from whoosh_reloaded_spark.scoring import TF_IDF
 
 
 # VOCAB's words share no prefix; these make Prefix and FuzzyTerm leaves
@@ -58,16 +63,32 @@ def _corpus():
     ]
 
 
+def _frame(docs):
+    """docs as (url, text) plus stored columns for frame leaves: a number
+    n, and every fourth doc the parent of the three after it."""
+    rows = [
+        (f"d{i:02d}", t, (i * 7) % 11, None if i % 4 else "parent",
+         f"d{i - i % 4:02d}" if i % 4 else None)
+        for i, t in enumerate(docs)
+    ]
+    return rows, "url string, text string, n int, kind string, parent_uid string"
+
+
+STORED = ["n", "kind", "parent_uid"]
+
+
 @pytest.fixture(scope="module")
 def searcher(spark):
     from whoosh_reloaded_spark.index import build_index
     from whoosh_reloaded_spark.query import Searcher
 
-    df = spark.createDataFrame(
-        [(f"d{i:02d}", t) for i, t in enumerate(_corpus())],
-        "url string, text string",
-    )
-    return Searcher(build_index(df).persist())
+    df = spark.createDataFrame(*_frame(_corpus()))
+    return Searcher(build_index(df, stored_cols=STORED).persist())
+
+
+@pytest.fixture(scope="module")
+def reference(searcher):
+    return UnionJoinSearcher(searcher.ix)
 
 
 boost = st.sampled_from([1.0, 2.0, 3.0])
@@ -129,11 +150,36 @@ trees = st.recursive(leaf, _compound, max_leaves=7).filter(
 )
 
 
-def _general(q):
-    """The same tree with every leaf wrapped so the compiler declines it."""
-    if q.is_leaf() or isinstance(q, SpanQuery):
-        return Q.WeightingQuery(q, None)
-    return q.apply(_general)
+a, b, c, d = (Q.Term(w) for w in ("alfa", "delta", "golf", "bravo"))
+PARENTS = Q.ColumnQuery("kind = 'parent'")
+# frame leaves with no subtree
+plain_frame = st.one_of(
+    st.builds(Q.Every, boost=boost),
+    st.just(Q.NullQuery()),
+    st.builds(lambda lo, b: Q.NumericRange("n", lo, lo + 5, boost=b),
+              st.integers(0, 8), boost),
+    st.sampled_from([Q.ColumnQuery("n % 3 = 0"), Q.ColumnQuery("length > 5")]),
+    st.builds(Q.Term, st.sampled_from(VOCAB[:4]), st.just("title"), boost),
+)
+
+
+def _framed(inner):
+    """Operators over `inner`, and frame leaves wrapping it."""
+    return st.one_of(
+        _compound(inner),
+        st.builds(Q.ConstantScoreQuery, inner, st.sampled_from([0.5, 2.5])),
+        st.builds(Q.WeightingQuery, inner, st.builds(TF_IDF)),
+        st.builds(Q.Otherwise, inner, inner, boost=boost),
+        inner.map(Q.Not),
+        st.builds(Q.NestedParent, st.just(PARENTS), inner,
+                  st.sampled_from(["best", "sum", "count"])),
+        st.builds(Q.NestedChildren, st.just(PARENTS), inner, boost=boost),
+    )
+
+
+framed_trees = st.recursive(
+    st.one_of(term, prefix, fuzzy, plain_frame), _framed, max_leaves=6
+).filter(lambda q: isinstance(q, planner._TREE_NODES))
 
 
 def _scores(frame):
@@ -153,17 +199,17 @@ DIFFERENTIAL = settings(
 
 @DIFFERENTIAL
 @given(q=trees)
-def test_compiled_equals_general_path(searcher, q):
-    _check_differential(searcher, q)
+def test_compiled_equals_general_path(searcher, reference, q):
+    _check_differential(searcher, reference, q)
 
 
 @pytest.fixture(scope="module")
 def capped(searcher):
-    """A searcher of its own, whose expansions are memoized under the
+    """Searchers of their own, whose expansions are memoized under the
     patched cap only."""
     from whoosh_reloaded_spark.query import Searcher
 
-    return Searcher(searcher.ix)
+    return Searcher(searcher.ix), UnionJoinSearcher(searcher.ix)
 
 
 @settings(DIFFERENTIAL, max_examples=20)
@@ -174,18 +220,51 @@ def test_overflowing_compiled_equals_general_path(capped, q):
     _scored_postings_rel rows join the compiled aggregate."""
     with mock.patch.object(planner, "TOO_MANY_CLAUSES", 1):
         assume(any(
-            isinstance(leaf, Q._MultiTerm) and capped.expand_terms(leaf) is None
+            isinstance(leaf, Q._MultiTerm)
+            and capped[0].expand_terms(leaf) is None
             for leaf in q.leaves()
         ))
-        _check_differential(capped, q)
+        _check_differential(*capped, q)
 
 
-def _check_differential(searcher, q):
-    general = _general(q)
+def _tf_idf(q):
+    return Q.WeightingQuery(q, TF_IDF())
+
+
+@settings(DIFFERENTIAL, max_examples=40)
+@given(q=framed_trees)
+# WeightingQuery(TF_IDF()) over multiterm and Or subtrees inside scaled
+# Ors, whose per-doc matcher counts the SQR bonus reads
+@example(q=Q.Or((_tf_idf(Q.Prefix("alf")), a, b), scale=0.9))
+@example(q=Q.Or(
+    (_tf_idf(Q.Or((a, Q.Term("bravo", boost=2.0), Q.Prefix("golf")))),
+     Q.Term("charlie")),
+    scale=0.9,
+))
+@example(q=Q.Or(
+    (_tf_idf(Q.FuzzyTerm("delta")), Q.Otherwise(Q.Term("zebra"), c),
+     Q.Not(a)),
+    scale=0.9,
+))
+@example(q=Q.And(
+    (a, Q.Otherwise(a, d), Q.Not(Q.NumericRange("n", 0, 4)))
+))
+@example(q=Q.Or((Q.Term("alfa", "title"), d, _tf_idf(Q.And((b, c)))),
+                scale=0.9))
+@example(q=Q.AndMaybe(
+    Q.NestedParent(PARENTS, Q.Or((a, d))), _tf_idf(Q.And((b, c)))
+))
+def test_frame_leaves_compiled_equals_union_join(searcher, reference, q):
+    """Trees holding frame leaves, WeightingQuery(TF_IDF()) subtrees
+    inside scaled Ors among them, plan as one aggregate and score as the
+    union/join planner does, SQR matching counts included."""
+    _check_differential(searcher, reference, q)
+
+
+def _check_differential(searcher, reference, q):
     assert searcher._eval_term_tree(q) is not None, q
-    assert searcher._eval_term_tree(general) is None, q
     got = _scores(searcher._eval(q))
-    want = _scores(searcher._eval(general))
+    want = _scores(reference._eval(q))
     assert set(got) == set(want), q
     for docid, score in want.items():
         assert got[docid] == pytest.approx(score, rel=1e-9, abs=1e-12), (
@@ -193,7 +272,6 @@ def _check_differential(searcher, q):
         )
 
 
-a, b, c, d = (Q.Term(w) for w in ("alfa", "delta", "golf", "bravo"))
 al = Q.Prefix("al")
 
 ONE_SCAN_SHAPES = {
@@ -242,12 +320,9 @@ def saved(spark, tmp_path_factory):
     from whoosh_reloaded_spark.index import build_index, load_index, save_index
     from whoosh_reloaded_spark.query import Searcher
 
-    df = spark.createDataFrame(
-        [(f"d{i:02d}", t) for i, t in enumerate(DOCS)],
-        "url string, text string",
-    )
+    df = spark.createDataFrame(*_frame(DOCS))
     path = str(tmp_path_factory.mktemp("bool_ix") / "ix")
-    save_index(build_index(df), path)
+    save_index(build_index(df, stored_cols=STORED), path)
     return Searcher(load_index(spark, path))
 
 
@@ -295,6 +370,76 @@ def test_overflowing_leaves_join_the_one_aggregate(saved, name):
     # one groupBy(docid): its partial and final halves
     aggs = [ln for ln in plan.splitlines() if "Aggregate(keys=[docid" in ln]
     assert len(aggs) == 2, plan
+
+
+# (tree, its frame leaves); DOCS's alfa docs hold delta and golf, its
+# bravo docs hotel
+FRAME_SHAPES = {
+    "And(alfa, n range)": (Q.And((a, Q.NumericRange("n", 2, 9))), 1),
+    "Or(alfa, Every)": (Q.Or((a, Q.Every())), 1),
+    "Or(alfa, ColumnQuery)": (Q.Or((a, Q.ColumnQuery("n % 3 = 0"))), 1),
+    "Or(alfa, ConstantScore(Or(bravo, golf)))": (
+        Q.Or((a, Q.ConstantScoreQuery(Q.Or((d, c)), 2.5))), 1
+    ),
+    "Or(alfa, TF_IDF(delta), bravo, scale=0.9)": (
+        Q.Or((a, Q.WeightingQuery(b, TF_IDF()), d), scale=0.9), 1
+    ),
+    "AndMaybe(alfa, Otherwise(zebra, bravo))": (
+        Q.AndMaybe(a, Q.Otherwise(Q.Term("zebra"), d)), 1
+    ),
+    "Or(alfa, Not bravo)": (Q.Or((a, Q.Not(d))), 1),
+    "Or(charlie, And(Not alfa, Not bravo))": (
+        Q.Or((Q.Term("charlie"), Q.And((Q.Not(a), Q.Not(d))))), 1
+    ),
+    "Or(alfa, NestedParent(bravo))": (Q.Or((a, Q.NestedParent(PARENTS, d))), 1),
+    "DisMax(delta, NestedChildren(alfa))": (
+        Q.DisjunctionMax((b, Q.NestedChildren(PARENTS, a))), 1
+    ),
+    "And(alfa, range, Not ColumnQuery) OR title:bravo": (
+        Q.Or((
+            Q.And((a, Q.NumericRange("n", 0, 9),
+                   Q.Not(Q.ColumnQuery("n % 2 = 0")))),
+            Q.Term("bravo", "title"),
+        )), 3
+    ),
+}
+
+
+def _executed_plan(df) -> str:
+    """The executed plan of a collected DataFrame, adaptive or not."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _unions(plan: str) -> list:
+    return [ln for ln in plan.splitlines() if "Union" in ln]
+
+
+@pytest.mark.parametrize("name", list(FRAME_SHAPES))
+def test_frame_leaves_join_the_one_aggregate(saved, name):
+    """One docid aggregate at the root over one union of the postings
+    scan and the frame leaves' rows; every other aggregate, join and
+    union belongs to a frame leaf's own plan, so a Not keeps its anti
+    join and a nested query its joins."""
+    q, n_frames = FRAME_SHAPES[name]
+    tree = planner._TermTree.of(saved, q)
+    assert len(tree.frames) == n_frames, tree.frames
+    out = saved._eval(q)  # as written: normalize would fold an Every
+    assert out.collect()
+    plan = _executed_plan(out)
+    own = []
+    for _, rows in tree.frames:
+        rows.collect()
+        own.append(_executed_plan(rows))
+    aggs = aggregates(plan)
+    assert "keys=[docid" in aggs[0], plan
+    assert len(aggs) == 2 + sum(len(aggregates(p)) for p in own), plan
+    assert len(joins(plan)) == sum(len(joins(p)) for p in own), plan
+    assert len(_unions(plan)) == 1 + sum(len(_unions(p)) for p in own), plan
+    if "Nested" in name:
+        assert joins(plan), plan
+    if name == "Or(alfa, Not bravo)":
+        assert "LeftAnti" in plan, plan
 
 
 def test_phrase_in_tree_needs_positions(spark):

@@ -320,3 +320,40 @@ def test_per_term_map_round_trips_exactly(spark):
             ), r["term"]
     assert frame.where(term_in(terms)).count() == len(terms)
     assert frame.where(term_in([])).count() == 0
+
+
+def test_value_sets_filter_as_sql_text(spark, s):
+    """column_in writes a set of integers or strings as one SQL IN filter:
+    each value selects exactly its own rows, the whole set selects all of
+    them and an empty set none; search(filter=, mask=) docnum sets read
+    the same filter."""
+    from pyspark.sql import functions as F
+
+    from whoosh_reloaded_spark.query.planner import column_in
+
+    frame = spark.range(1000).select(
+        "id", F.concat(F.lit("u'\\"), F.col("id").cast("string")).alias("uid")
+    )
+    rows = frame.collect()
+    for column in ("id", "uid"):
+        values = [r[column] for r in rows]
+        for lo in range(0, len(values), 250):
+            chunk = values[lo:lo + 250]
+            flags = frame.select(column, *[
+                F.expr(column_in(column, [v])).alias(f"f{i}")
+                for i, v in enumerate(chunk)
+            ]).collect()
+            for r in flags:
+                assert [i for i in range(len(chunk)) if r[f"f{i}"]] == (
+                    [chunk.index(r[column])] if r[column] in chunk else []
+                ), r[column]
+        assert frame.where(column_in(column, values)).count() == 1000
+        assert frame.where(column_in(column, [])).count() == 0
+    hits = {r["docid"] for r in s.search(Term("alfa"), 10).collect()}
+    assert len(hits) == 3
+    some = set(list(hits)[:2])
+    for docset, keep in ((some, some), (set(), set()), (hits, hits)):
+        got = s.search(Term("alfa"), 10, filter=docset).collect()
+        assert {r["docid"] for r in got} == keep
+        got = s.search(Term("alfa"), 10, mask=docset).collect()
+        assert {r["docid"] for r in got} == hits - keep

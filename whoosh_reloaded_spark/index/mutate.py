@@ -31,6 +31,7 @@ from whoosh_reloaded_spark.index.build import (
     term_stats_of,
     write_table,
 )
+from whoosh_reloaded_spark.query.planner import column_in
 
 
 def _deleted_path(path: str) -> str:
@@ -105,7 +106,7 @@ def delete_by_uid(spark: SparkSession, path: str, ix: InvertedIndex,
     """Delete by unique key (the update_document precursor,
     writing.py:430-437).  `uids` is a driver-side list of user-supplied keys
     (small); the docid resolution + write stay distributed."""
-    matching = ix.docmeta.where(F.col("uid").isin(uids)).select("docid")
+    matching = ix.docmeta.where(column_in("uid", uids)).select("docid")
     return append_tombstones(spark, path, matching)
 
 

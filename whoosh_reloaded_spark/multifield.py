@@ -5,8 +5,8 @@ The reference's Schema maps many fields to one segment's postings keyed by
 (df per (field, term), per-field average length) and per-field B overrides
 (scoring.py:274-329).  Here each field is its own index over SHARED docids
 (one rank_docids pass), and MultiFieldSearcher routes fielded leaf queries
-to the right per-field Searcher — compound operators combine the resulting
-(docid, score) frames exactly as in the single-field planner.
+to the right per-field Searcher — in a compound query each routed leaf is a
+frame leaf of the planner's one aggregate (query/planner.py).
 
 At scale this layout is strictly better than one interleaved posting table:
 queries touching one field scan only that field's files, and per-field
@@ -80,7 +80,8 @@ _FIELDED_LEAVES = (
 class MultiFieldSearcher(Searcher):
     """Routes fielded leaf queries to per-field searchers; compound nodes
     combine across fields on docid (scores sum like the reference's Or/And
-    over fielded term matchers)."""
+    over fielded term matchers), each routed leaf a frame leaf of the one
+    aggregate."""
 
     def __init__(self, indexes: Dict[str, InvertedIndex],
                  default_field: str = "text", weighting=None,
@@ -97,18 +98,34 @@ class MultiFieldSearcher(Searcher):
         base = self.field_searchers[default_field]
         super().__init__(indexes[default_field], base.weighting)
 
-    def _eval(self, q: Q.Query) -> DataFrame:
+    def _routed(self, q: Q.Query) -> Optional[Searcher]:
+        """The field searcher that plans a fielded leaf, or None.  A
+        FIELDED Every must scan only its field's docmeta — the base
+        _all_docs here is the all-fields union, which is the unfielded
+        Every('*:*') semantics (qcore.py:650-737)."""
         fname = getattr(q, "fieldname", None)
         if (
             isinstance(q, _FIELDED_LEAVES)
             and fname in self.field_searchers
             and (fname != self.ix.fieldname or isinstance(q, Q.Every))
         ):
-            # a FIELDED Every must scan only its field's docmeta — the
-            # base _all_docs here is the all-fields union, which is the
-            # unfielded Every('*:*') semantics (qcore.py:650-737)
-            return self.field_searchers[fname]._eval(q)
-        return super()._eval(q)
+            return self.field_searchers[fname]
+        return None
+
+    # a routed leaf's frame, and its term matchers for the SQR counts,
+    # come from the searcher that plans it
+
+    def _eval(self, q: Q.Query) -> DataFrame:
+        s = self._routed(q)
+        return s._eval(q) if s else super()._eval(q)
+
+    def _leaf_frame(self, q: Q.Query) -> DataFrame:
+        s = self._routed(q)
+        return s._leaf_frame(q) if s else super()._leaf_frame(q)
+
+    def _n_term_matchers(self, q: Q.Query) -> int:
+        s = self._routed(q)
+        return s._n_term_matchers(q) if s else super()._n_term_matchers(q)
 
     def _all_docs(self, score: float = 1.0) -> DataFrame:
         # Every()/Not() complement over the union of all fields' docmeta

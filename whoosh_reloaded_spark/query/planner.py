@@ -16,20 +16,19 @@ per-word score and positions aggregates (Searcher._eval_term_tree):
                  postings rows (_scored_postings_rel) to the aggregate
     Span*     -> (score, spans) columns (query/spans.py)
 
-Only the trees with a leaf that is not over this field's postings (Every,
-ranges, ColumnQuery, nested queries, wrappers such as ConstantScore,
-Otherwise and WeightingQuery — the last also reaches the differential
-oracle — and leaves on another field) map each combinator to a
-relational op, each compilable subtree planned as above:
+The tree's other subtrees — Every, ranges, ColumnQuery, nested queries,
+wrappers such as ConstantScore, Otherwise and WeightingQuery, a Not that
+is not the child of an And, leaves on another field — are frame leaves:
+each maximal one plans as its own docid-unique (docid, score) frame
+(Searcher._eval; a MultiFieldSearcher routes fielded leaves to their
+field's searcher) whose rows join the same groupBy(docid), tagged with
+the leaf's index, and its operators read it as one more score column.
+An And of only Nots reads the docs from an Every frame leaf scored 0.
+Only bare nodes of those kinds map to relational ops of their own:
 
-    And       -> union + groupBy(docid) having count == n, score = sum
-                 (IntersectionMatcher sums scores, matching/binary.py:95-96)
-    Or        -> union + groupBy(docid).sum  (UnionMatcher, binary.py:252-268)
-    DisMax    -> groupBy(docid): max + tiebreak*(sum-max) (binary.py:298-404)
-    AndNot    -> left-anti join          (binary.py:559-676)
-    Require   -> left-semi join          (wrappers.py:431-494)
-    AndMaybe  -> left-outer join         (binary.py:677-793)
     Not       -> anti join vs docmeta    (matching/wrappers.py:335-430)
+    ranges, ColumnQuery -> a filter on docmeta
+    Nested*   -> equi-joins on docmeta.parent_uid (nested.py)
     top-k     -> orderBy(desc(score), asc(docid)).limit(k)
                  == TakeOrderedAndProject, ties broken by LOWER docid first
                  exactly like the reference heap (collectors.py:466-483)
@@ -140,13 +139,21 @@ def _sql_str(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def term_in(terms: Sequence[str]) -> str:
-    """The SQL filter `term IN (...)` over a term set, each term written by
-    _sql_str: `isin` makes one py4j literal per term, which took 525-747 ms
-    for 790 terms.  An empty set is FALSE."""
-    if not terms:
+def column_in(column: str, values) -> str:
+    """The SQL filter `column IN (...)` over a set of strings or integers,
+    each string written by _sql_str: `isin` makes one py4j literal per
+    value, which took 525-747 ms for 790 terms; building and optimizing a
+    1,000-docid filter took a median 504 ms with `isin` and 45 ms as text
+    (local[4], 4 cores).  An empty set is FALSE."""
+    if not values:
         return "FALSE"
-    return f"term IN ({', '.join(_sql_str(t) for t in terms)})"
+    items = (_sql_str(v) if isinstance(v, str) else str(int(v)) for v in values)
+    return f"{column} IN ({', '.join(items)})"
+
+
+def term_in(terms: Sequence[str]) -> str:
+    """The SQL filter `term IN (...)` over a term set (see column_in)."""
+    return column_in("term", terms)
 
 
 def glob_to_java_regex(pat: str) -> str:
@@ -188,10 +195,6 @@ def _per_term(values: Dict[str, float]) -> "F.Column":
     return F.expr(f"element_at(map({pairs}), term)")
 
 
-def _union(frames: List[DataFrame]) -> DataFrame:
-    return reduce(DataFrame.unionByName, frames)
-
-
 def _boosted(col: "F.Column", boost: float) -> "F.Column":
     return col if boost == 1.0 else col * F.lit(boost)
 
@@ -212,38 +215,41 @@ def _all_sum(cols: List[Optional["F.Column"]]) -> Optional["F.Column"]:
 
 # the operators Searcher._eval_term_tree compiles (plus Not under an And)
 _TREE_NODES = (Q.And, Q.Or, Q.DisjunctionMax, Q.AndNot, Q.Require, Q.AndMaybe)
-# ... and its leaves, besides span queries
+# ... and its postings leaves, besides span queries
 _LEAVES = (Q.Term, Q.Phrase, Q.Ordered, Q._MultiTerm)
+# leaves whose matchers carry no term: 0 term matchers at any doc
+_TERMLESS = (Q.Every, Q.NullQuery, Q.NumericRange, Q.ColumnQuery)
+# the frame leaf that gives an And of only Nots its docs, scored 0 as the
+# complement's universe
+_ALL_DOCS = Q.Every(0.0)
 
 
-def _is_term_tree(q: Q.Query, fieldname: str, under_and: bool = False) -> bool:
-    """True for a _TREE_NODES tree (or a bare leaf) whose leaves are
-    Terms, Phrases, Ordereds or multiterm leaves on `fieldname`, or span
-    queries (whose own leaves' fieldnames are not read), where a Not is
-    only the child of an And that also has a positive child — so every
-    doc the tree matches holds one of its leaves' postings rows."""
+def _compiles(q: Q.Query, fieldname: str, under_and: bool = False) -> bool:
+    """Whether the compiler reads node q itself: a _TREE_NODES node with
+    children, a Term, Phrase, Ordered or multiterm leaf on `fieldname`, a
+    span query (whose own leaves' fieldnames are not read), or a Not that
+    is the child of an And.  Below a compiled node, any other subtree is a
+    frame leaf (see _TermTree)."""
     if isinstance(q, SpanQuery):
         return True
     if isinstance(q, _LEAVES):
         return q.fieldname == fieldname
     if isinstance(q, Q.Not):
-        return under_and and _is_term_tree(q.child, fieldname)
-    if isinstance(q, (Q.AndNot, Q.Require, Q.AndMaybe)):
-        return _is_term_tree(q.a, fieldname) and _is_term_tree(q.b, fieldname)
-    if not isinstance(q, _TREE_NODES) or not q.children:
-        return False
-    is_and = isinstance(q, Q.And)
-    if is_and and all(isinstance(c, Q.Not) for c in q.children):
-        return False
-    return all(_is_term_tree(c, fieldname, is_and) for c in q.children)
+        return under_and
+    return isinstance(q, _TREE_NODES) and not q.is_leaf()
+
+
+def _only_nots(q: Q.Query) -> bool:
+    """An And whose children are all Nots (read with _ALL_DOCS)."""
+    return isinstance(q, Q.And) and all(isinstance(c, Q.Not) for c in q.children)
 
 
 class _Compiled(NamedTuple):
     score: "F.Column"  # NULL exactly where the node does not match
     tm: Optional["F.Column"]  # live term matchers at the doc (see _TermTree)
-    # terms (and indices of overflowing leaves) whose every doc the node
-    # matches; the node is set at every doc of the aggregate when this
-    # covers all of the tree's terms and overflowing leaves
+    # terms (and tags of overflowing and frame leaves) whose every doc the
+    # node matches; the node is set at every doc of the aggregate when
+    # this covers all of the tree's terms and tagged leaves
     cover: FrozenSet = frozenset()
 
 
@@ -256,35 +262,48 @@ def _term_boosts(terms: Sequence[Q.Term]) -> Dict[str, float]:
 
 
 class _TermTree:
-    """Column expressions for one term tree over the per-docid aggregate
-    of its one postings scan (`frame`).
+    """Column expressions for one boolean tree over the per-docid
+    aggregate of its one postings scan and its tagged rows (`frame`).
 
     A node's `score` is NULL exactly at the docs it does not match, so
     the operators need no flag columns: And is plain `+` (NULL when any
-    child is), Or sums the children that are set, DisjunctionMax is
-    `greatest` (which skips NULLs), AndNot and Require gate `a` on `b`
-    being NULL or set.  A word has one score column (`word`), shared by
-    its Term leaves and the phrases that hold it, and one positions
+    child is; IntersectionMatcher sums scores, matching/binary.py:95-96),
+    Or sums the children that are set (UnionMatcher, binary.py:252-268),
+    DisjunctionMax is `greatest` (which skips NULLs), AndNot and Require
+    gate `a` on `b` being NULL or set (binary.py:559-676,
+    wrappers.py:431-494).  A word has one score column (`word`), shared
+    by its Term leaves and the phrases that hold it, and one positions
     column (`positions`) when a positional leaf reads it; a span leaf
     over a term set reads one positions union (`span_leaf`), and a span
     query is a leaf whose (score, spans) columns query/spans.py builds.
-    `tm` mirrors Searcher._tm_frame for the scaled-Or matching count: the
-    node's live term matchers active at the doc, NULL where its frame has
-    no row, or None where _tm_frame has no frame (spans, overflowing
-    expansions) and the count falls back to _matching_term_count.
-    Catalyst prunes the aggregates nothing reads, so unused counts cost
-    nothing.
 
-    An overflowing multiterm leaf (`rels`: its expansion passed
-    TOO_MANY_CLAUSES) adds its _scored_postings_rel rows to the same
-    aggregate, tagged `_leaf` = its index and with a NULL term, so a term
-    that is both scanned and matched by the leaf's pattern counts once per
-    leaf.  A tree without one has no tag column and no union."""
+    `tm` is the node's count of live term matchers active at the doc
+    (Matcher.matching_terms, mcore.py:112-124), which only a scaled Or
+    reads: NULL where the node has no count row, or None where the count
+    is not known per doc (spans, overflowing expansions, DisjunctionMax,
+    frame leaves without `_tm`) and the Or falls back to the constant
+    _matching_term_count.  Intersection children count their terms only
+    at docs they match, an AndNot only its `a` side (at a matched doc the
+    excluded side's cursor is elsewhere), and a Not or a term-less leaf
+    0.  Catalyst prunes the aggregates nothing reads, so unused counts
+    cost nothing.
+
+    Two kinds of leaves add tagged rows to the same aggregate, each
+    tagged `_leaf` = its index in `rels` + `frames`, with a NULL term:
+    an overflowing multiterm leaf (`rels`: its expansion passed
+    TOO_MANY_CLAUSES) adds its _scored_postings_rel rows, so a term that
+    is both scanned and matched by the leaf's pattern counts once per
+    leaf; a frame leaf (`frames`: a maximal subtree that _compiles
+    declines) adds the rows of its docid-unique frame
+    (Searcher._leaf_frame), with its per-doc `_tm` where known.  A tree
+    without either has no tag column and no union."""
 
     def __init__(
-        self, searcher: "Searcher", terms: List[str], rels: Sequence = ()
+        self, searcher: "Searcher", fieldname: str, terms: List[str],
+        rels: Sequence = (), frames: Sequence = (),
     ):
         self.s = searcher
+        self.field = fieldname
         self.terms = terms
         self.rels = list(rels)
         self.aggs: List["F.Column"] = []
@@ -292,37 +311,61 @@ class _TermTree:
         self._positions: Dict[object, str] = {}
         # one stats lookup for every scanned term, before any leaf asks
         searcher._lookup_stats(terms)
+        self.frames = [(leaf, searcher._leaf_frame(leaf)) for leaf in frames]
 
     @classmethod
-    def of(cls, searcher: "Searcher", q: Q.Query) -> "_TermTree":
-        """The tree over q's leaves: Terms, phrase words and small
-        expansions join the one scan, overflowing expansions are rels."""
+    def of(
+        cls, searcher: "Searcher", q: Q.Query, fieldname: Optional[str] = None
+    ) -> "_TermTree":
+        """The tree over q: Terms, phrase words and small expansions join
+        the one scan, overflowing expansions are rels, and each maximal
+        subtree _compiles declines is a frame leaf."""
+        field = fieldname or searcher.ix.fieldname
         terms: List[str] = []
         rels: List[Q.Query] = []
-        for leaf in q.leaves():
-            if isinstance(leaf, Q.Term):
-                terms.append(leaf.text)
-            elif isinstance(leaf, (Q.Phrase, Q.Ordered)):
-                terms += leaf.words
-            elif isinstance(leaf, Q._MultiTerm):
-                texts = searcher.expand_terms(leaf)
-                if texts is None:
-                    rels.append(leaf)
-                else:
-                    terms += texts
+        frames: List[Q.Query] = []
+
+        def visit(node: Q.Query, under_and: bool = False) -> None:
+            if not _compiles(node, field, under_and):
+                frames.append(node)
+            elif isinstance(node, (SpanQuery,) + _LEAVES):
+                for leaf in node.leaves():
+                    if isinstance(leaf, Q.Term):
+                        terms.append(leaf.text)
+                    elif isinstance(leaf, (Q.Phrase, Q.Ordered)):
+                        terms.extend(leaf.words)
+                    elif isinstance(leaf, Q._MultiTerm):
+                        texts = searcher.expand_terms(leaf)
+                        if texts is None:
+                            rels.append(leaf)
+                        else:
+                            terms.extend(texts)
+            else:
+                if _only_nots(node):
+                    frames.append(_ALL_DOCS)
+                for c in node.children():
+                    visit(c, isinstance(node, Q.And))
+
+        visit(q)
+        # frame leaves by equality: a WeightingQuery's model may not hash
+        frames = [f for i, f in enumerate(frames) if f not in frames[:i]]
         return cls(
-            searcher, list(dict.fromkeys(terms)), list(dict.fromkeys(rels))
+            searcher, field, list(dict.fromkeys(terms)),
+            list(dict.fromkeys(rels)), frames,
         )
 
     def frame(self) -> DataFrame:
-        """The one pushed `term IN` scan and each overflowing leaf's rows,
-        grouped by docid into `aggs`; positions are read only when a
-        positional leaf asked for them."""
+        """The one pushed `term IN` scan, each overflowing leaf's rows and
+        each frame leaf's frame, grouped by docid into `aggs`; positions
+        are read only when a positional leaf asked for them."""
         pos = bool(self._positions)
         parts = [self.s._scored_postings(self.terms, pos)] if self.terms else []
-        for i, leaf in enumerate(self.rels):
-            rel = self.s._scored_postings_rel(leaf, pos).drop("term")
-            parts.append(rel.withColumn("_leaf", F.lit(i)))
+        tagged = [
+            self.s._scored_postings_rel(leaf, pos).drop("term")
+            for leaf in self.rels
+        ] + [rows for _, rows in self.frames]
+        for i, rows in enumerate(tagged):
+            parts.append(rows.withColumn("_leaf", F.lit(i)))
         if not parts:  # only empty expansions: nothing can match
             return self.s.ix.postings.sparkSession.createDataFrame(
                 [], "docid long"
@@ -333,14 +376,17 @@ class _TermTree:
         return rows.groupBy("docid").agg(*self.aggs)
 
     def _rows(self, key) -> str:
-        """SQL condition for the rows of `key`: a term set, or the index
-        of an overflowing leaf."""
+        """SQL condition for the rows of `key`: a term set, or the tag of
+        an overflowing or frame leaf."""
         return f"_leaf = {key}" if isinstance(key, int) else term_in(list(key))
 
     def _agg(self, key, value: "F.Column") -> "F.Column":
         """sum(value) over the doc's rows of `key` (see _rows); NULL where
         it has none."""
-        if isinstance(key, int) or self.rels or len(key) < len(self.terms):
+        if (
+            isinstance(key, int) or self.rels or self.frames
+            or len(key) < len(self.terms)
+        ):
             value = F.when(F.expr(self._rows(key)), value)
         name = f"_a{len(self.aggs)}"
         self.aggs.append(F.sum(value).alias(name))
@@ -413,14 +459,18 @@ class _TermTree:
 
     def total(self, cover: FrozenSet) -> bool:
         """Whether a node with this cover is set at every aggregated doc."""
-        return len(cover) == len(self.terms) + len(self.rels)
+        return len(cover) == (
+            len(self.terms) + len(self.rels) + len(self.frames)
+        )
 
     def _live(self, term: str) -> bool:
         return self.s._stats[term][0] > 0
 
-    def compile(self, q: Q.Query) -> _Compiled:
+    def compile(self, q: Q.Query, under_and: bool = False) -> _Compiled:
+        if not _compiles(q, self.field, under_and):
+            return self._frame_leaf(q)
         if isinstance(q, SpanQuery):
-            # no matcher count (_tm_frame has no frame for spans) and no cover
+            # no per-doc matcher count and no cover
             score, _ = span_columns(self, q)
             return _Compiled(score, None)
         if isinstance(q, Q.Term):
@@ -433,13 +483,16 @@ class _TermTree:
             return self._multiterm(q)
         if isinstance(q, Q.Not):
             # scored at the InverseMatcher's default 1.0, never Not.boost
-            # (see the Not branch of Searcher._eval)
+            # (see the Not branch of Searcher._eval); its inner cursor
+            # parks on excluded docs, so 0 matchers at the docs it matches
             child = self.compile(q.child)
             return _Compiled(F.when(child.score.isNull(), F.lit(1.0)), F.lit(0))
         if isinstance(q, Q.Or):
             return self._or(q)
         if isinstance(q, Q.And):
-            kids = [self.compile(c) for c in q.children]
+            kids = [self.compile(c, True) for c in q.children]
+            if _only_nots(q):
+                kids.insert(0, self._frame_leaf(_ALL_DOCS))
             score = reduce(operator.add, [k.score for k in kids])
             return _Compiled(
                 _boosted(score, q.boost), _all_sum([k.tm for k in kids]),
@@ -501,15 +554,15 @@ class _TermTree:
 
     def _multiterm(self, q: Q.Query) -> _Compiled:
         """An Or of the leaf's expansion terms, whose `tm` counts the
-        expansion terms at the doc (as _tm_frame does).  Reference quirk
+        expansion terms at the doc.  Reference quirk
         (round-5 parser fuzz, "(alfa~)^2"): a single-term expansion is
         the bare, boost-less Term matcher (terms.py:221,227-228), so the
         leaf's boost applies only to a multi-term expansion, through
         Or(qs, boost) (compound.py:232-233); pinned by
         test_multiterm_singleton_boost_drop_golden.  An empty expansion
         never matches.  An overflowing expansion scores its tagged rows
-        and has no matcher count (`tm` None, as _tm_frame has no frame for
-        it), so a scaled Or counts it by _matching_term_count."""
+        and has no per-doc matcher count (`tm` None), so a scaled Or
+        counts it by _matching_term_count."""
         texts = self.s.expand_terms(q)
         if texts is None:
             key = self.rels.index(q)
@@ -522,9 +575,19 @@ class _TermTree:
         tm = self._agg(texts, F.lit(1))
         return _Compiled(_boosted(score, boost), tm, frozenset(texts))
 
+    def _frame_leaf(self, q: Q.Query) -> _Compiled:
+        """A frame leaf's score and matcher count: the sums over its
+        tagged rows, one at each doc it matches."""
+        j = [leaf for leaf, _ in self.frames].index(q)
+        key = len(self.rels) + j
+        rows = self.frames[j][1]
+        tm = self._agg(key, F.col("_tm")) if "_tm" in rows.columns else None
+        return _Compiled(self._agg(key, F.col("score")), tm, frozenset([key]))
+
     def _or(self, q: Q.Or) -> _Compiled:
-        terms = [c for c in q.children if isinstance(c, Q.Term)]
-        others = [c for c in q.children if not isinstance(c, Q.Term)]
+        terms = [c for c in q.children
+                 if isinstance(c, Q.Term) and c.fieldname == self.field]
+        others = [c for c in q.children if c not in terms]
         kids = [self.compile(c) for c in others]
         # what each child adds to the SQR matching count where it matches;
         # only a scaled Or reads it (the constant count of an overflowing
@@ -863,127 +926,7 @@ class Searcher:
             cols.append("positions")
         return joined.select(*cols)
 
-    # -- coordination (SQR) helpers -------------------------------------------
-
-    def _eval_with_tm(self, c: Q.Query) -> DataFrame:
-        """Child frame (docid, score, _tm) for the SQR matching count.
-        `_tm` is the number of the child's live term matchers AT the doc
-        (Matcher.matching_terms, mcore.py:112-124): constant for
-        Term/Phrase/And (a match implies every leaf active), but PER-DOC
-        for multiterm expansions and nested unscaled Ors, where only the
-        terms the doc contains are active — the round-5 or-mode fuzz
-        caught the constant upper bound overcounting
-        ('alfa OR [alfa TO]').  Binary/Not children keep the documented
-        constant approximation (the reference's own count there depends
-        on cursor positions of non-matching branches)."""
-        tmf = self._tm_frame(c)
-        if tmf is not None:
-            return self._eval(c).join(tmf, "docid", "left").select(
-                "docid", "score",
-                F.coalesce(F.col("_tm"), F.lit(0)).alias("_tm"),
-            )
-        return self._eval(c).withColumn(
-            "_tm", F.lit(self._matching_term_count(c))
-        )
-
-    def _tm_frame(self, q: Q.Query) -> Optional[DataFrame]:
-        """(docid, _tm) — per-doc count of q's term matchers active at the
-        doc, for the term/phrase/multiterm/And/Or algebra; None when q
-        needs the constant fallback.  Intersection children count their
-        terms only on docs they match (inner join), matching the
-        reference's skip_to-driven cursor placement."""
-        if isinstance(q, Q.WeightingQuery):
-            # a re-weighted subtree builds the same term matchers
-            return self._tm_frame(q.child)
-        if isinstance(q, Q.Term):
-            if self._lookup_stats([q.text])[q.text][0] == 0:
-                return None  # dead term: constant 0 fallback is exact
-            return self.ix.postings.where(
-                F.col("term") == q.text
-            ).select("docid", F.lit(1).alias("_tm"))
-        if isinstance(q, (Q.Phrase, Q.Ordered)):
-            n = self._n_term_matchers(q)
-            if n == 0:
-                return None
-            return self._eval(q).select("docid", F.lit(n).alias("_tm"))
-        if isinstance(q, Q._MultiTerm):
-            texts = self.expand_terms(q)
-            if texts is None:
-                return None
-            return (
-                self.ix.postings.where(term_in(texts))
-                .groupBy("docid")
-                .agg(F.count(F.lit(1)).alias("_tm"))
-            )
-        if isinstance(q, Q.Or):
-            # scale is irrelevant here: the CoordMatcher wrapper is
-            # transparent to term_matchers, so a nested scaled Or counts
-            # like a plain union
-            frames = [self._tm_frame(cc) for cc in q.children]
-            if any(f is None for f in frames):
-                return None
-            return _union(frames).groupBy("docid").agg(F.sum("_tm").alias("_tm"))
-        if isinstance(q, Q.And):
-            out = None
-            for cc in q.children:
-                f = self._tm_frame(cc)
-                if f is None:
-                    return None
-                f = f.withColumnRenamed("_tm", "_tm_c")
-                if out is None:
-                    out = f.withColumnRenamed("_tm_c", "_tm")
-                else:
-                    out = out.join(f, "docid").select(
-                        "docid",
-                        (F.col("_tm") + F.col("_tm_c")).alias("_tm"),
-                    )
-            return out
-        if isinstance(q, Q.AndNot):
-            # at an AndNot-matched doc the excluded side's cursor is by
-            # construction NOT at the doc (it would have excluded it), so
-            # only the a side counts; _eval_with_tm's left join restricts
-            # to matched docs (verified live: 'alfa ANDNOT bravo NOT
-            # alfa' scores with m=1 at alfa docs, tc=3)
-            return self._tm_frame(q.a)
-        if isinstance(q, Q.Require):
-            # both sides present at every matched doc
-            fa, fb = self._tm_frame(q.a), self._tm_frame(q.b)
-            if fa is None or fb is None:
-                return None
-            fb = fb.withColumnRenamed("_tm", "_tm_b")
-            return fa.join(fb, "docid").select(
-                "docid", (F.col("_tm") + F.col("_tm_b")).alias("_tm")
-            )
-        if isinstance(q, Q.AndMaybe):
-            # a side always at matched docs; b side only where it matches
-            fa, fb = self._tm_frame(q.a), self._tm_frame(q.b)
-            if fa is None or fb is None:
-                return None
-            fb = fb.withColumnRenamed("_tm", "_tm_b")
-            return fa.join(fb, "docid", "left").select(
-                "docid",
-                (
-                    F.col("_tm") + F.coalesce(F.col("_tm_b"), F.lit(0))
-                ).alias("_tm"),
-            )
-        if isinstance(q, Q.Not):
-            # the inverse matcher's inner cursor parks on EXCLUDED docs,
-            # never on the docs the Not (or its union siblings) matches —
-            # 0 at-doc matchers even though its terms count toward tc
-            return self.ix.docmeta.select(
-                "docid", F.lit(0).alias("_tm")
-            )
-        if isinstance(
-            q,
-            (Q.Every, Q.NullQuery, Q.NumericRange, Q.DateRange, Q.ColumnQuery),
-        ):
-            # term-less leaves: their matchers carry no term, so they
-            # contribute 0 active term matchers at any doc (round-6
-            # or-mode fuzz find, "* ANDNOT 'alfa alfa'^2": the AndNot's
-            # Every side must count 0, not fall back to the constant
-            # that includes the prohibited side's terms)
-            return self.ix.docmeta.select("docid", F.lit(0).alias("_tm"))
-        return None
+    # -- coordination (SQR) counts -------------------------------------------
 
     def _n_term_matchers(self, q: Q.Query) -> int:
         """Number of LIVE leaf term matchers the reference builds for q
@@ -1027,10 +970,7 @@ class Searcher:
             if key not in counts:
                 counts[key] = int(self._multiterm_frame(q).count())
             return counts[key]
-        if isinstance(
-            q,
-            (Q.Every, Q.NullQuery, Q.NumericRange, Q.DateRange, Q.ColumnQuery),
-        ):
+        if isinstance(q, _TERMLESS):
             return 0
         if isinstance(q, Q._Compound):
             return sum(self._n_term_matchers(c) for c in q.children)
@@ -1064,7 +1004,7 @@ class Searcher:
         if isinstance(q, Q.AndNot):
             # at an AndNot-matched doc the prohibited side's cursor is by
             # construction elsewhere: only the a side's matchers are
-            # active (mirrors the _tm_frame AndNot branch)
+            # active (as the compiled AndNot counts, _TermTree.compile)
             return self._matching_term_count(q.a)
         return self._n_term_matchers(q)
 
@@ -1083,113 +1023,6 @@ class Searcher:
         out = self._eval_term_tree(q)
         if out is not None:
             return out
-        if isinstance(q, Q.Or):
-            # Not children evaluate to their complement frame (score = boost,
-            # like the reference's InverseMatcher, matching/wrappers.py:424-428)
-            tc = 0
-            if q.scale:
-                # SQR coordination bonus (CoordMatcher, wrappers.py:532-583).
-                # The reference's termcount is the number of LEAF TERM
-                # MATCHERS in the whole tree (mcore.py:103-110) — a phrase
-                # child contributes one per word — and `matching` counts the
-                # term matchers active at the doc.  Each child frame carries
-                # its term-matcher count; when a child matches, all of its
-                # term matchers are active (exact for Term/Phrase/Ordered/
-                # And; Not contributes 0).  Pre-warm the stats memo in ONE
-                # lexicon lookup so the per-child live-matcher counts
-                # don't each pay a driver round-trip.
-                self._lookup_stats([t for _, t in q.iter_all_terms()])
-                tc = sum(self._n_term_matchers(c) for c in q.children)
-            if q.scale and tc:
-                if tc == q.scale:
-                    # degenerate SQR denominator — still yield matching docs
-                    # at score 0 like CoordMatcher._sqr (wrappers.py:560+)
-                    u0 = _union(
-                        [self._eval(c).select("docid") for c in q.children]
-                    )
-                    return u0.distinct().select(
-                        "docid", F.lit(0.0).alias("score")
-                    )
-                u = _union([self._eval_with_tm(c) for c in q.children])
-                agg = u.groupBy("docid").agg(
-                    F.sum("score").alias("_s"),
-                    F.sum("_tm").alias("_m"),
-                )
-                # node boost inside the SQR, as in _TermTree._or
-                sqr = (
-                    F.col("_s") * F.lit(q.boost)
-                    + (F.col("_m") - 1) / F.lit(float((tc - q.scale) ** 2))
-                ) * F.lit((tc - 1) / tc)
-                return agg.select("docid", sqr.alias("score"))
-            u = _union([self._eval(c) for c in q.children])
-            out = u.groupBy("docid").agg(F.sum("score").alias("score"))
-            return self._boosted_frame(out, q.boost)
-        if isinstance(q, Q.And):
-            pos = [c for c in q.children if not isinstance(c, Q.Not)]
-            neg = [c for c in q.children if isinstance(c, Q.Not)]
-            n = len(pos)
-            if not pos:
-                # And of only Nots (e.g. "NOT foo NOT bar"): start from the
-                # full doc set at score 0 — each Not's boost is added below,
-                # matching the bare-Not complement semantics
-                out = self._all_docs(0.0)
-            else:
-                u = _union([self._eval(c) for c in pos])
-                # every _eval child frame is docid-unique (see _eval
-                # docstring), so each child contributes at most one row
-                # per docid and the row count equals the distinct-child
-                # count — count_distinct would plan an extra exchange
-                out = (
-                    u.groupBy("docid")
-                    .agg(
-                        F.sum("score").alias("score"),
-                        F.count(F.lit(1)).alias("_n"),
-                    )
-                    .where(F.col("_n") == n)
-                    .drop("_n")
-                )
-            # anti-join each negated child; the InverseMatcher still SCORES
-            # for surviving docs — but always its default weight 1.0:
-            # Not.matcher never forwards Not.boost into InverseMatcher
-            # (wrappers.py:138-144; score() at matching/wrappers.py:424-428
-            # returns the 1.0 default), verified live round 5
-            neg_bonus = 0.0
-            for nq in neg:
-                out = out.join(self._eval(nq.child), "docid", "left_anti")
-                neg_bonus += 1.0
-            if neg_bonus:
-                out = out.select(
-                    "docid", (F.col("score") + F.lit(neg_bonus)).alias("score")
-                )
-            return self._boosted_frame(out, q.boost)
-        if isinstance(q, Q.DisjunctionMax):
-            # NOTE: the reference's DisjunctionMaxMatcher.score() is a pure
-            # max — its `tiebreak` argument is stored but never used in
-            # scoring (matching/binary.py:367-374).  We mirror that exactly.
-            u = _union([self._eval(c) for c in q.children])
-            agg = u.groupBy("docid").agg(F.max("score").alias("_mx"))
-            return agg.select(
-                "docid", (F.col("_mx") * F.lit(q.boost)).alias("score")
-            )
-        if isinstance(q, Q.AndNot):
-            return self._boosted_frame(
-                self._eval(q.a).join(self._eval(q.b), "docid", "left_anti"),
-                q.boost,
-            )
-        if isinstance(q, Q.Require):
-            return self._boosted_frame(
-                self._eval(q.a).join(self._eval(q.b), "docid", "left_semi"),
-                q.boost,
-            )
-        if isinstance(q, Q.AndMaybe):
-            a = self._eval(q.a)
-            b = self._eval(q.b).withColumnRenamed("score", "_bscore")
-            s = F.col("score") + F.coalesce(F.col("_bscore"), F.lit(0.0))
-            if q.boost != 1.0:
-                s = s * F.lit(q.boost)
-            return a.join(b, "docid", "left").select(
-                "docid", s.alias("score")
-            )
         if isinstance(q, Q.Not):
             # complement scored at the InverseMatcher's default weight:
             # Not.matcher never forwards its boost (wrappers.py:138-144
@@ -1208,17 +1041,7 @@ class Searcher:
                 "docid", F.lit(float(q.score)).alias("score")
             )
         if isinstance(q, Q.WeightingQuery):
-            # re-plan the subtree under the wrapped model
-            # (wrappers.py:193-199: context.set(weighting=...)); the
-            # sub-searcher shares ix and this searcher's stats memo,
-            # expansion cache and overflow counts, which do not depend on
-            # the weighting, so memoized terms run no lookup job
-            if q.weighting is None or q.weighting is self.weighting:
-                return self._eval(q.child)
-            sub = Searcher(self.ix, q.weighting)
-            sub._stats, sub._expand_cache = self._stats, self._expand_cache
-            sub._overflow_counts = self._overflow_counts
-            return sub._eval(q.child)
+            return self._weighted(q.weighting)._eval(q.child)
         if isinstance(q, Q.Otherwise):
             a = self._eval(q.a)
             return self._boosted_frame(
@@ -1245,36 +1068,81 @@ class Searcher:
             return self._boosted_frame(nested_children(self, pq), q.boost)
         raise TypeError(f"unsupported query node: {q!r}")
 
-    def _eval_term_tree(self, q: Q.Query) -> Optional[DataFrame]:
-        """One aggregation for every query over postings (_is_term_tree):
-        any nesting of And / Or (plain or scaled) / DisjunctionMax /
-        AndNot / Require / AndMaybe, with Not children under an And, over
-        Terms, Phrases, Ordereds, multiterm leaves and span queries.  A
+    def _weighted(self, weighting: Optional[WeightingModel]) -> "Searcher":
+        """The searcher that plans a WeightingQuery's subtree under its
+        model (wrappers.py:193-199: context.set(weighting=...)): this one
+        when the model is None or its own, else a sub-searcher sharing ix
+        and this searcher's stats memo, expansion cache and overflow
+        counts, which do not depend on the weighting, so memoized terms
+        run no lookup job."""
+        if weighting is None or weighting is self.weighting:
+            return self
+        sub = Searcher(self.ix, weighting)
+        sub._stats, sub._expand_cache = self._stats, self._expand_cache
+        sub._overflow_counts = self._overflow_counts
+        return sub
+
+    def _leaf_frame(self, q: Q.Query) -> DataFrame:
+        """The docid-unique (docid, score) frame of a frame leaf (see
+        _TermTree), with `_tm`, its live term matchers at each doc it
+        matches, where that count is known per doc: the compiled count of
+        a tree or leaf that its searcher compiles (a WeightingQuery's
+        subtree is planned by its own searcher), and 0 for a term-less
+        leaf or a Not (the inverse matcher's cursor parks on the docs it
+        excludes).  Without `_tm`, a scaled Or counts the leaf by the
+        constant _matching_term_count."""
+        if isinstance(q, Q.WeightingQuery):
+            return self._weighted(q.weighting)._leaf_frame(q.child)
+        if isinstance(q, Q.Term):
+            # the bare Term's frame: no aggregate, one matcher where live
+            out = self._eval(q)
+            live = self._n_term_matchers(q) > 0
+            return out.withColumn("_tm", F.lit(1)) if live else out
+        out = self._eval_term_tree(q, with_tm=True)
+        if out is not None:
+            return out
+        out = self._eval(q)
+        if isinstance(q, _TERMLESS + (Q.Not,)):
+            return out.withColumn("_tm", F.lit(0))
+        return out
+
+    def _eval_term_tree(
+        self, q: Q.Query, with_tm: bool = False
+    ) -> Optional[DataFrame]:
+        """One aggregation for every boolean tree: any nesting of And / Or
+        (plain or scaled) / DisjunctionMax / AndNot / Require / AndMaybe,
+        with Not children under an And, over Terms, Phrases, Ordereds,
+        multiterm leaves, span queries and frame leaves (_compiles).  A
         bare Phrase, Ordered, multiterm leaf or span query compiles as a
         one-leaf tree whatever its fieldnames, as the Term branch of _eval
-        plans a bare Term.  None for any other tree, which the union/join
-        path of _eval then plans operator by operator.
+        plans a bare Term.  None for any other node, which _eval plans
+        alone.  With `with_tm`, the frame also carries the root's matcher
+        count `_tm` where it is known per doc (see _TermTree).
 
         The leaves' distinct terms (phrase words, span leaves and small
         expansions included) are scanned once (the pushed `term IN`
-        filter), each overflowing expansion adds its tagged
-        _scored_postings_rel rows, and the rows are grouped by docid
-        once: the Term children of an Or aggregate as one boosted score
-        sum, every other leaf reads per-word score and positions columns
-        or a term set's score sum and positions union.  The tree then
-        evaluates bottom-up as column expressions over those aggregates
-        (_TermTree, and query/spans.py for span nodes) — the vectorized
-        boolean and positional evaluation of "Columnar Formatted Inverted
-        Index for Highly-Paralleled, Vectorized Query Processing"
-        (PAPERS.md), not one join per operator.  Every matched doc holds
-        one of the leaves' rows, so the aggregate's docids cover all
-        hits."""
+        filter), each overflowing expansion and each frame leaf adds its
+        tagged rows, and the rows are grouped by docid once: the Term
+        children of an Or aggregate as one boosted score sum, every other
+        leaf reads per-word score and positions columns, a term set's
+        score sum and positions union, or its tagged rows' sums.  The
+        tree then evaluates bottom-up as column expressions over those
+        aggregates (_TermTree, and query/spans.py for span nodes) — the
+        vectorized boolean and positional evaluation of "Columnar
+        Formatted Inverted Index for Highly-Paralleled, Vectorized Query
+        Processing" (PAPERS.md), not one join per operator.  Every matched
+        doc holds one of the leaves' rows (an And of only Nots reads an
+        Every frame leaf), so the aggregate's docids cover all hits."""
         field = q.fieldname if isinstance(q, _LEAVES) else self.ix.fieldname
-        if not _is_term_tree(q, field):
+        if not _compiles(q, field):
             return None
-        tree = _TermTree.of(self, q)
+        tree = _TermTree.of(self, q, field)
         root = tree.compile(q)
-        out = tree.frame().select("docid", root.score.alias("score"))
+        cols = ["docid", root.score.alias("score")]
+        if with_tm and root.tm is not None:
+            # NULL where the count has no row: no active matcher
+            cols.append(F.coalesce(root.tm, F.lit(0)).alias("_tm"))
+        out = tree.frame().select(*cols)
         if tree.total(root.cover):
             return out
         return out.where(F.col("score").isNotNull())
@@ -1394,8 +1262,8 @@ class Searcher:
             docnums = obj.docs()
         else:
             docnums = set(obj)
-        cond = F.col("docid").isin([int(d) for d in docnums])
-        return hits.where(cond if keep else ~cond)
+        cond = column_in("docid", docnums)
+        return hits.where(cond if keep else f"NOT ({cond})")
 
     def search_list(self, q: Q.Query, limit: Optional[int] = 10) -> List[Tuple]:
         rows = self.search(q, limit).collect()
