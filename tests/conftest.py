@@ -74,3 +74,23 @@ def aggregates(plan: str) -> list:
     """The aggregate operators in a plan string, partial and final halves
     each, outermost first."""
     return [ln for ln in plan.splitlines() if "Aggregate(keys=" in ln]
+
+
+def column_bytes(table_dir: str) -> dict:
+    """Compressed bytes per column of a parquet table directory, summed
+    over its files' column chunks as their footers record them."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out: dict = {}
+    for f in sorted(glob.glob(os.path.join(table_dir, "*.parquet"))):
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for i in range(rg.num_columns):
+                c = rg.column(i)
+                out[c.path_in_schema] = (
+                    out.get(c.path_in_schema, 0) + c.total_compressed_size
+                )
+    return out

@@ -263,6 +263,40 @@ def test_scaled_or_across_fields(spark):
     assert got == pytest.approx(want, rel=1e-9)
 
 
+def test_weighting_query_routes_fielded_leaves(spark):
+    """A WeightingQuery inside a MultiFieldSearcher plans its subtree with
+    field searchers that carry its model: a title leaf under it hits the
+    title docs, scored by the model over the title index."""
+    from whoosh_reloaded_spark.multifield import (
+        FieldSpec,
+        MultiFieldSearcher,
+        build_multi_index,
+    )
+    from whoosh_reloaded_spark.query import Searcher
+
+    df = spark.createDataFrame(
+        [("d0", "alpha gamma", "beta"), ("d1", "gamma", "beta alpha"),
+         ("d2", "alpha alpha", "gamma"), ("d3", "delta", "beta gamma")],
+        "url string, title string, body string",
+    )
+    indexes = build_multi_index(df, {
+        "title": FieldSpec("title"), "body": FieldSpec("body"),
+    })
+    s = MultiFieldSearcher(indexes, default_field="body")
+    alpha = T("alpha", field="title")
+    assert set(hits(s, alpha)) == {"d0", "d2"}
+    want = hits(Searcher(indexes["title"], TF_IDF()), alpha)
+    assert set(want) == {"d0", "d2"}
+    got = hits(s, Q.WeightingQuery(alpha, TF_IDF()))
+    assert got == pytest.approx(want, rel=1e-12)
+    # inside a tree too: the body leaf keeps the searcher's own model
+    beta = T("beta", field="body")
+    tree = Q.Or((Q.WeightingQuery(alpha, TF_IDF()), beta))
+    body = hits(s, beta)
+    both = {u: want.get(u, 0.0) + body.get(u, 0.0) for u in set(want) | set(body)}
+    assert hits(s, tree) == pytest.approx(both, rel=1e-12)
+
+
 if __name__ == "__main__":
     from pyspark.sql import SparkSession
 

@@ -9,21 +9,36 @@
   before the writer options) loads and answers every query identically.
 * ``open_partitioned`` over such an old-layout segment plus an
   ``append_batch`` segment answers identically too.
+* Saved postings hold no ``length`` column: a doc's exact length is kept
+  once, in docmeta, and equals its token count.  An index in the layout
+  of format version 1 (each posting repeating its doc's ``length``, the
+  tables written with Spark's default writer, no schemas in stats.json)
+  loads and answers identically under the default and the exact-length
+  models, beside a new segment too, and merging it writes no ``length``.
+* Plan shapes: the default model's plans join nothing; an exact-length
+  model joins docmeta once per postings scan of a saved index, and reads
+  the column in place where the postings still carry it.
+* load_index reads the schemas recorded in stats.json, which equal the
+  ones inferred from the parquet footers.
 """
 
 import glob
+import json
 import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import column_bytes, final_plan, joins, postings_scans
 from whoosh_reloaded_spark.corpus import PAGES_SCHEMA, generate_rows
 from whoosh_reloaded_spark.index import build_index, load_index, save_index
 from whoosh_reloaded_spark.index.checkpoint import open_partitioned
 from whoosh_reloaded_spark.index.mutate import delete_by_term
+from whoosh_reloaded_spark.index.segments import merge_segments
 from whoosh_reloaded_spark.query import Searcher
 from whoosh_reloaded_spark.query import ast as Q
+from whoosh_reloaded_spark.scoring import BM25F, PL2
 from whoosh_reloaded_spark.streaming.append import append_batch
 
 pq = pytest.importorskip("pyarrow.parquet")
@@ -128,8 +143,8 @@ def _queries(ix):
     ]
 
 
-def _answers(ix, queries):
-    s = Searcher(ix)
+def _answers(ix, queries, weighting=None):
+    s = Searcher(ix, weighting)
     return [s.search_list(q, 20) for q in queries]
 
 
@@ -156,3 +171,177 @@ def test_old_segment_beside_new_one(spark, tmp_path):
 
     _rewrite_default(spark, os.path.join(root, "segment_00000"))
     assert _answers(open_partitioned(spark, root), queries) == want
+
+
+MODELS = {
+    "default": BM25F(),
+    "exact": BM25F(quantized=False),
+    "pl2_exact": PL2(quantized=False),
+}
+
+
+def _to_parent_layout(spark, seg):
+    """Rewrite the index at `seg` in the layout of format version 1: each
+    posting repeats its doc's exact ``length`` (from docmeta), every
+    table is written with Spark's default writer, and stats.json records
+    no schemas."""
+    src = os.path.join(seg, "postings")
+    p = spark.read.parquet(src)
+    lengths = spark.read.parquet(os.path.join(seg, "docmeta")).select(
+        "docid", "length"
+    )
+    cols = list(p.columns)
+    cols.insert(cols.index("len_byte"), "length")
+    # a broadcast join streams the postings in their file split and order
+    p.join(F.broadcast(lengths), "docid").select(*cols).write.parquet(
+        src + "_old"
+    )
+    shutil.rmtree(src)
+    os.rename(src + "_old", src)
+    _rewrite_default(spark, seg)
+    stats_path = os.path.join(seg, "stats.json")
+    with open(stats_path) as f:
+        meta = json.load(f)
+    del meta["schemas"]
+    meta["format_version"] = 1
+    with open(stats_path, "w") as f:
+        json.dump(meta, f)
+    assert "length" in column_bytes(src)
+
+
+def test_postings_store_no_length(spark, saved):
+    cols = column_bytes(os.path.join(saved, "postings"))
+    assert "length" not in cols and "len_byte" in cols, cols
+    assert "length" in column_bytes(os.path.join(saved, "docmeta"))
+    ix = load_index(spark, saved)
+    assert "length" not in ix.postings.columns
+    # positions format: a doc's token count is the sum of its tfs
+    tokens = ix.postings.groupBy("docid").agg(F.sum("tf").alias("n"))
+    got = ix.docmeta.join(tokens, "docid", "left").select(
+        "docid", "length", F.coalesce("n", F.lit(0)).alias("n")
+    ).collect()
+    assert len(got) == 150
+    assert all(r["length"] == r["n"] for r in got)
+    assert sum(r["length"] for r in got) == ix.stats["field_length"]
+
+
+def test_recorded_schemas_equal_inferred(spark, saved):
+    with open(os.path.join(saved, "stats.json")) as f:
+        meta = json.load(f)
+    assert meta["format_version"] == 2
+    ix = load_index(spark, saved)
+    for table, df in (("postings", ix.postings), ("docmeta", ix.docmeta),
+                      ("term_stats", ix.term_stats)):
+        inferred = spark.read.parquet(os.path.join(saved, table)).schema
+        assert json.loads(meta["schemas"][table]) == inferred.jsonValue()
+        assert df.schema == inferred, table
+
+
+@pytest.fixture(scope="module")
+def parent_layout(spark, saved, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("parent") / "ix")
+    shutil.copytree(saved, path)
+    _to_parent_layout(spark, path)
+    return path
+
+
+@pytest.mark.parametrize("model", list(MODELS))
+def test_parent_layout_index_answers_identically(
+    spark, saved, parent_layout, model
+):
+    new = load_index(spark, saved)
+    queries = _queries(new)
+    want = _answers(new, queries, MODELS[model])
+    assert all(want), queries
+    old = load_index(spark, parent_layout)
+    assert "length" in old.postings.columns
+    assert _answers(old, queries, MODELS[model]) == want
+
+
+@pytest.mark.parametrize("model", list(MODELS))
+def test_parent_layout_segment_beside_new_one(spark, tmp_path, model):
+    root = str(tmp_path / "root")
+    append_batch(_docs(spark, 120, seed=1), root)
+    append_batch(_docs(spark, 80, seed=2), root)
+    ix = open_partitioned(spark, root)
+    queries = _queries(ix)
+    want = _answers(ix, queries, MODELS[model])
+    assert all(want), queries
+
+    _to_parent_layout(spark, os.path.join(root, "segment_00000"))
+    assert _answers(open_partitioned(spark, root), queries, MODELS[model]) == want
+
+
+def test_merge_of_parent_and_new_segments(spark, tmp_path):
+    root = str(tmp_path / "root")
+    append_batch(_docs(spark, 120, seed=1), root)
+    append_batch(_docs(spark, 80, seed=2), root)
+    segs = [os.path.join(root, f"segment_0000{i}") for i in range(2)]
+    ix = open_partitioned(spark, root)
+    lengths = sorted(ix.docmeta.select("docid", "length").collect())
+    queries = _queries(ix)
+    want = {m: _answers(ix, queries, w) for m, w in MODELS.items()}
+
+    _to_parent_layout(spark, segs[0])
+    out = str(tmp_path / "merged")
+    merged = merge_segments(spark, segs, out)
+    assert "length" not in column_bytes(os.path.join(out, "postings"))
+    assert sorted(merged.docmeta.select("docid", "length").collect()) == lengths
+    for m, w in MODELS.items():
+        assert _answers(merged, queries, w) == want[m], m
+
+
+def _plan(searcher, q):
+    """The executed plan of a top-10 search: the final adaptive plan, or
+    the plain one where no exchange made the plan adaptive."""
+    out = searcher.search(q, 10, with_uid=False)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    return final_plan(out) if "AdaptiveSparkPlan" in plan else plan
+
+
+def _plan_queries(ix):
+    term, either, both, _, _, phrase, _, _ = _queries(ix)
+    return {"term": term, "or": either, "and": both, "phrase": phrase}
+
+
+def test_default_plans_join_nothing(spark, saved):
+    ix = load_index(spark, saved)
+    s = Searcher(ix)
+    for name, q in _plan_queries(ix).items():
+        plan = _plan(s, q)
+        assert len(postings_scans(plan)) == 1, (name, plan)
+        assert not joins(plan), (name, plan)
+        assert "/docmeta" not in plan, (name, plan)
+
+
+def _docmeta_scans(plan):
+    return [
+        ln for ln in plan.splitlines()
+        if "FileScan parquet" in ln and "/docmeta" in ln
+    ]
+
+
+def test_exact_plans_join_docmeta_once_per_scan(spark, saved, parent_layout):
+    ix = load_index(spark, saved)
+    s = Searcher(ix, BM25F(quantized=False))
+    for name, q in _plan_queries(ix).items():
+        plan = _plan(s, q)
+        scans = postings_scans(plan)
+        assert len(scans) == 1, (name, plan)
+        assert len(joins(plan)) == len(_docmeta_scans(plan)) == 1, (name, plan)
+    # postings that still carry `length` read it in place
+    old = load_index(spark, parent_layout)
+    s = Searcher(old, BM25F(quantized=False))
+    for name, q in _plan_queries(old).items():
+        plan = _plan(s, q)
+        assert not joins(plan) and not _docmeta_scans(plan), (name, plan)
+
+
+def test_unsaved_exact_search_analyzes_once(spark):
+    ix = build_index(_docs(spark, 60, seed=3))
+    assert "length" in ix.postings.columns
+    s = Searcher(ix, BM25F(quantized=False))
+    top = ix.term_stats.orderBy(F.desc("df"), "term").first()["term"]
+    plan = _plan(s, Q.Term(top))
+    assert len([ln for ln in plan.splitlines() if "MapInArrow" in ln]) == 1, plan

@@ -6,9 +6,11 @@ codec/whoosh3.py:301-373) is re-expressed as ONE declarative Spark pipeline:
 
     corpus --assign docids--> analyze+invert per doc (ONE mapInArrow pass:
     tokenize, group, position-sort in Python — no engine-level groupBy
-    shuffle) --> flat posting rows --term-range shuffle--> written
-    postings; docmeta / term_stats / global stats derive from the WRITTEN
-    columnar postings (cheap re-reads).
+    shuffle) --> flat posting rows, persisted once --term-range shuffle-->
+    written postings; docmeta and the global stats derive from the
+    persisted rows, term_stats from the WRITTEN columnar postings (cheap
+    re-reads).  A doc's exact length is kept once, in docmeta; the
+    written postings do not repeat it.
 
 The single term-range shuffle replaces the reference's PostingPool external
 merge sort (externalsort.py:85-223); a Parquet/Iceberg snapshot commit
@@ -45,6 +47,7 @@ from typing import Dict, List, NamedTuple, Optional
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from whoosh_reloaded_spark.analysis import StandardAnalyzer
 
@@ -54,10 +57,16 @@ DEFAULT_FIELD = "text"
 @dataclass
 class InvertedIndex:
     """The four tables that make up an index (cf. the reference's segment
-    files .trm/.pst/.col, docs/source/tech/filedb.rst:8-28)."""
+    files .trm/.pst/.col, docs/source/tech/filedb.rst:8-28).
+
+    A doc's exact field length is a docmeta column: saved postings do not
+    carry it.  The postings of an unsaved :func:`build_index` result, and
+    of indexes saved before format version 2, still have a ``length``
+    column, which the planner then reads in place of a docmeta join."""
 
     docmeta: DataFrame      # docid, uid, length, len_byte [, stored cols]
-    postings: DataFrame     # field, term, docid, weight, tf, positions, len_byte
+    postings: DataFrame     # field, term, docid, weight, tf, positions,
+    #                         len_byte [, length: see above]
     term_stats: DataFrame   # field, term, df, total_weight, max_weight
     stats: Optional[Dict[str, float]]  # doc_count, field_length, avg_field_length
     uid_col: str = "url"
@@ -475,20 +484,25 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
                codec: str = None) -> int:
     """Write the index as term-sorted parquet (segment commit ≙ TOC write).
 
-    ONE heavy pipeline: the analyze+invert UDF pass streams straight into the
-    term-range-partitioned postings write (a single shuffle), as the
-    reference's PostingPool sort feeds its field writer in one pass
-    (writing.py:748-822).  Every other table — docmeta, term_stats, global
-    stats — derives from the WRITTEN columnar postings (cheap re-reads), so
-    tokenization runs exactly once per save.  Postings sorted by (term,
-    docid): parquet min/max stats give term-dictionary data skipping at
-    query time.
+    ONE heavy pipeline: the analyze+invert UDF pass is persisted
+    (spill-safe) as it streams into the term-range-partitioned postings
+    write (a single shuffle), as the reference's PostingPool sort feeds
+    its field writer in one pass (writing.py:748-822).  docmeta and the
+    global stats derive from the persisted rows, whose exact per-doc
+    ``length`` the written postings drop (docmeta keeps it once, as the
+    reference keeps one length per doc, codec/whoosh3.py:234-242);
+    term_stats derives from the WRITTEN columnar postings (a cheap
+    re-read).  Tokenization runs exactly once per save.  An index without
+    a raw doc frame (a merge) writes its docmeta as it is.  Postings
+    sorted by (term, docid): parquet min/max stats give term-dictionary
+    data skipping at query time.  stats.json records the three tables'
+    schemas, which :func:`load_index` passes to the reader.
 
     ``term_partitions`` (postings files) defaults to the partition count
     :func:`build_index` sized the index to, else the default parallelism.
     One file is written from one sorted partition that the analysis pass
-    streams into, in one task; more files go through a persisted,
-    range-partitioned write.
+    streams into, in one task; more files go through a range-partitioned
+    write of the persisted rows.
     Every frame the build persisted is released when the save ends, also
     when it fails.  Returns the number of postings rows written, observed
     on the write itself.
@@ -535,56 +549,63 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
             to_write = to_write.withColumn(
                 "positions", encode(F.col("positions"))
             )
+        # the analyze+invert UDF pass materializes ONCE into a spill-safe
+        # cache (guide §5 persist vs recompute): the postings write and
+        # the docmeta lengths both read it, and repartitionByRange would
+        # otherwise execute the whole UDF pipeline TWICE (range-boundary
+        # sampling + the real pass)
+        to_write = _persist(to_write, cached)
         if term_partitions == 1:
             # one sorted partition: nothing samples range boundaries, so
-            # the analyze+invert pass streams straight into the write
+            # the analysis pass streams into the cache and the write
             ranged = to_write.coalesce(1)
         else:
-            # two-step write: (1) the analyze+invert UDF pass materializes
-            # ONCE into a spill-safe cache — repartitionByRange would
-            # otherwise execute the whole UDF pipeline TWICE (range-boundary
-            # sampling + the real pass); at segment scale the cache spills
-            # to local disk (guide §5 persist vs recompute).  (2) the cheap
-            # cache re-read pays for the sampling, the term-range shuffle
-            # and the (term, docid) sort.
-            to_write = _persist(to_write, cached)
+            # the cheap cache re-read pays for the sampling, the
+            # term-range shuffle and the (term, docid) sort
             ranged = to_write.repartitionByRange(
                 term_partitions, "term", "docid"
             )
-        if _timing and _is_cached(to_write):
-            # timing-only split point: materialize the cache now so the
-            # UDF pass and the shuffle/write show as separate phases
-            to_write.count()
-            _mark("UDF pass (cache materialization)")
-        # term first: saved-index layouts keep the historical column order
-        out_cols = ["term"] + [c for c in to_write.columns if c != "term"]
+            if _timing:
+                # timing-only split point: materialize the cache now so
+                # the UDF pass and the shuffle/write show as separate
+                # phases
+                to_write.count()
+                _mark("UDF pass (cache materialization)")
+        # term first: saved-index layouts keep the historical column
+        # order.  A doc's exact `length` is not repeated in each of its
+        # postings: docmeta holds it once (the reference keeps one length
+        # per doc, codec/whoosh3.py:234-242)
+        out_cols = ["term"] + [
+            c for c in to_write.columns if c not in ("term", "length")
+        ]
         # observed above the range exchange, like the docmeta stats below,
         # so the boundary-sampling pass cannot count rows twice
         obs_postings = Observation("wrs_postings_rows")
+        out = ranged.sortWithinPartitions("term", "docid").select(*out_cols)
+        schemas = {"postings": _read_schema(out)}
         write_table(
-            ranged.sortWithinPartitions("term", "docid")
-            .select(*out_cols)
-            .observe(obs_postings, F.count(F.lit(1)).alias("rows")),
+            out.observe(obs_postings, F.count(F.lit(1)).alias("rows")),
             f"{path}/postings",
         )
         _mark("postings write (range sort)")
-        wp = spark.read.parquet(f"{path}/postings")
+        wp = _read_table(spark, f"{path}/postings", schemas["postings"])
 
         def _write_term_stats():
-            write_table(
+            ts = (
                 term_stats_of(wp).repartitionByRange(
                     max(1, term_partitions // 4), "term"
                 )
-                .sortWithinPartitions("term"),
-                f"{path}/term_stats",
+                .sortWithinPartitions("term")
             )
+            write_table(ts, f"{path}/term_stats")
+            return _read_schema(ts)
 
         def _write_docmeta():
             if ix.docs_raw is not None:
                 # docmeta without re-running the UDF: uid/stored from the
-                # raw doc frame, lengths from the written postings (0 for
-                # token-less docs)
-                doclen = wp.groupBy("docid").agg(
+                # raw doc frame, lengths from the cached analysis rows (0
+                # for token-less docs)
+                doclen = to_write.groupBy("docid").agg(
                     F.max("length").alias("length"),
                     F.max("len_byte").alias("len_byte"),
                 )
@@ -600,12 +621,11 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
             # pass (which executes only the exchange's child) cannot
             # double-count the rows.
             obs = Observation("wrs_docmeta_stats")
+            dm = docmeta.repartitionByRange(
+                max(1, term_partitions // 4), "docid"
+            ).sortWithinPartitions("docid")
             write_table(
-                docmeta.repartitionByRange(
-                    max(1, term_partitions // 4), "docid"
-                )
-                .sortWithinPartitions("docid")
-                .observe(
+                dm.observe(
                     obs,
                     F.count(F.lit(1)).alias("doc_count"),
                     F.coalesce(F.sum("length"), F.lit(0)).alias(
@@ -614,7 +634,7 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
                 ),
                 f"{path}/docmeta",
             )
-            return obs.get
+            return obs.get, _read_schema(dm)
 
         # the derived tables are independent jobs over the written
         # postings — run them from a 2-thread pool so the second job's
@@ -626,8 +646,8 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         with ThreadPoolExecutor(max_workers=2) as pool:
             fut_ts = pool.submit(inherit(_write_term_stats))
             fut_dm = pool.submit(inherit(_write_docmeta))
-            fut_ts.result()
-            obs_stats = fut_dm.result()
+            schemas["term_stats"] = fut_ts.result()
+            obs_stats, schemas["docmeta"] = fut_dm.result()
         _mark("derived writes (term_stats + docmeta, overlapped)")
     finally:
         release(cached)
@@ -646,14 +666,16 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         json.dump(
             {"stats": stats, "uid_col": ix.uid_col,
              "fieldname": ix.fieldname, "codec": codec,
-             "format_version": FORMAT_VERSION}, f
+             "format_version": FORMAT_VERSION, "schemas": schemas}, f
         )
     return int(obs_postings.get["rows"])
 
 
 #: on-disk layout version recorded in stats.json (index.version_in
-#: analogue; the reference tracks _CURRENT_TOC_VERSION in its TOC)
-FORMAT_VERSION = 1
+#: analogue; the reference tracks _CURRENT_TOC_VERSION in its TOC).
+#: 2: postings hold no per-posting ``length`` (docmeta keeps it) and
+#: stats.json records the tables' schemas.  Version 1 indexes still load.
+FORMAT_VERSION = 2
 
 
 def exists_in(path: str) -> bool:
@@ -705,19 +727,42 @@ def _parquet_dir_bytes(path: str) -> int:
     return total
 
 
-def _sized_read(spark: SparkSession, path: str) -> DataFrame:
+def _read_schema(df: DataFrame) -> str:
+    """The schema, as JSON, that the parquet reader infers for `df` once
+    written: every column nullable, as file sources read them."""
+    return df._jdf.schema().asNullable().json()
+
+
+def _read_table(spark: SparkSession, path: str,
+                schema: Optional[str] = None) -> DataFrame:
+    """Read a parquet table; a recorded `schema` (see :func:`_read_schema`)
+    skips inferring it from the file footers, about 80 ms a table in a
+    warm JVM."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema)))
+    return reader.parquet(path)
+
+
+def _sized_read(spark: SparkSession, path: str,
+                schema: Optional[str] = None) -> DataFrame:
     """Read a parquet table with size-appropriate scan granularity (see
     READ_PARTITION_BYTES).  coalesce() never increases the partition
     count, so large tables keep their natural splits."""
-    df = spark.read.parquet(path)
+    df = _read_table(spark, path, schema)
     want = max(1, -(-_parquet_dir_bytes(path) // READ_PARTITION_BYTES))
     return df.coalesce(want)
 
 
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:
+    """Open the index saved at `path`.  The tables' schemas come from
+    stats.json; an index saved without them has them inferred from its
+    parquet footers.  Postings saved before ``length`` moved to docmeta
+    keep the column, and the planner then reads it from them."""
     with open(os.path.join(path, "stats.json")) as f:
         meta = json.load(f)
-    postings = _sized_read(spark, f"{path}/postings")
+    schemas = meta.get("schemas", {})
+    postings = _sized_read(spark, f"{path}/postings", schemas.get("postings"))
     if "block_no" in postings.columns:
         # indexes saved with the retired block-max WAND layer carry a
         # per-posting block number (and a blocks/ table, never read)
@@ -740,9 +785,11 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
             "positions", decode(F.col("positions"))
         )
     return InvertedIndex(
-        docmeta=_sized_read(spark, f"{path}/docmeta"),
+        docmeta=_sized_read(spark, f"{path}/docmeta", schemas.get("docmeta")),
         postings=postings,
-        term_stats=_sized_read(spark, f"{path}/term_stats"),
+        term_stats=_sized_read(
+            spark, f"{path}/term_stats", schemas.get("term_stats")
+        ),
         stats=meta["stats"],
         uid_col=meta["uid_col"],
         fieldname=meta["fieldname"],

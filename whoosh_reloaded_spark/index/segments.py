@@ -69,6 +69,11 @@ def load_multi(spark: SparkSession, seg_paths: List[str],
                     "docid assignment); combining independently-built "
                     "indexes silently mixes documents"
                 )
+    # segments saved before `length` moved to docmeta keep it in their
+    # postings; beside a newer segment it goes, and docmeta supplies it
+    if len({"length" in p.postings.columns for p in parts}) > 1:
+        for p in parts:
+            p.postings = p.postings.drop("length")
     postings = parts[0].postings
     docmeta = parts[0].docmeta
     for p in parts[1:]:
@@ -108,20 +113,13 @@ def merge_segments(spark: SparkSession, seg_paths: List[str], out_path: str,
     """Compact segments into one (OPTIMIZE): union -> rewrite, with the
     postings re-sorted by (term, docid) over the merged doc order, in as
     many postings files as a build of the merged doc count
-    (:func:`partitions_for`)."""
+    (:func:`partitions_for`).  The merged docmeta, exact lengths
+    included, is written as it is; the merged postings hold no
+    ``length``, also when old-layout segments had one."""
     merged = load_multi(spark, seg_paths)
-    out = InvertedIndex(
-        docmeta=merged.docmeta,
-        postings=merged.postings,
-        term_stats=merged.term_stats,
-        stats=merged.stats,
-        uid_col=merged.uid_col,
-        fieldname=merged.fieldname,
-        docs_raw=merged.docmeta.drop("length", "len_byte"),
-    )
     if term_partitions <= 0:
         term_partitions = partitions_for(spark, merged.doc_count())
-    save_index(out, out_path, term_partitions)
+    save_index(merged, out_path, term_partitions)
     return load_index(spark, out_path)
 
 

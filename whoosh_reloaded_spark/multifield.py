@@ -127,6 +127,18 @@ class MultiFieldSearcher(Searcher):
         s = self._routed(q)
         return s._n_term_matchers(q) if s else super()._n_term_matchers(q)
 
+    def _weighted(self, weighting) -> Searcher:
+        """A WeightingQuery's sub-searcher: its field searchers carry the
+        model too, each sharing its own memos, so the subtree's fielded
+        leaves are routed and scored under the model."""
+        sub = super()._weighted(weighting)
+        if sub is not self:
+            sub.field_searchers = {
+                f: s._weighted(weighting)
+                for f, s in self.field_searchers.items()
+            }
+        return sub
+
     def _all_docs(self, score: float = 1.0) -> DataFrame:
         # Every()/Not() complement over the union of all fields' docmeta
         metas = [s.ix.docmeta.select("docid") for s in self.field_searchers.values()]

@@ -39,12 +39,16 @@ is exact for every kind (FuzzyTerm included: Spark's native thresholded
 total weight.  A searcher memoizes term -> (df, total weight) for every
 term it has looked up or expanded (the reference caches idf per searcher,
 searching.py:334-351), and idf/cf reach the plan as literals — no join
-against term_stats on the hot path.  Every expression runs in the JVM,
+against term_stats on the hot path.  The default model scores with the
+length byte each posting stores; a model that reads exact lengths joins
+each postings scan to docmeta(docid, length) once (_with_length), as
+saved postings do not repeat them.  Every expression runs in the JVM,
 most in whole-stage codegen; Python appears only in driver-side planning.
 """
 
 from __future__ import annotations
 
+import copy
 import operator
 import re
 from collections import OrderedDict
@@ -703,7 +707,7 @@ class Searcher:
 
     def score_context(
         self, terms: Sequence[str],
-        weight=None, len_byte=None, length=None, positions=None,
+        weight=None, len_byte=None, positions=None,
     ) -> ScoreContext:
         """Build a ScoreContext for `terms` with idf/cf literal maps.
         Single-term contexts embed plain literals (no per-row map lookup);
@@ -713,7 +717,6 @@ class Searcher:
         return ScoreContext(
             weight=weight if weight is not None else F.col("weight"),
             len_byte=len_byte if len_byte is not None else F.col("len_byte"),
-            length=length if length is not None else F.col("length"),
             idf=_per_term({t: idf_value(self.N, stats[t][0]) for t in uniq}),
             cf=_per_term({t: stats[t][1] for t in uniq}),
             N=self.N,
@@ -740,6 +743,17 @@ class Searcher:
             "docid", "tf", "weight", *cols
         )
 
+    def _with_length(self, rows: DataFrame, ctx: ScoreContext) -> DataFrame:
+        """Postings `rows` with the exact ``length`` column when a score
+        built from `ctx` reads it (ScoreContext.length): rows that carry
+        it already (an unsaved build, an index saved before docmeta alone
+        kept it) read it in place, others get it from one join on
+        docmeta(docid, length).  A score over the length byte, the
+        default model's, adds nothing to the plan."""
+        if not ctx.reads_length or "length" in rows.columns:
+            return rows
+        return rows.join(self.ix.docmeta.select("docid", "length"), "docid")
+
     # -- leaf evaluation -----------------------------------------------------
 
     def _scored_postings(
@@ -762,14 +776,13 @@ class Searcher:
             if getattr(self.weighting, "needs_positions", False)
             else None
         )
-        score = self.weighting.score_col(
-            self.score_context(terms, positions=pos_col)
-        )
+        ctx = self.score_context(terms, positions=pos_col)
+        score = self.weighting.score_col(ctx)
         cols = ["term", "docid", score.alias("score")]
         if with_positions:
             _require_positions(p)
             cols.append("positions")
-        return p.select(*cols)
+        return self._with_length(p, ctx).select(*cols)
 
     def _all_docs(self, score: float = 1.0) -> DataFrame:
         return self.ix.docmeta.select(
@@ -910,7 +923,6 @@ class Searcher:
         ctx = ScoreContext(
             weight=F.col("weight"),
             len_byte=F.col("len_byte"),
-            length=F.col("length"),
             idf=idf,
             cf=F.col("total_weight").cast("double"),
             N=self.N,
@@ -924,7 +936,7 @@ class Searcher:
         if with_positions:
             _require_positions(p)
             cols.append("positions")
-        return joined.select(*cols)
+        return self._with_length(joined, ctx).select(*cols)
 
     # -- coordination (SQR) counts -------------------------------------------
 
@@ -1071,15 +1083,14 @@ class Searcher:
     def _weighted(self, weighting: Optional[WeightingModel]) -> "Searcher":
         """The searcher that plans a WeightingQuery's subtree under its
         model (wrappers.py:193-199: context.set(weighting=...)): this one
-        when the model is None or its own, else a sub-searcher sharing ix
-        and this searcher's stats memo, expansion cache and overflow
-        counts, which do not depend on the weighting, so memoized terms
-        run no lookup job."""
+        when the model is None or its own, else a shallow copy with the
+        model, sharing ix and this searcher's stats memo, expansion cache
+        and overflow counts, which do not depend on the weighting, so
+        memoized terms run no lookup job."""
         if weighting is None or weighting is self.weighting:
             return self
-        sub = Searcher(self.ix, weighting)
-        sub._stats, sub._expand_cache = self._stats, self._expand_cache
-        sub._overflow_counts = self._overflow_counts
+        sub = copy.copy(self)
+        sub.weighting = weighting
         return sub
 
     def _leaf_frame(self, q: Q.Query) -> DataFrame:

@@ -46,7 +46,6 @@ class ScoreContext:
 
     weight: Column          # posting weight (tf * boosts)
     len_byte: Column        # quantized field length byte
-    length: Column          # exact field length
     idf: Column             # per-term idf literal map lookup
     cf: Optional[Column]    # per-term collection frequency (total weight)
     N: int                  # doc_count_all
@@ -55,6 +54,16 @@ class ScoreContext:
     fieldname: str = "text"
     positions: Optional[Column] = None  # per-posting position array (only
     # resolvable when the model sets needs_positions and the frame has it)
+    reads_length: bool = dc_field(default=False, init=False)
+
+    @property
+    def length(self) -> Column:
+        """The exact field length.  Saved postings do not store it (the
+        reference keeps only the length byte per doc); reading it sets
+        `reads_length`, and the planner then brings the column in, from
+        one join on docmeta where the postings lack it."""
+        self.reads_length = True
+        return F.col("length")
 
     def fl(self, quantized: bool) -> Column:
         """Effective per-doc length: byte-decoded in parity mode (the
@@ -85,7 +94,10 @@ class WeightingModel:
 class BM25F(WeightingModel):
     """Default weighting (ref scoring.py:274-329).  ``quantized=False``
     scores with exact lengths — used for SQL-oracle cross-checks, NOT for
-    whoosh-parity (which requires byte-decoded lengths)."""
+    whoosh-parity (which requires byte-decoded lengths); on a saved index
+    they come from docmeta, one join per postings scan (see
+    ScoreContext.length), while the default scores with the length byte
+    each posting stores."""
 
     B: float = 0.75
     K1: float = 1.2
