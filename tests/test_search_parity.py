@@ -27,6 +27,7 @@ from whoosh_reloaded_spark.query import (
     Searcher,
     Term,
     TermRange,
+    Variations,
     Wildcard,
 )
 
@@ -110,142 +111,119 @@ def _wt(text):
     return WTerm("text", text)
 
 
+#: name -> (our query, a factory of the reference's query).  Our side
+#: needs no reference import, so tests/test_search_parity_goldens.py
+#: pins its results too.
 CASES = {}
 
 
-def case(name):
+def case(name, ours):
     def reg(fn):
-        CASES[name] = fn
+        CASES[name] = (ours, fn)
         return fn
 
     return reg
 
 
-@case("q1_term")
+@case("q1_term", Term("render"))
 def _q1():
     from whoosh.query import Term as WT
 
-    return Term("render"), WT("text", "render")
+    return WT("text", "render")
 
 
-@case("q1b_term_freq")
+@case("q1b_term_freq", Term("alfa"))
 def _q1b():
     from whoosh.query import Term as WT
 
-    return Term("alfa"), WT("text", "alfa")
+    return WT("text", "alfa")
 
 
-@case("q2_and")
+@case("q2_and", And([Term("yellow"), Term("red")]))
 def _q2():
     from whoosh.query import And as WAnd
 
-    return (
-        And([Term("yellow"), Term("red")]),
-        WAnd([_wt("yellow"), _wt("red")]),
-    )
+    return WAnd([_wt("yellow"), _wt("red")])
 
 
-@case("q3_or")
+@case("q3_or", Or([Term("render"), Term("red"), Term("yellow")]))
 def _q3():
     from whoosh.query import Or as WOr
 
-    return (
-        Or([Term("render"), Term("red"), Term("yellow")]),
-        WOr([_wt("render"), _wt("red"), _wt("yellow")]),
-    )
+    return WOr([_wt("render"), _wt("red"), _wt("yellow")])
 
 
-@case("q4_and_not_inline")
+@case("q4_and_not_inline", And([Term("red"), Not(Term("yellow"))]))
 def _q4():
     from whoosh.query import And as WAnd
     from whoosh.query import Not as WNot
 
-    return (
-        And([Term("red"), Not(Term("yellow"))]),
-        WAnd([_wt("red"), WNot(_wt("yellow"))]),
-    )
+    return WAnd([_wt("red"), WNot(_wt("yellow"))])
 
 
-@case("q5_require")
+@case("q5_require", Require(Term("red"), Term("yellow")))
 def _q5():
     from whoosh.query import Require as WRequire
 
-    return (
-        Require(Term("red"), Term("yellow")),
-        WRequire(_wt("red"), _wt("yellow")),
-    )
+    return WRequire(_wt("red"), _wt("yellow"))
 
 
-@case("q6a_andmaybe")
+@case("q6a_andmaybe", AndMaybe(Term("red"), Term("yellow")))
 def _q6a():
     from whoosh.query import AndMaybe as WAndMaybe
 
-    return (
-        AndMaybe(Term("red"), Term("yellow")),
-        WAndMaybe(_wt("red"), _wt("yellow")),
-    )
+    return WAndMaybe(_wt("red"), _wt("yellow"))
 
 
-@case("q6b_andnot")
+@case("q6b_andnot", AndNot(Term("red"), Term("yellow")))
 def _q6b():
     from whoosh.query import AndNot as WAndNot
 
-    return (
-        AndNot(Term("red"), Term("yellow")),
-        WAndNot(_wt("red"), _wt("yellow")),
-    )
+    return WAndNot(_wt("red"), _wt("yellow"))
 
 
-@case("q7_phrase")
+@case("q7_phrase", Phrase(["quick", "went"]))
 def _q7():
     from whoosh.query import Phrase as WPhrase
 
-    return (
-        Phrase(["quick", "went"]),
-        WPhrase("text", ["quick", "went"]),
-    )
+    return WPhrase("text", ["quick", "went"])
 
 
-@case("q7b_phrase3")
+# 'a' is stopped; positions renumber
+@case("q7b_phrase3", Phrase(["mary", "had", "little"]))
 def _q7b():
     from whoosh.query import Phrase as WPhrase
 
-    return (
-        Phrase(["mary", "had", "little"]),  # 'a' is stopped; positions renumber
-        WPhrase("text", ["mary", "had", "little"]),
-    )
+    return WPhrase("text", ["mary", "had", "little"])
 
 
-@case("q8a_prefix")
+@case("q8a_prefix", Prefix("render"))
 def _q8a():
     from whoosh.query import Prefix as WPrefix
 
-    return Prefix("render"), WPrefix("text", "render")
+    return WPrefix("text", "render")
 
 
-@case("q8b_wildcard")
+@case("q8b_wildcard", Wildcard("re*er"))
 def _q8b():
     from whoosh.query import Wildcard as WWildcard
 
-    return Wildcard("re*er"), WWildcard("text", "re*er")
+    return WWildcard("text", "re*er")
 
 
-@case("q9_termrange")
+@case("q9_termrange", TermRange("re", "rf"))
 def _q9():
     from whoosh.query import TermRange as WTermRange
 
-    return (
-        TermRange("re", "rf"),
-        WTermRange("text", "re", "rf"),
-    )
+    return WTermRange("text", "re", "rf")
 
 
-@case("q10_head_term")
+# Zipf-head (non-stop) term: stresses skew path
+@case("q10_head_term", Term("alpha"))
 def _q10():
     from whoosh.query import Term as WT
 
-    # Zipf-head (non-stop) term: stresses skew path
-    return Term("alpha"), WT("text", "alpha")
+    return WT("text", "alpha")
 
 
 # q11 (DisjunctionMax) is NOT in CASES: the reference's
@@ -258,147 +236,129 @@ def _q10():
 # reference's own per-term scores in test_dismax_documented_semantics.
 
 
-@case("q12_boost")
+@case("q12_boost", Or([Term("render", boost=2.0), Term("yellow")]))
 def _q12():
     from whoosh.query import Or as WOr
     from whoosh.query import Term as WT
 
-    return (
-        Or([Term("render", boost=2.0), Term("yellow")]),
-        WOr([WT("text", "render", boost=2.0), _wt("yellow")]),
-    )
+    return WOr([WT("text", "render", boost=2.0), _wt("yellow")])
 
 
-@case("q13_fuzzy")
+@case("q13_fuzzy", FuzzyTerm("rendar"))
 def _q13():
     from whoosh.query import FuzzyTerm as WFuzzy
 
-    return FuzzyTerm("rendar"), WFuzzy("text", "rendar")
+    return WFuzzy("text", "rendar")
 
 
-@case("q13b_fuzzy_transposition")
+# "redner" is OSA/Damerau distance 1 but PLAIN Levenshtein distance 2
+# from "render": the reference's lev automaton has no transposition
+# edges, so maxdist=1 must NOT match render (round-4 metric fix; the
+# old OSA-based expansion wrongly matched here)
+@case("q13b_fuzzy_transposition", FuzzyTerm("redner", maxdist=1))
 def _q13b():
-    # "redner" is OSA/Damerau distance 1 but PLAIN Levenshtein distance 2
-    # from "render": the reference's lev automaton has no transposition
-    # edges, so maxdist=1 must NOT match render (round-4 metric fix; the
-    # old OSA-based expansion wrongly matched here)
     from whoosh.query import FuzzyTerm as WFuzzy
 
-    return (
-        FuzzyTerm("redner", maxdist=1),
-        WFuzzy("text", "redner", maxdist=1),
-    )
+    return WFuzzy("text", "redner", maxdist=1)
 
 
-@case("q13c_fuzzy_transposition_d2")
+# at maxdist=2 both metrics admit "render" — rank parity must hold
+@case("q13c_fuzzy_transposition_d2", FuzzyTerm("redner", maxdist=2))
 def _q13c():
-    # at maxdist=2 both metrics admit "render" — rank parity must hold
     from whoosh.query import FuzzyTerm as WFuzzy
 
-    return (
-        FuzzyTerm("redner", maxdist=2),
-        WFuzzy("text", "redner", maxdist=2),
-    )
+    return WFuzzy("text", "redner", maxdist=2)
 
 
-@case("q14_every")
+@case("q14_every", Every())
 def _q14():
     from whoosh.query import Every as WEvery
 
-    return Every(), WEvery()
+    return WEvery()
 
 
-@case("q15_nested_bool")
+@case("q15_nested_bool", And([Or([Term("yellow"), Term("alpha")]), Term("red")]))
 def _q15():
     from whoosh.query import And as WAnd
     from whoosh.query import Or as WOr
 
-    return (
-        And([Or([Term("yellow"), Term("alpha")]), Term("red")]),
-        WAnd([WOr([_wt("yellow"), _wt("alpha")]), _wt("red")]),
-    )
+    return WAnd([WOr([_wt("yellow"), _wt("alpha")]), _wt("red")])
 
 
-@case("q16_not_only_and")
+# "NOT yellow NOT red" — And whose children are ALL Nots; regression for
+# the empty-pos IndexError (ADVICE r1): must return the complement set
+@case("q16_not_only_and", And([Not(Term("yellow")), Not(Term("red"))]))
 def _q16():
-    # "NOT yellow NOT red" — And whose children are ALL Nots; regression for
-    # the empty-pos IndexError (ADVICE r1): must return the complement set
     from whoosh.query import And as WAnd
     from whoosh.query import Not as WNot
 
-    return (
-        And([Not(Term("yellow")), Not(Term("red"))]),
-        WAnd([WNot(_wt("yellow")), WNot(_wt("red"))]),
-    )
+    return WAnd([WNot(_wt("yellow")), WNot(_wt("red"))])
 
 
-@case("q18_variations_render")
+# test_searching.py:179-180 query shape; golden vs the real engine
+@case("q18_variations_render", Variations("render"))
 def _q18():
-    # test_searching.py:179-180 query shape; golden vs the real engine
     from whoosh.query import Variations as WVariations
 
-    from whoosh_reloaded_spark.query import Variations
-
-    return Variations("render"), WVariations("text", "render")
+    return WVariations("text", "render")
 
 
-@case("q18b_variations_pull")
+@case("q18b_variations_pull", Variations("data"))
 def _q18b():
     from whoosh.query import Variations as WVariations
 
-    from whoosh_reloaded_spark.query import Variations
-
-    return Variations("data"), WVariations("text", "data")
+    return WVariations("text", "data")
 
 
-@case("q19_termrange_excl")
+@case(
+    "q19_termrange_excl",
+    TermRange("re", "rf", startexcl=True, endexcl=True),
+)
 def _q19():
     from whoosh.query import TermRange as WTermRange
 
-    return (
-        TermRange("re", "rf", startexcl=True, endexcl=True),
-        WTermRange("text", "re", "rf", startexcl=True, endexcl=True),
-    )
+    return WTermRange("text", "re", "rf", startexcl=True, endexcl=True)
 
 
-@case("q20_phrase_slop2")
+@case("q20_phrase_slop2", Phrase(["mary", "little"], slop=2))
 def _q20():
     from whoosh.query import Phrase as WPhrase
 
-    return (
-        Phrase(["mary", "little"], slop=2),
-        WPhrase("text", ["mary", "little"], slop=2),
-    )
+    return WPhrase("text", ["mary", "little"], slop=2)
 
 
-@case("q21_or_with_not")
+@case("q21_or_with_not", Or([Term("render"), Not(Term("yellow"))]))
 def _q21():
     from whoosh.query import Not as WNot
     from whoosh.query import Or as WOr
 
-    return (
-        Or([Term("render"), Not(Term("yellow"))]),
-        WOr([_wt("render"), WNot(_wt("yellow"))]),
-    )
+    return WOr([_wt("render"), WNot(_wt("yellow"))])
 
 
-@case("q22_require_nested")
+@case(
+    "q22_require_nested",
+    Require(Or([Term("render"), Term("yellow")]), Term("red")),
+)
 def _q22():
     from whoosh.query import Or as WOr
     from whoosh.query import Require as WRequire
 
-    return (
-        Require(Or([Term("render"), Term("yellow")]), Term("red")),
-        WRequire(WOr([_wt("render"), _wt("yellow")]), _wt("red")),
-    )
+    return WRequire(WOr([_wt("render"), _wt("yellow")]), _wt("red"))
+
+
+# the queries of the two documented-semantics tests below
+DISMAX = DisjunctionMax([Term("render"), Term("yellow")])
+OR_SCALE = Or([Term("render"), Phrase(["quick", "went"])], scale=0.5)
+# the terms whose stats test_intermediate_stats_parity compares
+STATS_TERMS = ["render", "yellow", "red", "alpha", "alfa"]
 
 
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_rank_identical(name, whoosh_ix, our_searcher):
-    ours_q, whoosh_q = CASES[name]()
+    ours_q, whoosh_q = CASES[name]
     assert_parity(
         our_topk(our_searcher, ours_q),
-        whoosh_topk(whoosh_ix, whoosh_q),
+        whoosh_topk(whoosh_ix, whoosh_q()),
         name,
     )
 
@@ -416,7 +376,7 @@ def test_dismax_documented_semantics(whoosh_ix, our_searcher):
                 u = hit["url"]
                 per_doc[u] = max(per_doc.get(u, 0.0), hit.score)
     expected = sorted(per_doc.items(), key=lambda kv: (-kv[1], kv[0]))[:LIMIT]
-    ours = our_topk(our_searcher, DisjunctionMax([Term("render"), Term("yellow")]))
+    ours = our_topk(our_searcher, DISMAX)
     assert_parity(ours, expected, "q11_dismax_documented")
 
 
@@ -451,10 +411,8 @@ def test_or_scale_generic_documented_semantics(whoosh_ix, our_searcher):
         for u, sc in per_doc_score.items()
     }
     expected = sorted(golden.items(), key=lambda kv: (-kv[1], kv[0]))[:LIMIT]
-    ours = our_topk(
-        our_searcher,
-        Or([Term("render"), Phrase(["quick", "went"])], scale=scale),
-    )
+    assert OR_SCALE.scale == scale
+    ours = our_topk(our_searcher, OR_SCALE)
     assert_parity(ours, expected, "q17_or_scale_generic_documented")
 
 
@@ -471,7 +429,7 @@ def test_intermediate_stats_parity(whoosh_ix, our_searcher):
         assert s.avgfl == _pt.approx(
             r.field_length("text") / r.doc_count_all(), rel=1e-12
         )
-        for t in ["render", "yellow", "red", "alpha", "alfa"]:
+        for t in STATS_TERMS:
             ti = r.term_info("text", t.encode() if False else t)
             row = (
                 s.ix.term_stats.where(s.ix.term_stats.term == t)

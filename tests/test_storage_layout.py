@@ -19,7 +19,17 @@
   model joins docmeta once per postings scan of a saved index, and reads
   the column in place where the postings still carry it.
 * load_index reads the schemas recorded in stats.json, which equal the
-  ones inferred from the parquet footers.
+  ones inferred from the parquet footers, ``weight`` aside.
+* Saved postings store no column a reader can derive: a default build's
+  column chunks are exactly term, field, docid, tf, positions and
+  len_byte.  Its ``weight`` is its ``tf``, and readers derive it; a
+  position_boosts, ``boost_delim`` or ``field_boost`` build keeps it
+  stored.  A format version 2 index (stored ``weight``) loads and answers
+  identically, alone and beside a version 3 segment; merging the two
+  keeps ``weight``, and merging version 3 segments stores none.  A saved
+  and loaded index answers as the unsaved build does, score for score.
+* A table whose size is unknown (a ``file://`` URI) keeps its natural
+  read splits; a small local table is read as one partition.
 """
 
 import glob
@@ -29,16 +39,19 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from tests.conftest import column_bytes, final_plan, joins, postings_scans
+from whoosh_reloaded_spark.analysis import StandardAnalyzer
 from whoosh_reloaded_spark.corpus import PAGES_SCHEMA, generate_rows
 from whoosh_reloaded_spark.index import build_index, load_index, save_index
+from whoosh_reloaded_spark.index.build import _sized_read, write_table
 from whoosh_reloaded_spark.index.checkpoint import open_partitioned
 from whoosh_reloaded_spark.index.mutate import delete_by_term
 from whoosh_reloaded_spark.index.segments import merge_segments
 from whoosh_reloaded_spark.query import Searcher
 from whoosh_reloaded_spark.query import ast as Q
-from whoosh_reloaded_spark.scoring import BM25F, PL2
+from whoosh_reloaded_spark.scoring import BM25F, PL2, TF_IDF
 from whoosh_reloaded_spark.streaming.append import append_batch
 
 pq = pytest.importorskip("pyarrow.parquet")
@@ -180,11 +193,45 @@ MODELS = {
 }
 
 
+def _store_weight(spark, seg):
+    """Store each posting's ``weight`` (its tf as a double) in the
+    postings of the index at `seg`, before ``tf`` as the layouts before
+    format version 3 did, keeping the file split and row order."""
+    src = os.path.join(seg, "postings")
+    p = spark.read.parquet(src)
+    assert "weight" not in p.columns
+    cols = list(p.columns)
+    cols.insert(cols.index("tf"), "weight")
+    write_table(
+        p.withColumn("weight", F.col("tf").cast("double")).select(*cols),
+        src + "_weighted",
+    )
+    shutil.rmtree(src)
+    os.rename(src + "_weighted", src)
+    assert "weight" in column_bytes(src)
+
+
+def _to_v2_layout(spark, seg):
+    """Rewrite the index at `seg` in the layout of format version 2: its
+    postings store ``weight``, and stats.json records their schema."""
+    _store_weight(spark, seg)
+    stats_path = os.path.join(seg, "stats.json")
+    with open(stats_path) as f:
+        meta = json.load(f)
+    meta["format_version"] = 2
+    meta["schemas"]["postings"] = spark.read.parquet(
+        os.path.join(seg, "postings")
+    ).schema.json()
+    with open(stats_path, "w") as f:
+        json.dump(meta, f)
+
+
 def _to_parent_layout(spark, seg):
     """Rewrite the index at `seg` in the layout of format version 1: each
-    posting repeats its doc's exact ``length`` (from docmeta), every
-    table is written with Spark's default writer, and stats.json records
-    no schemas."""
+    posting stores its ``weight`` and repeats its doc's exact ``length``
+    (from docmeta), every table is written with Spark's default writer,
+    and stats.json records no schemas."""
+    _store_weight(spark, seg)
     src = os.path.join(seg, "postings")
     p = spark.read.parquet(src)
     lengths = spark.read.parquet(os.path.join(seg, "docmeta")).select(
@@ -228,12 +275,19 @@ def test_postings_store_no_length(spark, saved):
 def test_recorded_schemas_equal_inferred(spark, saved):
     with open(os.path.join(saved, "stats.json")) as f:
         meta = json.load(f)
-    assert meta["format_version"] == 2
+    assert meta["format_version"] == 3
     ix = load_index(spark, saved)
     for table, df in (("postings", ix.postings), ("docmeta", ix.docmeta),
                       ("term_stats", ix.term_stats)):
         inferred = spark.read.parquet(os.path.join(saved, table)).schema
         assert json.loads(meta["schemas"][table]) == inferred.jsonValue()
+        if table == "postings":
+            # the derived weight, before tf, as the stored one was
+            want = inferred.fields
+            at = inferred.fieldNames().index("tf")
+            inferred = StructType(
+                want[:at] + [StructField("weight", DoubleType())] + want[at:]
+            )
         assert df.schema == inferred, table
 
 
@@ -345,3 +399,172 @@ def test_unsaved_exact_search_analyzes_once(spark):
     top = ix.term_stats.orderBy(F.desc("df"), "term").first()["term"]
     plan = _plan(s, Q.Term(top))
     assert len([ln for ln in plan.splitlines() if "MapInArrow" in ln]) == 1, plan
+
+
+def test_postings_store_no_derivable_column(spark, saved):
+    """Footprint guard: a default build's saved postings hold these
+    column chunks and no other.  A derived column stored again (a
+    weight that is the tf, a doc's length) fails here."""
+    assert set(column_bytes(os.path.join(saved, "postings"))) == {
+        "term", "field", "docid", "tf", "positions.list.element", "len_byte",
+    }
+    ix = load_index(spark, saved)
+    assert ix._weight_is_tf
+    w = ix.postings.select("weight", "tf").collect()
+    assert w and all(r["weight"] == float(r["tf"]) for r in w)
+
+
+BOOSTED = {
+    "position_boosts": {"format": "position_boosts"},
+    "boost_delim": {"analyzer": StandardAnalyzer(r"[^ \t\r\n]+"),
+                    "boost_delim": "^"},
+    "field_boost": {"field_boost": 2.0},
+}
+
+
+@pytest.mark.parametrize("kind", list(BOOSTED))
+def test_boosted_builds_store_weight(spark, tmp_path, kind):
+    docs = spark.createDataFrame(
+        [("d0", "render^2 render file"), ("d1", "plain render^0.5 file")],
+        "url string, text string",
+    )
+    ix = build_index(docs, **BOOSTED[kind])
+    assert not ix._weight_is_tf
+    cols = ("term", "docid", "tf", "weight")
+    want = sorted(ix.postings.select(*cols).collect())
+    path = str(tmp_path / "ix")
+    save_index(ix, path)
+    assert "weight" in column_bytes(os.path.join(path, "postings"))
+    loaded = load_index(spark, path)
+    assert not loaded._weight_is_tf
+    assert sorted(loaded.postings.select(*cols).collect()) == want
+    # the StandardAnalyzer's token boosts are 1.0, so position_boosts
+    # weights equal their tfs; the format stores them all the same
+    assert any(r["weight"] != r["tf"] for r in want) == (
+        kind != "position_boosts"
+    )
+
+
+#: models that read ``weight``: the default, exact-length BM25F and TF_IDF
+WEIGHT_MODELS = {
+    "default": BM25F(),
+    "exact": BM25F(quantized=False),
+    "tf_idf": TF_IDF(),
+}
+
+
+@pytest.fixture(scope="module")
+def unsaved(spark):
+    """The saved fixture's build, unsaved, its postings in the saved row
+    order (one partition sorted by term and docid): a doc's score sums
+    its terms' scores in row order, and the last bit of a sum depends on
+    its order."""
+    ix = build_index(_docs(spark, 150, seed=7))
+    ix.postings = ix.postings.coalesce(1).sortWithinPartitions("term", "docid")
+    return ix.persist()
+
+
+@pytest.mark.parametrize("model", list(WEIGHT_MODELS))
+def test_saved_answers_equal_unsaved(spark, saved, unsaved, model):
+    new = load_index(spark, saved)
+    queries = _queries(new)
+    want = _answers(unsaved, queries, WEIGHT_MODELS[model])
+    assert all(want), queries
+    assert _answers(new, queries, WEIGHT_MODELS[model]) == want
+
+
+@pytest.fixture(scope="module")
+def v2_layout(spark, saved, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("v2") / "ix")
+    shutil.copytree(saved, path)
+    _to_v2_layout(spark, path)
+    return path
+
+
+@pytest.mark.parametrize("model", list(WEIGHT_MODELS))
+def test_v2_index_answers_identically(spark, saved, v2_layout, model):
+    new = load_index(spark, saved)
+    queries = _queries(new)
+    want = _answers(new, queries, WEIGHT_MODELS[model])
+    assert all(want), queries
+    old = load_index(spark, v2_layout)
+    assert not old._weight_is_tf
+    assert old.postings.columns == new.postings.columns
+    assert _answers(old, queries, WEIGHT_MODELS[model]) == want
+
+
+@pytest.fixture(scope="module")
+def two_segments(spark, tmp_path_factory):
+    """A root of two append_batch segments (format version 3)."""
+    root = str(tmp_path_factory.mktemp("segments") / "root")
+    append_batch(_docs(spark, 120, seed=1), root)
+    append_batch(_docs(spark, 80, seed=2), root)
+    return root
+
+
+def _copy_root(src, tmp_path):
+    """A copy of a segments root whose manifest names the copied
+    segments."""
+    root = str(tmp_path / "root")
+    shutil.copytree(src, root)
+    manifest = os.path.join(root, "build_manifest.jsonl")
+    with open(manifest) as f:
+        text = f.read()
+    with open(manifest, "w") as f:
+        f.write(text.replace(src, root))
+    return root
+
+
+@pytest.mark.parametrize("model", list(WEIGHT_MODELS))
+def test_v2_segment_beside_v3_one(spark, two_segments, tmp_path, model):
+    root = _copy_root(two_segments, tmp_path)
+    ix = open_partitioned(spark, root)
+    assert ix._weight_is_tf
+    queries = _queries(ix)
+    want = _answers(ix, queries, WEIGHT_MODELS[model])
+    assert all(want), queries
+
+    _to_v2_layout(spark, os.path.join(root, "segment_00000"))
+    mixed = open_partitioned(spark, root)
+    assert not mixed._weight_is_tf
+    assert _answers(mixed, queries, WEIGHT_MODELS[model]) == want
+
+
+def test_merge_with_v2_segment_keeps_weight(spark, two_segments, tmp_path):
+    root = _copy_root(two_segments, tmp_path)
+    segs = [os.path.join(root, f"segment_0000{i}") for i in range(2)]
+    ix = open_partitioned(spark, root)
+    queries = _queries(ix)
+    want = {m: _answers(ix, queries, w) for m, w in WEIGHT_MODELS.items()}
+
+    _to_v2_layout(spark, segs[0])
+    out = str(tmp_path / "merged")
+    merged = merge_segments(spark, segs, out)
+    assert "weight" in column_bytes(os.path.join(out, "postings"))
+    assert not merged._weight_is_tf
+    for m, w in WEIGHT_MODELS.items():
+        assert _answers(merged, queries, w) == want[m], m
+
+
+def test_merge_of_v3_segments_stores_no_weight(spark, two_segments, tmp_path):
+    root = _copy_root(two_segments, tmp_path)
+    segs = [os.path.join(root, f"segment_0000{i}") for i in range(2)]
+    ix = open_partitioned(spark, root)
+    queries = _queries(ix)
+    want = {m: _answers(ix, queries, w) for m, w in WEIGHT_MODELS.items()}
+
+    out = str(tmp_path / "merged")
+    merged = merge_segments(spark, segs, out)
+    assert "weight" not in column_bytes(os.path.join(out, "postings"))
+    assert merged._weight_is_tf
+    for m, w in WEIGHT_MODELS.items():
+        assert _answers(merged, queries, w) == want[m], m
+
+
+def test_unknown_size_keeps_natural_splits(spark, saved):
+    path = os.path.join(saved, "postings")
+    local = _sized_read(spark, path)
+    assert "Coalesce 1" in local._jdf.queryExecution().executedPlan().toString()
+    uri = _sized_read(spark, "file://" + path)
+    assert "Coalesce" not in uri._jdf.queryExecution().executedPlan().toString()
+    assert sorted(uri.collect()) == sorted(local.collect())

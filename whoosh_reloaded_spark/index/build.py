@@ -62,7 +62,12 @@ class InvertedIndex:
     A doc's exact field length is a docmeta column: saved postings do not
     carry it.  The postings of an unsaved :func:`build_index` result, and
     of indexes saved before format version 2, still have a ``length``
-    column, which the planner then reads in place of a docmeta join."""
+    column, which the planner then reads in place of a docmeta join.
+
+    ``weight`` is always a postings column, but from format version 3 it
+    is stored only where it is not ``tf``: a postings table saved without
+    ``weight`` has ``weight = CAST(tf AS DOUBLE)`` (see
+    :func:`weight_from_tf`)."""
 
     docmeta: DataFrame      # docid, uid, length, len_byte [, stored cols]
     postings: DataFrame     # field, term, docid, weight, tf, positions,
@@ -78,6 +83,10 @@ class InvertedIndex:
     _partitions: int = field(default=0, repr=False, compare=False)
     _cached: List[DataFrame] = field(default_factory=list, repr=False,
                                      compare=False)
+    # every posting's weight is its tf, so save_index stores no `weight`:
+    # set by build_index for a boost-less build, by load_index for postings
+    # saved without `weight`, and by load_multi when all its segments are
+    _weight_is_tf: bool = field(default=False, repr=False, compare=False)
 
     # -- Index-object convenience surface (reference index.py Index class)
 
@@ -292,6 +301,18 @@ def assign_docids(df: DataFrame, uid_col: str, num_partitions: int = 0) -> DataF
     return rank_docids(df, uid_col, num_partitions).docs
 
 
+def weight_from_tf(postings: DataFrame) -> DataFrame:
+    """Postings saved without ``weight`` (every weight was its tf) with
+    ``weight = CAST(tf AS DOUBLE)`` back in its place before ``tf``: the
+    value a boost-less build computes, bit for bit.  A scan that reads
+    ``weight`` reads ``tf``."""
+    cols = postings.columns
+    at = cols.index("tf")
+    return postings.select(
+        *cols[:at], F.col("tf").cast("double").alias("weight"), *cols[at:]
+    )
+
+
 def term_stats_of(postings: DataFrame) -> DataFrame:
     """The term_stats table of a postings frame: per (field, term) the df,
     the total and max weight and the shortest doc's length byte — the
@@ -323,6 +344,10 @@ def build_index(
     Posting weight = sum(token boosts) * field_boost (the reference's
     Frequency/Positions formats sum per-token boosts, formats.py:190-236;
     boost-emitting analyzers like DelimitedBoostAnalyzer feed the sum).
+    Without boosts — the StandardAnalyzer, no ``boost_delim``,
+    ``field_boost`` 1.0 and a format other than position_boosts and
+    character_boosts; or the existence format at ``field_boost`` 1.0 —
+    every weight is its tf, and :func:`save_index` does not store it.
 
     ``format`` mirrors the reference's posting formats (formats.py:109-330):
     - "positions" (default, TEXT fields): per-occurrence position arrays —
@@ -362,6 +387,15 @@ def build_index(
         raise ValueError(f"unknown posting format: {format!r}")
     with_boosts = format in ("position_boosts", "character_boosts")
     with_chars = format in ("characters", "character_boosts")
+    # the StandardAnalyzer emits no token boosts (wsum == tf, see
+    # make_invert_rows); an existence posting has tf 1 and weight boost
+    weight_is_tf = field_boost == 1.0 and (
+        format == "existence"
+        or (
+            not with_boosts and boost_delim is None
+            and (analyzer is None or isinstance(analyzer, StandardAnalyzer))
+        )
+    )
     run = make_invert_rows(analyzer, with_boosts, with_chars, boost_delim)
     extra_cols = ["pos_boosts"] if with_boosts else []
     if with_chars:
@@ -454,6 +488,7 @@ def build_index(
         docs_raw=docs_raw,
         _partitions=k,
         _cached=cached,
+        _weight_is_tf=weight_is_tf,
     )
 
 
@@ -496,7 +531,10 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
     a raw doc frame (a merge) writes its docmeta as it is.  Postings
     sorted by (term, docid): parquet min/max stats give term-dictionary
     data skipping at query time.  stats.json records the three tables'
-    schemas, which :func:`load_index` passes to the reader.
+    schemas, which :func:`load_index` passes to the reader.  When every
+    posting's weight is its tf (``ix._weight_is_tf``: a boost-less build,
+    or a load or merge of postings stored that way) the postings store no
+    ``weight`` column, and readers derive it (:func:`weight_from_tf`).
 
     ``term_partitions`` (postings files) defaults to the partition count
     :func:`build_index` sized the index to, else the default parallelism.
@@ -574,9 +612,14 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         # term first: saved-index layouts keep the historical column
         # order.  A doc's exact `length` is not repeated in each of its
         # postings: docmeta holds it once (the reference keeps one length
-        # per doc, codec/whoosh3.py:234-242)
+        # per doc, codec/whoosh3.py:234-242).  Nor is a weight that is its
+        # tf (the reference stores no weight a posting's frequency gives,
+        # formats.py:190-236)
+        derived = ("term", "length") + (
+            ("weight",) if ix._weight_is_tf else ()
+        )
         out_cols = ["term"] + [
-            c for c in to_write.columns if c not in ("term", "length")
+            c for c in to_write.columns if c not in derived
         ]
         # observed above the range exchange, like the docmeta stats below,
         # so the boundary-sampling pass cannot count rows twice
@@ -589,6 +632,8 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
         )
         _mark("postings write (range sort)")
         wp = _read_table(spark, f"{path}/postings", schemas["postings"])
+        if ix._weight_is_tf:
+            wp = weight_from_tf(wp)
 
         def _write_term_stats():
             ts = (
@@ -674,8 +719,10 @@ def save_index(ix: InvertedIndex, path: str, term_partitions: int = 0,
 #: on-disk layout version recorded in stats.json (index.version_in
 #: analogue; the reference tracks _CURRENT_TOC_VERSION in its TOC).
 #: 2: postings hold no per-posting ``length`` (docmeta keeps it) and
-#: stats.json records the tables' schemas.  Version 1 indexes still load.
-FORMAT_VERSION = 2
+#: stats.json records the tables' schemas.  3: postings whose every
+#: weight is its tf store no ``weight`` (see :func:`weight_from_tf`).
+#: Version 1 and 2 indexes still load.
+FORMAT_VERSION = 3
 
 
 def exists_in(path: str) -> bool:
@@ -748,17 +795,24 @@ def _sized_read(spark: SparkSession, path: str,
                 schema: Optional[str] = None) -> DataFrame:
     """Read a parquet table with size-appropriate scan granularity (see
     READ_PARTITION_BYTES).  coalesce() never increases the partition
-    count, so large tables keep their natural splits."""
+    count, so large tables keep their natural splits.  A table whose
+    size is unknown (no parquet bytes found: a path that is not a local
+    directory, such as a ``file://`` URI) keeps its natural splits too."""
     df = _read_table(spark, path, schema)
-    want = max(1, -(-_parquet_dir_bytes(path) // READ_PARTITION_BYTES))
-    return df.coalesce(want)
+    size = _parquet_dir_bytes(path)
+    if size == 0:
+        return df
+    return df.coalesce(-(-size // READ_PARTITION_BYTES))
 
 
 def load_index(spark: SparkSession, path: str) -> InvertedIndex:
     """Open the index saved at `path`.  The tables' schemas come from
     stats.json; an index saved without them has them inferred from its
     parquet footers.  Postings saved before ``length`` moved to docmeta
-    keep the column, and the planner then reads it from them."""
+    keep the column, and the planner then reads it from them.  Postings
+    saved without ``weight`` get ``weight = CAST(tf AS DOUBLE)``
+    (:func:`weight_from_tf`), and the index is marked so that saving it
+    again (a merge) stores none either."""
     with open(os.path.join(path, "stats.json")) as f:
         meta = json.load(f)
     schemas = meta.get("schemas", {})
@@ -767,6 +821,9 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
         # indexes saved with the retired block-max WAND layer carry a
         # per-posting block number (and a blocks/ table, never read)
         postings = postings.drop("block_no")
+    weight_is_tf = "weight" not in postings.columns
+    if weight_is_tf:
+        postings = weight_from_tf(postings)
     # decode stored positions lazily via the recorded codec — column
     # pruning means non-positional queries never pay for this.  Pre-codec
     # indexes: infer 'varint' from a binary column, else 'raw'.
@@ -793,4 +850,5 @@ def load_index(spark: SparkSession, path: str) -> InvertedIndex:
         stats=meta["stats"],
         uid_col=meta["uid_col"],
         fieldname=meta["fieldname"],
+        _weight_is_tf=weight_is_tf,
     )

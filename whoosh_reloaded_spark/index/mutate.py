@@ -5,11 +5,15 @@ time (writing.py:309-344, codec/whoosh3.py:402-411) and implements
 update_document as delete-by-unique-field + re-add (writing.py:439-503).
 
 Here deletions are a tombstone docid table stored next to the index
-(`deleted/` parquet); Searcher anti-joins it at the end of every plan —
-the DataFrame analogue of the deletion bitset.  Production note: on
-Iceberg this is MERGE INTO / positional deletes; compaction (merge_segments
-with the tombstones applied) physically drops the rows, like the
-reference's segment-merge skipping deleted docs (writing.py:730-746).
+(`deleted/` parquet).  :func:`with_deleted` gives the live view: it
+anti-joins the tombstones with postings and docmeta, re-aggregates
+term_stats over the live postings, and recounts the global stats.
+Compaction does not drop deleted docs yet: ``segments.merge_segments``
+takes no tombstones, so the merged segment keeps every deleted doc's
+rows and the tombstones must still be applied to it.  The reference's
+segment merge skips deleted docs (writing.py:730-746); ROADMAP D10 plans
+that, with stored stats kept until the merge.  Production note: on
+Iceberg this is MERGE INTO / positional deletes.
 
 Scale note: every delete path writes the tombstone parquet DIRECTLY from a
 DataFrame — matching docids are never collected to the driver, so a

@@ -105,6 +105,9 @@ def load_multi(spark: SparkSession, seg_paths: List[str],
         stats=stats,
         uid_col=parts[0].uid_col,
         fieldname=parts[0].fieldname,
+        # a segment with stored weights (saved before format version 3, or
+        # boosted) keeps them stored in a merge
+        _weight_is_tf=all(p._weight_is_tf for p in parts),
     )
 
 
@@ -115,7 +118,8 @@ def merge_segments(spark: SparkSession, seg_paths: List[str], out_path: str,
     many postings files as a build of the merged doc count
     (:func:`partitions_for`).  The merged docmeta, exact lengths
     included, is written as it is; the merged postings hold no
-    ``length``, also when old-layout segments had one."""
+    ``length``, also when old-layout segments had one.  They store no
+    ``weight`` when no segment stores one (see :func:`load_multi`)."""
     merged = load_multi(spark, seg_paths)
     if term_partitions <= 0:
         term_partitions = partitions_for(spark, merged.doc_count())

@@ -183,15 +183,14 @@ def glob_literal_prefix(pat: str) -> str:
 
 
 def _per_term(values: Dict[str, float]) -> "F.Column":
-    """A per-row value keyed by the row's term: one literal when every
-    term shares it, else a literal term -> value map lookup.  The map is
-    one parsed SQL expression: for 790 terms, two F.lit py4j calls per
-    term took 0.7-1.05 s (4 cores), the SQL text 3-4 ms plus about
-    100-200 ms more analysis.  A float is written as its shortest
-    round-trip repr with the D suffix, so the double is exact."""
-    vals = set(values.values())
-    if len(vals) == 1:
-        return F.lit(next(iter(vals)))
+    """A per-row value keyed by the row's term: a literal term -> value
+    map lookup, also for one term.  Generated code takes a map literal by
+    reference, where it inlines a double literal, so a fresh term's plan
+    reuses the compiled code of the last one.  The map is one parsed SQL
+    expression: for 790 terms, two F.lit py4j calls per term took
+    0.7-1.05 s (4 cores), the SQL text 3-4 ms plus about 100-200 ms more
+    analysis.  A float is written as its shortest round-trip repr with
+    the D suffix, so the double is exact."""
     pairs = ", ".join(
         f"{_sql_str(t)}, {v if isinstance(v, int) else repr(float(v)) + 'D'}"
         for t, v in values.items()
@@ -709,9 +708,8 @@ class Searcher:
         self, terms: Sequence[str],
         weight=None, len_byte=None, positions=None,
     ) -> ScoreContext:
-        """Build a ScoreContext for `terms` with idf/cf literal maps.
-        Single-term contexts embed plain literals (no per-row map lookup);
-        distinct-valued stats collapse the same way."""
+        """Build a ScoreContext for `terms` with idf/cf literal maps
+        (see _per_term)."""
         stats = self._lookup_stats(terms)
         uniq = list(dict.fromkeys(terms))
         return ScoreContext(
